@@ -138,25 +138,12 @@ object ScaleProbe {
     out
   }
 
-  def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val perturb = sys.env.get("SPARK_GRAFT_PERTURB").map(_.toInt)
-    val spark = session(cpus)
+    val spark = SparkEntry.session(cpus)
     val out = ensureReplica(spark, src, factor, perturb, cpus.toInt)
 
     // the families whose 100 TB design claims this probe tests; q34 is

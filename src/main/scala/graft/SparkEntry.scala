@@ -28,4 +28,24 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     Relational.oracles ++ Dedup.oracles ++ Similarity.oracles ++
       Text.oracles ++ Multimodal.oracles ++ GenomicsCatalog.oracles
+
+  /** The one session every catalog main (Bench, Verify, Explain,
+    * ScaleProbe) runs on: `local[cpus]` with as many shuffle partitions,
+    * UTC, and the graft SQL extensions.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.ts is parquet TIMESTAMP(NANOS), which Spark's reader
+      // rejects; read it as a BIGINT of epoch-nanos instead (cheaper at
+      // scale too — pure integer comparisons).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

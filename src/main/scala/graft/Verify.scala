@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,11 @@ object Verify {
     // optional dev filter (comma-separated query names); driver passes 2 args
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS), which Spark's reader
-      // rejects; read it as a BIGINT of epoch-nanos instead (cheaper at
-      // scale too — pure integer comparisons).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    def selected(name: String): Boolean = only.isEmpty || only(name)
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       // (no clearCache here: cross-query cache reuse is harmless for a
       // correctness pass and keeps the driver's gate fast; Bench clears
@@ -48,9 +36,12 @@ object Verify {
       case c => c.toString
     } + "\""
     // staged-table oracles (q78) reference the engine-written parquet;
-    // the staging root is sf-dir-keyed, so substitute it at dump time
+    // the staging root is sf-dir-keyed, so substitute it at dump time.
+    // A filtered run writes only the oracles of the entries it ran, so
+    // the compare does not report the rest as missing output.
     val staged = graft.ops.Dedup.stageRoot(sfDir)
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace("__GRAFT_STAGED__", staged))}" }
       .mkString("{", ",", "}")

@@ -2,6 +2,7 @@ package graft.genomics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Eager
 
 /** Greedy path-based genome assembly, rebuilt Spark-first.
   *
@@ -202,27 +203,21 @@ object Assembly {
     * sentinel `next_id = -1`).
     */
   def stitchIterative(vertices: DataFrame, maxIters: Int = 64): DataFrame = {
-    val sc = vertices.sparkSession.sparkContext
     var state = vertices
       .select(col("id"), col("next_id"), col("offset"), col("length"), col("content"))
       .localCheckpoint()
     var it = 0
     // empty-input guard (q196's lesson): a zero-vertex input would
     // still pay one eagerly-checkpointed join round before the
-    // accumulator reads 0 — the isEmpty probe on the checkpointed
+    // moved count reads 0 — the isEmpty probe on the checkpointed
     // frame is one limit-1 job (the frontier variant needs no guard:
-    // its round-0 frontier accumulator already reads 0 and the loop
-    // never enters)
+    // its round-0 frontier count already reads 0 and the loop never
+    // enters)
     var moved = !state.isEmpty
     while (moved && it < maxIters) {
-      // convergence detection rides the checkpoint: a one-boolean kernel
-      // bumps a fresh accumulator while the eager localCheckpoint
-      // materializes the superstep, so the movement check costs zero
-      // extra jobs (previously a filter+limit count job per superstep).
-      // A merge that changes content always moves (offset, length):
-      // cases A1/A2/A3/B/C/D all grow or shift.
-      val movedAcc = sc.longAccumulator(s"stitch_moved_round_$it")
-      val bump = udf { m: Boolean => if (m) movedAcc.add(1L); m }
+      // convergence detection rides the superstep's own checkpoint job
+      // (Eager.checkpointCounting). A merge that changes content always
+      // moves (offset, length): cases A1/A2/A3/B/C/D all grow or shift.
       val child = state.select(
         col("id").as("c_id"), col("offset").as("c_offset"),
         col("length").as("c_length"), col("content").as("c_content"))
@@ -232,17 +227,17 @@ object Assembly {
       val n = struct(col("c_offset").as("offset"), col("c_length").as("length"),
         col("c_content").as("content"))
       val merged = when(col("c_id").isNull, acc).otherwise(stitchStep(acc, n))
-      val next = joined
+      val (next, movedRows) = Eager.checkpointCounting(joined
         .select(col("id"), col("next_id"), merged.as("m"),
           col("offset").as("p_offset"), col("length").as("p_length"))
         .select(col("id"), col("next_id"),
           col("m.offset").as("offset"),
           col("m.length").as("length"),
           col("m.content").as("content"),
-          bump(col("m.offset") =!= col("p_offset") ||
-               col("m.length") =!= col("p_length")).as("_moved"))
-        .localCheckpoint()
-      moved = movedAcc.value > 0
+          (col("m.offset") =!= col("p_offset") ||
+            col("m.length") =!= col("p_length")).as("_moved")),
+        col("_moved"))
+      moved = movedRows > 0
       state = next.drop("_moved")
       it += 1
     }
@@ -260,25 +255,16 @@ object Assembly {
     * while this touches the shrinking active set.
     */
   def stitchIterativeFrontier(vertices: DataFrame, maxIters: Int = 64): DataFrame = {
-    val sc = vertices.sparkSession.sparkContext
     // frontier size detection rides each checkpoint's materialization
-    // via an accumulator-bumping kernel — no per-round count job
-    def checkpointCounting(df: DataFrame, accName: String): (DataFrame, Long) = {
-      val acc = sc.longAccumulator(accName)
-      val bump = udf { _: Boolean => acc.add(1L); true }
-      val cp = df.withColumn("_c", bump(lit(true))).localCheckpoint()
-      (cp.drop("_c"), acc.value)
-    }
+    // (Eager.checkpointCounting) — no per-round count job
     var state = vertices
       .select(col("id"), col("next_id"), col("offset"), col("length"), col("content"))
       .localCheckpoint()
     // round 0: every vertex is "changed" (signal_all, assembly_final.cpp:732)
     var (changed, frontierSize) =
-      checkpointCounting(state.select(col("id")), "frontier_round_0")
+      Eager.checkpointCounting(state.select(col("id")), lit(true))
     var it = 0
     while (frontierSize > 0 && it < maxIters) {
-      val movedAcc = sc.longAccumulator(s"frontier_moved_round_${it + 1}")
-      val bump = udf { m: Boolean => if (m) movedAcc.add(1L); m }
       val active = state
         .join(changed.select(col("id").as("cid")), col("next_id") === col("cid"), "left_semi")
       val child = state.select(
@@ -289,28 +275,29 @@ object Assembly {
       val n = struct(col("c_offset").as("offset"), col("c_length").as("length"),
         col("c_content").as("content"))
       // bind the merged struct ONCE, then project its fields (the dense
-      // form's safe spelling, Assembly.scala:219); the pre-merge span
-      // rides the same projection so the change flag — which is both
-      // next round's frontier membership AND (via the accumulator) the
-      // loop condition — costs no join and no extra job: one
-      // checkpointed frame per round feeds state update and frontier
-      val merged = active.join(child, col("next_id") === col("c_id"))
-        .select(col("id"), col("next_id"), stitchStep(acc, n).as("m"),
-          col("offset").as("p_offset"), col("length").as("p_length"))
-        .select(col("id"), col("next_id"),
-          col("m.offset").as("offset"),
-          col("m.length").as("length"),
-          col("m.content").as("content"),
-          bump(col("m.offset") =!= col("p_offset") ||
-               col("m.length") =!= col("p_length")).as("_ch"))
-        .localCheckpoint()
+      // form's safe spelling); the pre-merge span rides the same
+      // projection so the change flag — which is both next round's
+      // frontier membership AND (counted by the checkpoint) the loop
+      // condition — costs no join and no extra job: one checkpointed
+      // frame per round feeds state update and frontier
+      val (merged, movedRows) = Eager.checkpointCounting(
+        active.join(child, col("next_id") === col("c_id"))
+          .select(col("id"), col("next_id"), stitchStep(acc, n).as("m"),
+            col("offset").as("p_offset"), col("length").as("p_length"))
+          .select(col("id"), col("next_id"),
+            col("m.offset").as("offset"),
+            col("m.length").as("length"),
+            col("m.content").as("content"),
+            (col("m.offset") =!= col("p_offset") ||
+              col("m.length") =!= col("p_length")).as("_ch")),
+        col("_ch"))
       // next state: merged rows replace their old versions
       val untouched = state.join(merged.select(col("id").as("mid")),
         col("id") === col("mid"), "left_anti")
       state = untouched.unionByName(merged.drop("_ch")).localCheckpoint()
       // next frontier: lazy filter over the already-materialized merge
       changed = merged.where(col("_ch")).select(col("id"))
-      frontierSize = movedAcc.value
+      frontierSize = movedRows
       it += 1
     }
     state

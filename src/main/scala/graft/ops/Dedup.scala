@@ -719,28 +719,21 @@ object Dedup {
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint()
-    val sc = pairs.sparkSession.sparkContext
     var moved = true
     var it = 0
     while (moved && it < maxIters) {
-      // movement detection rides the checkpoint itself: a one-boolean
-      // kernel bumps a fresh accumulator while the eager localCheckpoint
-      // materializes the round's labels, so convergence costs ZERO extra
-      // jobs (the previous spelling ran a filter+limit count job per
-      // round over the checkpointed blocks). Task retries can only
-      // over-count, and the value is used strictly as "> 0".
-      val movedAcc = sc.longAccumulator(s"cc_moved_round_$it")
-      val bump = udf { m: Boolean => if (m) movedAcc.add(1L); m }
+      // movement detection rides the round's own checkpoint job
+      // (Eager.checkpointCounting): convergence costs ZERO extra jobs
       val nbrMin = edges
         .join(labels.select(col("id").as("b"), col("label").as("nl")), "b")
         .groupBy(col("a")).agg(min(col("nl")).as("nmin"))
-      val next = labels
+      val (next, movedRows) = Eager.checkpointCounting(labels
         .join(nbrMin.select(col("a").as("id"), col("nmin")), Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
-          bump(coalesce(col("nmin"), lit(Long.MaxValue)) < col("label")).as("_moved"))
-        .localCheckpoint()
-      moved = movedAcc.value > 0
+          (coalesce(col("nmin"), lit(Long.MaxValue)) < col("label")).as("_moved")),
+        col("_moved"))
+      moved = movedRows > 0
       labels = next.drop("_moved")
       it += 1
     }
@@ -754,16 +747,8 @@ object Dedup {
         s"connectedComponents did not converge in $maxIters rounds: a " +
           "component's diameter exceeds the iteration cap; raise maxIters " +
           "(rounds are cheap — one join + partial-agg groupBy each)")
-    lastMinLabelRounds = it
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
-
-  /** Rounds the most recent connectedComponents / ...Star call in this
-    * JVM took to converge — benchmark/diagnostic introspection only
-    * (CcBench records them in SCALING.md; not part of any query result).
-    */
-  @volatile var lastMinLabelRounds: Int = -1
-  @volatile var lastStarRounds: Int = -1
 
   /** Connected components by alternating large-star/small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
@@ -784,7 +769,6 @@ object Dedup {
     * `maxIters` (cannot happen for n < 2^maxIters nodes).
     */
   def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 40): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
     // symmetrized, self-loop-free neighbor list — locally contracted
     // first (exact, see locallyContracted): the first large-star round
     // then shuffles ~node count, not the raw dup-quadratic pair list
@@ -837,7 +821,6 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIters rounds " +
           "(needs ~log2(nodes) — raise maxIters)")
-    lastStarRounds = it
     // fixpoint is a star per component: children point at the root;
     // roots (appearing only as b) label themselves
     allNodes
@@ -909,9 +892,10 @@ object Dedup {
     * asserts the two algorithms agree on real pairs, and q37's DuckDB
     * recursive-closure oracle independently validates the star labels —
     * a cross-algorithm check neither gets alone. Star is the MEASURED
-    * default, not just the structural one: CcBench on the 30× probe's
-    * 2.4M-edge pair graph has star at 9.0 s vs min-label's 13.7 s at
-    * the same round count (SCALING.md) — each star round contracts the
+    * default, not just the structural one: on the 30× probe's 2.4M-edge
+    * pair graph star takes 9.0 s vs min-label's 13.7 s at the same
+    * round count (SCALING.md "CC algorithm crossover: min-label vs star
+    * contraction") — each star round contracts the
     * edge set, while every min-label round re-joins full labels×edges —
     * and star's round count is diameter-independent, so deep templated
     * near-dup chains can't blow it up.

@@ -159,8 +159,8 @@ object GenomicsCatalog {
     * iterate-until-fixpoint shuffle pair, with the left-join back to
     * the vertex list keeping rank-less sinks alive. Plan depth grows
     * linearly in rounds; at 5 rounds no checkpoint is needed (q74's
-    * accumulator-convergence machinery is the unbounded-round
-    * variant).
+    * counted-checkpoint convergence, Eager.checkpointCounting, is the
+    * unbounded-round variant).
     */
   def q100PageRank(s: SparkSession, dir: String): DataFrame = {
     val (v, e) = readsGraph(s, dir)

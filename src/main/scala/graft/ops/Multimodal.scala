@@ -1092,8 +1092,8 @@ object Multimodal {
     * as 4×32-bit keys, keeping the pigeonhole guarantee (Hamming ≤ 3
     * across 4 bands → one band exact) while moving the cliff to
     * ~cap·2^32 ≈ 2.1·10^11 corpus frames — two orders above a 100 TB
-    * video corpus' ~10^9–10^10 frames (BandCliffProbe measures both
-    * keyings above the OLD bound; SCALING.md). [[PhashBandHotCap]]
+    * video corpus' ~10^9–10^10 frames (both keyings are measured above
+    * the OLD bound in SCALING.md "BandCliffProbe, now four folds"). [[PhashBandHotCap]]
     * still applies per bucket, now doing only its intended job:
     * suppressing genuine template/boilerplate frame clusters, loudly
     * (`hot_buckets`), never average-occupancy mass. q185's

@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   * sampling, no driver-side data — the per-key state is one row per
   * key.
   *
-  * Cost, honestly (RadixProbe, 10M rows, one 9M-row all-ties key +
-  * 1024 small keys, local[32]): the window form sorts the mega key in
-  * one partition in ~9 s; this descent takes ~5× longer at that size.
+  * Cost, honestly (SCALING.md "Exact mega-cell selection
+  * (Selection.headK), measured honestly": 10M rows, one 9M-row
+  * all-ties key + 1024 small keys, local[32]): the window form sorts
+  * the mega key in one partition in ~9 s; this descent takes ~5×
+  * longer at that size.
   * The radix form is NOT a latency win where a single-partition sort
   * still fits an executor — it is the CAPACITY form: its partitions
   * are bounded by the radix at any key size, where the window's one
@@ -75,7 +77,6 @@ object Selection {
         col(k2).bitwiseXOR(sign).as("u2"))
       .localCheckpoint() // round-0 candidates + the final cut scan it
     val counts = base.groupBy(col(key)).agg(count(lit(1)).as("n_rows"))
-    val sc = rows.sparkSession.sparkContext
     var state = kPerKey
       .join(counts, key)
       .select(col(key), least(col("kk"), col("n_rows")).as("krem"),
@@ -146,18 +147,13 @@ object Selection {
           (if (r < 4) when(col("done"), lit(-1L)).otherwise(col("t2"))
           else when(col("done"), tNew.bitwiseOR(pad)).otherwise(tNew))
             .as("t2"))
-      // drain detection rides the checkpoint's own materialization
-      // (the graphWalkLoop pattern): the `_c` bump column must survive
-      // into the materialized frame — don't project it away before the
-      // localCheckpoint below
-      val acc = sc.longAccumulator(s"radix_descending_round_$r")
-      val bump = udf { _: Boolean => acc.add(1L); true }
-      state = state.where(col("full") || col("done")).unionByName(next)
-        .withColumn("_c", when(!col("full") && !col("done"),
-          bump(lit(true))).otherwise(lit(true)))
-        .localCheckpoint()
-        .drop("_c")
-      descendingLeft = acc.value > 0L
+      // drain detection counts the still-descending keys inside the
+      // round checkpoint's own job (Eager.checkpointCounting)
+      val (merged, descendingRows) = Eager.checkpointCounting(
+        state.where(col("full") || col("done")).unionByName(next),
+        !col("full") && !col("done"))
+      state = merged
+      descendingLeft = descendingRows > 0L
       r += 1
     }
     // final cut in SIGNED space: t1/t2 are the unsigned-encoded

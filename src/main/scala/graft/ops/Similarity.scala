@@ -325,7 +325,8 @@ object Similarity {
     * fits the k ≤ 64 literal-column clamp, the two-level hierarchical
     * quantizer ([[trainHierCells]] — centroids a broadcast TABLE,
     * corpus-linear training, measured 2.5× cheaper than flat at equal
-    * capacity in HierBench) above it. The staged table is the
+    * capacity, SCALING.md "Hierarchical vs flat coarse training") above
+    * it. The staged table is the
     * interface: consumers (q78/q79/q82/q92/q99/q106) equi-join on the
     * cell id and never learn which quantizer produced it, so the
     * default flip changes the training path only. Below the clamp the
@@ -1256,8 +1257,8 @@ object Similarity {
   val DescentMaxRounds = 8
 
   /** Rounds the most recent [[knnDescentConverged]] actually ran —
-    * diagnostic introspection only (the lastMinLabelRounds
-    * convention; KnnDescentSpec asserts planted convergence counts).
+    * diagnostic introspection only (KnnDescentSpec asserts planted
+    * convergence counts).
     */
   @volatile private[graft] var lastDescentRounds = 0
 
@@ -1371,8 +1372,8 @@ object Similarity {
   }
 
   /** Beam width and round count for the greedy graph walk — chosen
-    * FROM THE MEASURED budget sweep (`runMain graft.WalkBudgetProbe`,
-    * SCALING.md round 15): (4, 16) is the frontier point — 0.95/0.81
+    * FROM THE MEASURED budget sweep (SCALING.md "Walk budget sweep",
+    * round 15): (4, 16) is the frontier point — 0.95/0.81
     * recall@1/@5 at ~254 observed exact scores per query, dominating
     * both the previous (4, 8) default (0.70/0.62 @161) and the deeper
     * (6, 8) (0.80/0.72 @231, more wall time). Worst-case budget is
@@ -1384,7 +1385,7 @@ object Similarity {
   val WalkRounds = 4
 
   /** Beam width for the PQ-PRICED walk (q194) — measured separately
-    * (`runMain graft.WalkPqBudgetProbe`, SCALING.md round 16) because
+    * (SCALING.md "PQ-walk budget sweep", round 16) because
     * an ADC-guided frontier is NOISY: the 4×16 quantizer misleads
     * elections, so the compressed route buys recall with WIDTH (keep
     * more of the quantizer's near-misses alive for the exact
@@ -1717,8 +1718,8 @@ object Similarity {
     * fraction. Under the retired RANDOM keying expected touched
     * buckets were B·(1 − (1 − 1/B)^|frontier|) — saturating at batch
     * frontiers; the cell-aligned keying's touched set is the
-    * frontier's distinct probed-cell buckets instead (GraphLayoutProbe
-    * measures both).
+    * frontier's distinct probed-cell buckets instead (SCALING.md
+    * "Locality-aware walk substrate" measures both).
     */
   val WalkBuckets = 64
 
@@ -1737,7 +1738,8 @@ object Similarity {
     * geometrically local (each query's beam sits in a few cells),
     * but random bucketing scatters those nodes across all B buckets,
     * so a 20-query batch touched 164/256 bucket-reads
-    * (GraphLayoutProbe r16). Keying the bucket by the node's IVF
+    * (SCALING.md "Bucketed graph layout / pruned per-round reads").
+    * Keying the bucket by the node's IVF
     * cell makes co-visited nodes co-stored — the DiskANN on-disk
     * premise (graph neighborhoods laid out together) expressed in
     * Spark's partition-pruning idiom. Each edge row also carries
@@ -1821,9 +1823,9 @@ object Similarity {
     * keying's 64·(1−(1−1/64)^|frontier|) saturation; bucket election
     * rides the accumulated (node, nb) map seeded from the medoids'
     * own clusters and grown from each pruned read's `neighbor_nb`
-    * column — never a corpus lookup (GraphLayoutProbe measures all
-    * three layouts' touched buckets AND rows-read fractions;
-    * SCALING.md round 17 carries the table; wall-flat locally
+    * column — never a corpus lookup (all three layouts' touched
+    * buckets AND rows-read fractions are measured in SCALING.md
+    * "Locality-aware walk substrate", round 17; wall-flat locally
     * because job overhead dominates at probe scale — the honest
     * attribution). The substrate asset is group-stamped to its
     * `knn_graph` AND `cells` generations and re-resolved through the
@@ -1877,7 +1879,7 @@ object Similarity {
     import s.implicits._
     val graphFor: DataFrame => DataFrame = frontier => {
       // model-sized driver collect: the frontier is a checkpointed
-      // ≤ queries×beam frame (the GraphLayoutProbe discipline)
+      // ≤ queries×beam frame (SCALING.md "Locality-aware walk substrate")
       val fNodes = frontier.select(col("node")).distinct()
         .collect().map(_.getLong(0)).toIndexedSeq
       val bks = fNodes.flatMap(known.get).distinct
@@ -2182,7 +2184,6 @@ object Similarity {
       graphFor: DataFrame => DataFrame,
       score: DataFrame => DataFrame, orderCols: Seq[Column],
       rounds: Int, beam: Int): DataFrame = {
-    val sc = seedsScored.sparkSession.sparkContext
     // the visited set carries an `expanded` FLAG instead of a separate
     // eagerly-checkpointed frontier set: each round's frontier election
     // (top-beam unexpanded — the window orders unexpanded rows first,
@@ -2201,10 +2202,8 @@ object Similarity {
       // q196's empty-round lesson, generalized: an empty frontier —
       // every query's visited set fully expanded, or an all-deleted
       // query mask — makes every remaining round a no-op. Drain
-      // detection rides the round checkpoint's own materialization via
-      // an accumulator-bumping kernel (stitchIterative's pattern).
-      val acc = sc.longAccumulator(s"walk_frontier_round_$r")
-      val bump = udf { _: Boolean => acc.add(1L); true }
+      // detection counts this round's frontier rows inside the round
+      // checkpoint's own job (Eager.checkpointCounting).
       val ranked = visited.withColumn("_r", row_number().over(wb))
       def isFrontier = !col("expanded") && col("_r") <= beam
       val frontier = ranked.where(isFrontier)
@@ -2220,23 +2219,17 @@ object Similarity {
         .join(
           broadcast(visited.select(col("query_id"), col("neighbor_id"))),
           Seq("query_id", "neighbor_id"), "left_anti")
-      // INVARIANT (drain detection): the `_c` bump column must survive
-      // into the frame the localCheckpoint below materializes — the
-      // accumulator is read immediately after, and a refactor that
-      // projects `_c` away (or defers the checkpoint) would read 0 and
-      // silently end every walk after one round.
       val updated = ranked
-        .withColumn("_c",
-          when(isFrontier, bump(lit(true))).otherwise(lit(true)))
+        .withColumn("_f", isFrontier)
         .withColumn("expanded", col("expanded") || isFrontier)
         .drop("_r")
-      visited = updated
+      val (next, frontierRows) = Eager.checkpointCounting(updated
         .unionByName(score(fresh)
           .withColumn("expanded", lit(false))
-          .withColumn("_c", lit(true)))
-        .localCheckpoint()
-        .drop("_c")
-      if (acc.value == 0L) drained = true
+          .withColumn("_f", lit(false))),
+        col("_f"))
+      visited = next.drop("_f")
+      if (frontierRows == 0L) drained = true
       r += 1
     }
     visited.drop("expanded")
@@ -5028,8 +5021,8 @@ object Similarity {
   val MegaCellFactor = 64L
 
   /** Cells the most recent [[prototypePruneAuto]] call routed to the
-    * radix lane — diagnostic introspection only (the
-    * Dedup.lastMinLabelRounds convention; not part of any result).
+    * radix lane — diagnostic introspection only (ProtoRadixSpec reads
+    * it; not part of any result).
     */
   @volatile var lastAutoMegaCells: Int = -1
 
@@ -5126,8 +5119,9 @@ object Similarity {
     * Scale shape: [[Selection.headK]]'s 8 bounded passes — partial-agg
     * digit counts, windows over ≤ 65,536 radix rows, never a
     * whole-cell sort partition. ~5× the window form's cost where the
-    * window still fits one executor (RadixProbe, SCALING.md round
-    * 13) and the only exact form once a cell cannot.
+    * window still fits one executor (SCALING.md "Exact mega-cell
+    * selection (Selection.headK), measured honestly", round 13) and the
+    * only exact form once a cell cannot.
     */
   def q171PrototypePruneRadix(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
@@ -5587,7 +5581,6 @@ object Similarity {
     * (query_id, step, cand, rel, score).
     */
   private def mmrGreedy(cands: DataFrame, sims: DataFrame): DataFrame = {
-    val sc = cands.sparkSession.sparkContext
     var remaining = cands.withColumn("maxsim", lit(0.0))
     var selected: Option[DataFrame] = None
     var drained = false
@@ -5605,13 +5598,9 @@ object Similarity {
         .select(col("query_id"), col("cand"), col("rel"), col("score"))
       val tagged = win.withColumn("step", lit(step))
       selected = Some(selected.map(_.union(tagged)).getOrElse(tagged))
-      // pool-exhaustion detection (q196's lesson) rides this
-      // checkpoint's own materialization via an accumulator-bumping
-      // kernel (the walk loop's pattern) — the former isEmpty probe
-      // was one more whole job per round
-      val acc = sc.longAccumulator(s"mmr_remaining_step_$step")
-      val bump = udf { _: Boolean => acc.add(1L); true }
-      remaining = remaining
+      // pool-exhaustion detection (q196's lesson) counts the remaining
+      // rows inside this checkpoint's own job (Eager.checkpointCounting)
+      val (next, remainingRows) = Eager.checkpointCounting(remaining
         .join(win.select(col("query_id"), col("cand").as("sel")),
           "query_id")
         .where(col("cand") =!= col("sel"))
@@ -5620,11 +5609,10 @@ object Similarity {
           Seq("query_id", "cand", "sel"), "left")
         .select(col("query_id"), col("cand"), col("rel"),
           greatest(col("maxsim"), coalesce(col("sim"), lit(0.0)))
-            .as("maxsim"))
-        .withColumn("_c", bump(lit(true)))
-        .localCheckpoint() // bound the 5-round lineage
-        .drop("_c")
-      drained = acc.value == 0L
+            .as("maxsim")),
+        lit(true)) // the checkpoint bounds the 5-round lineage
+      remaining = next
+      drained = remainingRows == 0L
     }
     selected.get
   }
@@ -6035,7 +6023,6 @@ object Similarity {
         Seq("cells", "knn_graph_conv")),
       ("graph_walk_conv_2probe", q198GraphWalkConverged _,
         Seq("cells", "probes", "knn_graph_conv", "knn_medoids")))
-    lastRecallRoutesRerun = 0
     methods.map { case (m, f, assets) =>
       val asset = s"recall/r_$m"
       // by-name: evaluated BEFORE the run for the reuse check and
@@ -6046,7 +6033,6 @@ object Similarity {
         .mkString(",")
       if (!(Staged.isFresh(work, asset) &&
           Staged.groupOf(work, asset).contains(key))) {
-        lastRecallRoutesRerun += 1
         // EAGER localCheckpoint: the search lazily reads staged tables
         // a LATER route's cold staging could replace — materialize the
         // result while its inputs still exist
@@ -6078,12 +6064,6 @@ object Similarity {
     }
     recallReportStaged(s, work)
   }
-
-  /** Routes the most recent [[q126RecallReport]] call actually
-    * re-searched (vs reused from their version-stamped staging) —
-    * diagnostic introspection only, the lastMinLabelRounds convention.
-    */
-  @volatile var lastRecallRoutesRerun: Int = -1
 
   /** PRODUCTION ENTRY for the recall report: the scoring joins over
     * ALREADY-STAGED `$work/recall/{results, truth}` tables — no

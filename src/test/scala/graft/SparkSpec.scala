@@ -6,6 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared test harness: one local SparkSession across all suites. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Filesystem path of a classpath test resource (src/test/resources). */
+  def resourcePath(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/$name").toURI).toString
 }
 
 object SparkSpec {

@@ -52,7 +52,7 @@ class CodecSinkSpec extends SparkSpec {
   }
 
   test("local engine --codec=gzip: same bytes as the plain run, .gz suffixed") {
-    val in = "/root/reference/GraphLab_Input_short.txt"
+    val in = resourcePath("GraphLab_Input_short.txt")
     val outPlain = Files.createTempDirectory("asm-plain").toString + "/o"
     val outGz = Files.createTempDirectory("asm-gz").toString + "/o"
     def run(out: String, codec: String): Unit =

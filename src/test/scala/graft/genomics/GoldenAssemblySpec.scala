@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden test on the reference's own 3-read sample
-  * (/root/reference/GraphLab_Input_short.txt: chain 33 → 10 → 38).
+  * (src/test/resources/GraphLab_Input_short.txt: chain 33 → 10 → 38).
   * Both hops are case-D disjoint-right merges with hand-computed N gaps
   * (FIXTURES.md §1): gap(33→10) = 3326−1304−119 = 1903,
   * gap(10→38) = 3891−3326−104 = 461; assembled span 1304 .. 3891+132.

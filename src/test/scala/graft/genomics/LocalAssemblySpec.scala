@@ -13,7 +13,7 @@ class LocalAssemblySpec extends SparkSpec {
   import spark.implicits._
 
   test("golden sample through the local engine") {
-    val (v, e) = LocalAssembly.parse("/root/reference/GraphLab_Input_short.txt")
+    val (v, e) = LocalAssembly.parse(resourcePath("GraphLab_Input_short.txt"))
     assert(v.map(_.id).toSet === Set(33L, 10L, 38L))
     assert(e.toSet === Set((33L, 10L), (10L, 38L)))
     val span = LocalAssembly.assembleFrom(v, e, 33L, 38L).get
