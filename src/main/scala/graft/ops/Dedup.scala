@@ -354,40 +354,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Band-bucket occupancy cap for [[q122SimhashPairs]]: a (band, key)
-    * bucket holding more than this many docs contributes C(n,2)
-    * candidate pairs — and an over-full bucket at corpus scale
-    * is boilerplate-dominated signatures, not near-dup structure (the
-    * q33/q115 hot-key discipline applied to Hamming space). Skipped
-    * buckets are counted once in `hot_buckets`.
-    */
-  val BandHotCap = 50
-
-  /** SimHash near-dup PAIRS — q32's signature taken to the join it
-    * exists for, with the recall guarantee stated exactly: 128-bit
-    * signatures (the full md5 per token — q32's 32-bit vote widened
-    * twice over; 32-bit bands key a corpus-sized 2^32 space, where
-    * the earlier 16-bit bands went all-hot past ~cap·2^16 ≈ 3.3M
-    * docs, the round-16 `weak`) split into 4 bands of 32 bits; by
-    * pigeonhole any pair within Hamming distance 3 agrees on at least
-    * one whole band, so the banded equi-join has PERFECT recall at
-    * the d ≤ 3 cut — the Hamming-space twin of q31's MinHash banding,
-    * as a hash-partitioned equi-join, never all-pairs. Candidates are
-    * verified by exact per-bit Hamming distance; buckets over
-    * [[BandHotCap]] are skipped and reported once (`hot_buckets`
-    * global column, q115's pattern) — C(n,2) fan-out per bucket is
-    * bounded at any corpus size. Both engines spell the signature,
-    * the bands, and the distance identically, so the hash compare
-    * certifies signatures, banding, and verification end-to-end.
-    *
-    * Known report-shape limit (shared with q115's scalar): the
-    * diagnostic rides the pair rows, so a corpus whose ONLY near-dup
-    * structure sits in over-cap buckets yields an empty report — the
-    * suppression happened but is not visible here. The audit trail
-    * for that case is q123's agreement matrix (minhash still reports
-    * the pairs) and the staged occupancy the cap reads; asserted as
-    * the 60-identical-docs case in SimhashPairsSpec.
-    */
   /** q122's pair core — (doc_a, doc_b, hamming ≤ 3 pairs, hot-bucket
     * 1-row count) — shared by the catalog query and
     * [[stageSimhashPairs]] (q123 consumes the staged form).
@@ -415,64 +381,44 @@ object Dedup {
       sum(expr(s"IF((shiftright(_q${d / 8}, $bit) & 1) = 1, 1, -1)"))
         .as(s"v$j")
     }
+    // signature bit j is bit j % 64 of word j / 64, so band b — bits
+    // 32b..32b+31 — is exactly the core's 32-bit slice b of (h0, h1)
+    def word(w: Int): Column = (0 until 64).map { i =>
+      when(col(s"v${64 * w + i}") > 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
     val sig = toks.groupBy(col("doc_id")).agg(voteAggs.head, voteAggs.tail: _*)
-      .select(col("doc_id"),
-        concat((0 until 128).map(j =>
-          when(col(s"v$j") > 0, "1").otherwise("0")): _*).as("sig"))
-      .localCheckpoint() // bands + both join sides read it (q31 note)
-    simhashBandedPairs(sig)
-  }
-
-  /** The banding + occupancy-cap + Hamming-verify half of q122 over a
-    * prepared (doc_id, sig: 128-char binary string) signature frame —
-    * factored so the band-cliff probe and the capacity-guard spec can
-    * drive it on planted signatures. The caller must pass an
-    * already-materialized frame (q122 checkpoints its vote pass).
-    *
-    * 4×32-bit bands since round 17 (the 64-bit signature's 4×2^16 key
-    * space goes all-hot past ~[[BandHotCap]]·2^16 ≈ 3.3M docs —
-    * average occupancy then exceeds the cap and the skew guard
-    * suppresses wholesale); [[Banding.requireCapacity]] fails by name
-    * rather than let the bound be crossed silently.
-    */
-  private[graft] def simhashBandedPairs(sig: DataFrame)
-      : (DataFrame, DataFrame) = {
-    Banding.requireCapacity(sig.count(), 32, BandHotCap,
-      "simhashBandedPairs")
-    val bands = sig.select(col("doc_id"), col("sig"),
-      explode(expr("transform(sequence(0, 3), b -> " +
-        "struct(b AS band, substr(sig, b * 32 + 1, 32) AS bkey))")).as("bk"))
-      .select(col("doc_id"), col("sig"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val occ = bands.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-    val hotCount = occ.where(col("n") > BandHotCap)
-      .agg(count(lit(1)).as("hot_buckets"))
-    val cold = bands.join(
-      occ.where(col("n") <= BandHotCap).select(col("band"), col("bkey")),
-      Seq("band", "bkey"), "leftsemi")
-    val pairs = cold.as("x")
-      .join(cold.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.sig").as("sa"), col("y.sig").as("sb"))
-      .distinct() // a pair can agree on several bands
-      // Hamming via four 32-bit quarters: conv(bits,2,10) → XOR →
-      // bit_count, all codegen'd — the interpreted per-bit HOF
-      // spelling measured 2× slower on the candidate set (the verify
-      // runs per CANDIDATE, so its constant matters; same lesson as
-      // vec_ldot vs the HOF dot product)
-      .withColumn("hamming",
-        (0 until 4).map(q =>
-          expr(s"bit_count(cast(conv(substr(sa, ${32 * q + 1}, 32), 2, 10) as bigint)" +
-            s" ^ cast(conv(substr(sb, ${32 * q + 1}, 32), 2, 10) as bigint))"))
-          .reduce(_ + _).cast("long"))
-      .where(col("hamming") <= 3)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+      .select(col("doc_id"), word(0).as("h0"), word(1).as("h1"))
+    val (pairs, hotCount, _) = Banding.hammingPairs(sig, "q122SimhashPairs")
     (pairs, hotCount)
   }
 
+  /** SimHash near-dup PAIRS — q32's signature taken to the join it
+    * exists for, with the recall guarantee stated exactly: 128-bit
+    * signatures (the full md5 per token — q32's 32-bit vote widened
+    * twice over; 32-bit bands key a corpus-sized 2^32 space, where
+    * the earlier 16-bit bands went all-hot past ~cap·2^16 ≈ 3.3M
+    * docs, the round-16 `weak`) split into 4 bands of 32 bits; by
+    * pigeonhole any pair within Hamming distance 3 agrees on at least
+    * one whole band, so the banded equi-join has PERFECT recall at
+    * the d ≤ 3 cut — the Hamming-space twin of q31's MinHash banding,
+    * as a hash-partitioned equi-join, never all-pairs. Candidates are
+    * verified by exact per-bit Hamming distance; buckets over
+    * [[Banding.HotCap]] are skipped and reported once (`hot_buckets`
+    * global column, q115's pattern) — C(n,2) fan-out per bucket is
+    * bounded at any corpus size. The oracle spells the signature as
+    * a 128-char bit string and the engine packs the same bits into
+    * two longs for [[Banding.hammingPairs]], so each band is the same
+    * 32-bit slice in both and the hash compare certifies signatures,
+    * banding, and verification end-to-end.
+    *
+    * Known report-shape limit (shared with q115's scalar): the
+    * diagnostic rides the pair rows, so a corpus whose ONLY near-dup
+    * structure sits in over-cap buckets yields an empty report — the
+    * suppression happened but is not visible here. The audit trail
+    * for that case is q123's agreement matrix (minhash still reports
+    * the pairs) and the staged occupancy the cap reads; asserted as
+    * the 60-identical-docs case in SimhashPairsSpec.
+    */
   def q122SimhashPairs(s: SparkSession, dir: String): DataFrame = {
     val (pairs, hotCount) = simhashPairCore(s, dir)
     pairs
@@ -1157,11 +1103,8 @@ object Dedup {
     // checkpoint pins every consumer to one ExistingRDD scan
     // (plan-asserted in PlanSpec).
     val sh = hashedShingles(s, dir).localCheckpoint()
-    val sigN = sh.groupBy(col("doc_id"))
-      .agg(minhashAggs.head,
-        (minhashAggs.tail :+ count(lit(1)).as("n")): _*)
-      .localCheckpoint()
-    val bands = bandRowsOf(sigN)
+    val sigN = minhashSignatures(sh).localCheckpoint()
+    val bands = bandRows(sigN)
     val cand = bands.where(isNew).as("x")
       .join(bands.where(!isNew).as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
@@ -1192,28 +1135,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** The 16 minhash partial-agg columns m0..m15 (shared by q48's
-    * inline derivation and the staged signature archive).
-    */
-  private def minhashAggs: Seq[Column] =
-    hashAB.zipWithIndex.map { case ((a, b), k) =>
-      min(expr(s"($a * (h % $P) + $b) % $P")).as(s"m$k")
-    }
-
-  /** LSH band rows (doc_id, band, bkey) of a signature frame carrying
-    * m0..m15 — the 4×4 banding every minhash consumer shares.
-    */
-  private def bandRowsOf(sig: DataFrame): DataFrame = {
-    val bandCols = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until 4).map(r => col(s"m${4 * b + r}")): _*)
-          .as("bkey"))
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.bkey").as("bkey"))
-  }
-
   /** Stage the corpus-side DEDUP ARCHIVE — the asset a 100 TB ingest
     * pipeline keeps between nightly batches so the corpus is never
     * re-normalized, re-hashed, or re-minhashed per batch: the
@@ -1233,10 +1154,7 @@ object Dedup {
       .stagePublish(work, "corpus_nh")
     val csh = hashedShingles(s, dir).where(!isNew).localCheckpoint()
     csh.stagePublish(work, "corpus_sh")
-    csh.groupBy(col("doc_id"))
-      .agg(minhashAggs.head,
-        (minhashAggs.tail :+ count(lit(1)).as("n")): _*)
-      .stagePublish(work, "corpus_sig")
+    minhashSignatures(csh).stagePublish(work, "corpus_sig")
   }
 
   /** q148 — q48's incremental-ingest dedup as the PRODUCTION
@@ -1267,13 +1185,11 @@ object Dedup {
       .groupBy(col("n.doc_id").as("doc_id"))
       .agg(min(col("c.doc_id")).as("exact_id"))
     val shN = hashedShingles(s, dir).where(isNew).localCheckpoint()
-    val sigB = shN.groupBy(col("doc_id"))
-      .agg(minhashAggs.head,
-        (minhashAggs.tail :+ count(lit(1)).as("n")): _*)
+    val sigB = minhashSignatures(shN)
       .localCheckpoint() // bands + sizes both read it
     val cSig = s.read.parquet(Staged.path(work, "corpus_sig"))
-    val cand = bandRowsOf(sigB).as("x")
-      .join(bandRowsOf(cSig).as("y"),
+    val cand = bandRows(sigB).as("x")
+      .join(bandRows(cSig).as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
       .select(col("x.doc_id").as("na"), col("y.doc_id").as("ca"))
       .distinct()
@@ -1634,9 +1550,9 @@ object Dedup {
       occ AS (SELECT band, bkey, COUNT(1) AS n
               FROM bands GROUP BY band, bkey),
       hot AS (SELECT COUNT(1) AS hot_buckets FROM occ
-              WHERE n > $BandHotCap),
+              WHERE n > ${Banding.HotCap}),
       cold AS (SELECT bands.* FROM bands JOIN occ USING (band, bkey)
-               WHERE n <= $BandHotCap),
+               WHERE n <= ${Banding.HotCap}),
       cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
                  x.sig AS sa, y.sig AS sb
                FROM cold x JOIN cold y

@@ -543,16 +543,6 @@ object Multimodal {
       .orderBy(col("doc_id"), col("frame_idx"))
   }
 
-  /** Band-bucket occupancy cap for [[bandedHammingPairs]] (q175's
-    * image pHash and q176's audio fingerprint) — q122's
-    * hot-bucket discipline applied to pHash space: a (band, key)
-    * bucket fans out C(n,2) candidate pairs, and an over-full bucket
-    * at corpus scale is a template/boilerplate image cluster,
-    * not near-dup structure worth pricing pairwise. Skipped buckets
-    * are counted once in `hot_buckets`.
-    */
-  val PhashBandHotCap = 50
-
   /** Deterministic planted-duplicate JPEG table for q175: per doc, a
     * genuine 64×64 baseline JFIF stream (real marker grammar, Huffman
     * coding, quantizer round-trip — [[jpegTable]]'s discipline) whose
@@ -577,7 +567,6 @@ object Multimodal {
     */
   def phashJpegTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val side = 2 * graft.functions.Phash.Side
     // the synthetic id scan is ONE file split locally, which would
     // serialize 2·N codec passes onto one core; the repartition moves
     // 8-byte ids only (the encode manufactures the payload AFTER the
@@ -586,29 +575,38 @@ object Multimodal {
     t(s, dir, "documents").select(col("doc_id")).as[Long]
       .repartition(s.sparkContext.defaultParallelism)
       .mapPartitions(_.map { id =>
-        val g = id / 4
-        val r = (id % 4).toInt
-        val px = new Array[Byte](3 * side * side)
-        var y = 0
-        while (y < side) {
-          var x = 0
-          while (x < side) {
-            val k0 = g * 0x9E3779B97F4A7C15L + (x / 8) * 0xC2B2AE3D27D4EB4FL +
-              (y / 8) * 0x165667B19E3779F9L
-            val k = k0 ^ (k0 >>> 31)
-            val c = (2 * (((k % 120) + 120) % 120) + 8 + 2 * r).toByte
-            val i = (y * side + x) * 3
-            px(i) = c; px(i + 1) = c; px(i + 2) = c
-            x += 1
-          }
-          y += 1
-        }
-        // gray=true: r=g=b by construction, so the single-component
-        // stream carries the identical luma in ⅓ the blocks — decode
-        // skips chroma IDCTs and the color convert entirely (channel 0
-        // IS Y either way; the exact round-trip argument is unchanged)
-        JpegRow(id, Jpeg.encode(Jpeg.Image(side, side, px), gray = true))
+        JpegRow(id, blockLawJpeg(id / 4, 0L, 2 * (id % 4).toInt))
       }).toDF()
+  }
+
+  /** One frame of the planted media tables' block law, as a 64×64
+    * gray baseline JPEG: each 8×8 block of (group g, frame f) is the
+    * constant even gray 2·(mix(g,f,bx,by) mod 120) + 8 + `shift`.
+    * q175 is the law at f = 0 with shift 2r, q185 at every frame with
+    * shift 2r, q186 at every frame with shift 0.
+    */
+  private def blockLawJpeg(g: Long, f: Long, shift: Int): Array[Byte] = {
+    val side = 2 * graft.functions.Phash.Side
+    val px = new Array[Byte](3 * side * side)
+    var y = 0
+    while (y < side) {
+      var x = 0
+      while (x < side) {
+        val k0 = g * 0x9E3779B97F4A7C15L + f * 0xFF51AFD7ED558CCDL +
+          (x / 8) * 0xC2B2AE3D27D4EB4FL + (y / 8) * 0x165667B19E3779F9L
+        val k = k0 ^ (k0 >>> 31)
+        val c = (2 * (((k % 120) + 120) % 120) + 8 + shift).toByte
+        val i = (y * side + x) * 3
+        px(i) = c; px(i + 1) = c; px(i + 2) = c
+        x += 1
+      }
+      y += 1
+    }
+    // gray=true: r=g=b by construction, so the single-component
+    // stream carries the identical luma in ⅓ the blocks — decode
+    // skips chroma IDCTs and the color convert entirely (channel 0
+    // IS Y either way; the exact round-trip argument is unchanged)
+    Jpeg.encode(Jpeg.Image(side, side, px), gray = true)
   }
 
   /** Decode one q175 payload to the 32×32 hash raster: real JPEG
@@ -641,10 +639,9 @@ object Multimodal {
     * did not). Any pair within Hamming distance 3 agrees on at least
     * one whole band, so the banded equi-join has PERFECT recall at
     * the d ≤ 3 cut — never all-pairs; buckets over
-    * [[PhashBandHotCap]] are skipped and reported once (`hot_buckets`).
+    * [[Banding.HotCap]] are skipped and reported once (`hot_buckets`).
     * The verify is codegen'd long arithmetic (`bit_count(pa ^ pb)`)
-    * — no string signatures, cheaper per candidate than q122's
-    * conv() spelling, which string signatures force there.
+    * in [[Banding.hammingPairs]], the core every banded entry shares.
     *
     * The oracle never decodes a pixel: [[phashJpegTable]] plants the
     * dup groups (4 brightness-shifted re-encodes per group), DCT
@@ -689,29 +686,8 @@ object Multimodal {
       .repartition(s.sparkContext.defaultParallelism)
       .mapPartitions(_.map { id =>
         val g = id / 4
-        val r = (id % 4).toInt
-        val nF = 4 + (g % 3).toInt
-        val frames = (0 until nF).map { f =>
-          val px = new Array[Byte](3 * side * side)
-          var y = 0
-          while (y < side) {
-            var x = 0
-            while (x < side) {
-              val k0 = g * 0x9E3779B97F4A7C15L +
-                f * 0xFF51AFD7ED558CCDL +
-                (x / 8) * 0xC2B2AE3D27D4EB4FL +
-                (y / 8) * 0x165667B19E3779F9L
-              val k = k0 ^ (k0 >>> 31)
-              val c = (2 * (((k % 120) + 120) % 120) + 8 + 2 * r).toByte
-              val i = (y * side + x) * 3
-              px(i) = c; px(i + 1) = c; px(i + 2) = c
-              x += 1
-            }
-            y += 1
-          }
-          // gray single-component frames — the phashJpegTable note
-          Jpeg.encode(Jpeg.Image(side, side, px), gray = true)
-        }
+        val frames = (0 until 4 + (g % 3).toInt)
+          .map(f => blockLawJpeg(g, f.toLong, 2 * (id % 4).toInt))
         AviRow(id, Avi.encode(frames, side, side))
       }).toDF()
   }
@@ -757,72 +733,19 @@ object Multimodal {
     videoHashPairs(hashes)
   }
 
-  /** The frame-aligned banding + all-frames fold over a
-    * (doc_id, frame_idx, h) frame-hash table — [[q185VideoPhashPairs]]
-    * minus the decode, factored so VideoPhashSpec can drive the
-    * temporal-alignment and count-rule semantics on planted hashes.
+  /** The all-frames fold over a (doc_id, frame_idx, h0, h1) 128-bit
+    * frame-hash table — [[q185VideoPhashPairs]] minus the decode,
+    * factored so VideoPhashSpec can drive the temporal-alignment and
+    * count-rule semantics on planted hashes. Bands through
+    * [[Banding.hammingPairs]] keyed by `frame_idx`: the frame key
+    * narrows each bucket, but the HASH key space must still be
+    * corpus-sized on its own — frame 0 of every video lands in one
+    * (frame_idx=0, band) key space.
     */
-  /** [[hashBandRows]] carrying `frame_idx` — q185's position-keyed
-    * banding over the 128-bit (h0, h1) frame hash, 4×32-bit keys.
-    * The frame key narrows each bucket further, but the HASH key
-    * space must still be corpus-sized on its own: frame 0 of every
-    * video in a 10^9-video corpus lands in one (frame_idx=0, band)
-    * key space, which 16-bit keys saturate at ~3.3M videos (the
-    * round-16 `weak`). Inline (not a join-back by (doc, h)) so
-    * in-doc duplicate hashes — a still video is legal — never fan
-    * out.
-    */
-  private def frameBandRows(hs: DataFrame): DataFrame =
-    hs.select(col("doc_id"), col("frame_idx"), col("h0"), col("h1"),
-      explode(expr("transform(sequence(0, 3), b -> struct(b AS band, " +
-        "shiftrightunsigned(IF(b < 2, h0, h1), (b % 2) * 32) " +
-        "& 4294967295 AS bkey))")).as("bk"))
-      .select(col("doc_id"), col("frame_idx"), col("h0"), col("h1"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-
-  /** [[clipHashPairs]]'s banding over the 128-bit (h0, h1) hash:
-    * 4×32-bit bands (0–1 from h0, 2–3 from h1) — the corpus-sized
-    * key space the offset-free join needs (the fold's scaladoc).
-    * Inline per row, like [[frameBandRows]], so in-doc duplicate
-    * hashes never fan out.
-    */
-  private def clipBandRows(hs: DataFrame): DataFrame =
-    hs.select(col("doc_id"), col("frame_idx"), col("h0"), col("h1"),
-      explode(expr("transform(sequence(0, 3), b -> struct(b AS band, " +
-        "shiftrightunsigned(IF(b < 2, h0, h1), (b % 2) * 32) " +
-        "& 4294967295 AS bkey))")).as("bk"))
-      .select(col("doc_id"), col("frame_idx"), col("h0"), col("h1"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-
-  private[graft] def videoHashPairs(hashes0: DataFrame): DataFrame = {
-    // eager: per-doc counts + both band-join sides read it (q31 note)
-    val hashes = hashes0.localCheckpoint()
-    Banding.requireCapacity(hashes.count(), 32, PhashBandHotCap,
-      "videoHashPairs")
-    val nS = hashes.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
-    val bands = frameBandRows(hashes)
-    val occ = bands.groupBy(col("frame_idx"), col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-    val hotCount = occ.where(col("n") > PhashBandHotCap)
-      .agg(count(lit(1)).as("hot_buckets"))
-    val cold = bands.join(
-      occ.where(col("n") <= PhashBandHotCap)
-        .select(col("frame_idx"), col("band"), col("bkey")),
-      Seq("frame_idx", "band", "bkey"), "leftsemi")
-    val framePairs = cold.as("x")
-      .join(cold.as("y"),
-        col("x.frame_idx") === col("y.frame_idx")
-          && col("x.band") === col("y.band")
-          && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.frame_idx").as("frame_idx"),
-        col("x.h0").as("pa0"), col("y.h0").as("pb0"),
-        col("x.h1").as("pa1"), col("y.h1").as("pb1"))
-      .distinct() // identical frame hashes agree on all four bands
-      .withColumn("hamming",
-        expr("bit_count(pa0 ^ pb0) + bit_count(pa1 ^ pb1)").cast("long"))
-      .where(col("hamming") <= 3)
+  private[graft] def videoHashPairs(hashes: DataFrame): DataFrame = {
+    val (framePairs, hotCount, hs) = Banding.hammingPairs(hashes,
+      "videoHashPairs", keys = Seq("frame_idx"))
+    val nS = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
     framePairs.groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_frames"), max(col("hamming")).as("max_hamming"))
       .join(nS.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
@@ -851,33 +774,12 @@ object Multimodal {
     t(s, dir, "documents").select(col("doc_id")).as[Long]
       .repartition(s.sparkContext.defaultParallelism)
       .mapPartitions(_.map { id =>
-        val c = id / 4
         val orig: Range = (id % 4) match {
           case 1 => 1 until 4
           case 2 => 2 until 6
           case _ => 0 until 6
         }
-        val frames = orig.map { f =>
-          val px = new Array[Byte](3 * side * side)
-          var y = 0
-          while (y < side) {
-            var x = 0
-            while (x < side) {
-              val k0 = c * 0x9E3779B97F4A7C15L +
-                f * 0xFF51AFD7ED558CCDL +
-                (x / 8) * 0xC2B2AE3D27D4EB4FL +
-                (y / 8) * 0x165667B19E3779F9L
-              val k = k0 ^ (k0 >>> 31)
-              val cb = (2 * (((k % 120) + 120) % 120) + 8).toByte
-              val i = (y * side + x) * 3
-              px(i) = cb; px(i + 1) = cb; px(i + 2) = cb
-              x += 1
-            }
-            y += 1
-          }
-          // gray single-component frames — the phashJpegTable note
-          Jpeg.encode(Jpeg.Image(side, side, px), gray = true)
-        }
+        val frames = orig.map(f => blockLawJpeg(id / 4, f.toLong, 0))
         AviRow(id, Avi.encode(frames, side, side))
       }).toDF()
   }
@@ -1086,14 +988,14 @@ object Multimodal {
     * (band, bkey) ALONE, so expected bucket occupancy grows LINEARLY
     * with total corpus frames and the key space must be sized to the
     * corpus, not the timeline. The 64-bit hash's 4×2^16 bands put the
-    * all-hot cliff at ~[[PhashBandHotCap]]·2^16 ≈ 3.3M frames —
+    * all-hot cliff at ~[[Banding.HotCap]]·2^16 ≈ 3.3M frames —
     * GUARANTEED at video scale (the round-15 `weak`); this fold
     * therefore bands the 128-bit [[graft.functions.Phash.phash128]]
     * as 4×32-bit keys, keeping the pigeonhole guarantee (Hamming ≤ 3
     * across 4 bands → one band exact) while moving the cliff to
     * ~cap·2^32 ≈ 2.1·10^11 corpus frames — two orders above a 100 TB
     * video corpus' ~10^9–10^10 frames (both keyings are measured above
-    * the OLD bound in SCALING.md "BandCliffProbe, now four folds"). [[PhashBandHotCap]]
+    * the OLD bound in SCALING.md "BandCliffProbe, now four folds"). [[Banding.HotCap]]
     * still applies per bucket, now doing only its intended job:
     * suppressing genuine template/boilerplate frame clusters, loudly
     * (`hot_buckets`), never average-occupancy mass. q185's
@@ -1116,35 +1018,13 @@ object Multimodal {
     * corpus on a coarse content key and band the classic 64-bit hash
     * within shards instead — same oracle, different partitioner.
     */
-  private[graft] def clipHashPairs(hashes0: DataFrame): DataFrame = {
-    // eager: per-doc counts + both band-join sides read it (q31 note)
-    val hashes = hashes0.localCheckpoint()
-    Banding.requireCapacity(hashes.count(), 32, PhashBandHotCap,
-      "clipHashPairs")
-    val nS = hashes.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
-    val bands = clipBandRows(hashes)
-    val occ = bands.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-    val hotCount = occ.where(col("n") > PhashBandHotCap)
-      .agg(count(lit(1)).as("hot_buckets"))
-    val cold = bands.join(
-      occ.where(col("n") <= PhashBandHotCap).select(col("band"), col("bkey")),
-      Seq("band", "bkey"), "leftsemi")
-    val frameMatches = cold.as("x")
-      .join(cold.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.frame_idx").as("fa"), col("y.frame_idx").as("fb"),
-        col("x.h0").as("pa0"), col("y.h0").as("pb0"),
-        col("x.h1").as("pa1"), col("y.h1").as("pb1"))
-      .distinct() // identical hashes agree on all four bands
-      .withColumn("hamming",
-        expr("bit_count(pa0 ^ pb0) + bit_count(pa1 ^ pb1)").cast("long"))
-      .where(col("hamming") <= 3)
+  private[graft] def clipHashPairs(hashes: DataFrame): DataFrame = {
+    val (frameMatches, hotCount, hs) =
+      Banding.hammingPairs(hashes, "clipHashPairs")
+    val nS = hs.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
     frameMatches
       .groupBy(col("doc_a"), col("doc_b"),
-        (col("fb") - col("fa")).as("delta"))
+        (col("frame_idx_b") - col("frame_idx_a")).as("delta"))
       .agg(count(lit(1)).as("n_aligned"), max(col("hamming")).as("max_hamming"))
       .join(nS.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
       .join(nS.select(col("doc_id").as("doc_b"), col("ns").as("nb")), "doc_b")
@@ -1178,68 +1058,14 @@ object Multimodal {
       .repartition(s.sparkContext.defaultParallelism)
   }
 
-  /** The shared media near-dup core behind q175 (image pHash) and
-    * q176 (audio fingerprint): (doc_id, 128-bit hash (`h0`, `h1`)) →
-    * verified pairs at Hamming ≤ 3. Four 32-bit bands (any pair
-    * within distance 3 agrees on at least one whole band —
-    * pigeonhole, so the banded equi-join has PERFECT recall at the
-    * cut), hot-bucket suppression over [[PhashBandHotCap]] with the
-    * skipped count reported once, exact codegen'd
-    * `bit_count(pa0 ^ pb0) + bit_count(pa1 ^ pb1)` verify. Never
-    * all-pairs; the shuffle carries 24-byte (doc_id, h0, h1) rows.
-    *
-    * 32-bit keys, not the round-15 16-bit ones: a 4×2^16 key space
-    * goes ALL-HOT past ~cap·2^16 ≈ 3.3M hashes (average occupancy
-    * exceeds the cap, the skew guard suppresses wholesale — the
-    * round-16 `weak`); 2^32 keys move that cliff to ~2·10^11, two
-    * orders above a 100 TB media corpus, and [[Banding]] fails the
-    * plan by name rather than let it be crossed silently.
+  /** The media near-dup pairs behind q175 (image pHash) and q176
+    * (audio fingerprint): [[Banding.hammingPairs]] over (doc_id, h0,
+    * h1) with the `hot_buckets` scalar on every pair row.
     */
-  /** The 4×32-bit band rows of a (doc_id, h0, h1) 128-bit hash frame
-    * (bands 0–1 slice h0, 2–3 slice h1) — shared by
-    * [[bandedHammingPairs]] and the streaming ingest twin
-    * ([[graft.streaming.EventStreams.hammingStarStream]]), so stream
-    * == batch is mechanism, not coincidence.
-    */
-  private[graft] def hashBandRows(hs: DataFrame,
-      keyBits: Int = 32): DataFrame =
-    hs.select(col("doc_id"), col("h0"), col("h1"),
-      explode(expr("transform(sequence(0, 3), b -> struct(b AS band, " +
-        s"shiftrightunsigned(IF(b < 2, h0, h1), (b % 2) * $keyBits) " +
-        s"& ${(1L << keyBits) - 1} AS bkey))")).as("bk"))
-      .select(col("doc_id"), col("h0"), col("h1"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-
-  /** `keyBits` (≤ 32, default the shipped 32) exists so the capacity
-    * guard is testable END-TO-END: a spec can plant a corpus above a
-    * narrow keying's bound and assert the named refusal without
-    * manufacturing 2·10^11 rows. Production callers never pass it.
-    */
-  private[graft] def bandedHammingPairs(hashes: DataFrame,
-      keyBits: Int = 32): DataFrame = {
-    // eager checkpoint: occupancy + both self-join sides read it (q31 note)
-    val hs = hashes.localCheckpoint()
-    Banding.requireCapacity(hs.count(), keyBits, PhashBandHotCap,
-      "bandedHammingPairs")
-    val bands = hashBandRows(hs, keyBits)
-    val occ = bands.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-    val hotCount = occ.where(col("n") > PhashBandHotCap)
-      .agg(count(lit(1)).as("hot_buckets"))
-    val cold = bands.join(
-      occ.where(col("n") <= PhashBandHotCap).select(col("band"), col("bkey")),
-      Seq("band", "bkey"), "leftsemi")
-    cold.as("x")
-      .join(cold.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.h0").as("pa0"), col("y.h0").as("pb0"),
-        col("x.h1").as("pa1"), col("y.h1").as("pb1"))
-      .distinct() // identical hashes agree on all four bands
-      .withColumn("hamming",
-        expr("bit_count(pa0 ^ pb0) + bit_count(pa1 ^ pb1)").cast("long"))
-      .where(col("hamming") <= 3)
+  private[graft] def bandedHammingPairs(hashes: DataFrame): DataFrame = {
+    val (pairs, hotCount, _) =
+      Banding.hammingPairs(hashes, "bandedHammingPairs")
+    pairs
       .crossJoin(broadcast(hotCount)) // global 1-row scalar
       .select(col("doc_a"), col("doc_b"), col("hamming"),
         col("hot_buckets"))

@@ -754,7 +754,7 @@ object EventStreams {
     *     no-ops);
     *  2. candidates are band-key matches between the new hashes and
     *     (new ∪ ingested) through the SAME
-    *     [[graft.ops.Multimodal.hashBandRows]] kernel the batch
+    *     [[graft.ops.Banding.hashBandRows]] kernel the batch
     *     entries use — every pair generates exactly once, in the
     *     batch where its LATER member arrives; buckets whose
     *     CUMULATIVE occupancy exceeds the batch cap are skipped for
@@ -782,7 +782,7 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
-        import graft.ops.{Dedup, Multimodal, Staged}
+        import graft.ops.{Banding, Dedup, Staged}
         val logPath = s"$stagedDir/hamming_hashes"
         val starName = "media_pairs_star_stream"
         val b0 = batch.dropDuplicates("doc_id")
@@ -793,12 +793,12 @@ object EventStreams {
         val old =
           if (stagedExists(s, logPath)) s.read.parquet(logPath)
           else bNew.limit(0)
-        val bandsNew = Multimodal.hashBandRows(bNew)
-        val bandsAll = bandsNew.union(Multimodal.hashBandRows(old))
+        val bandsNew = Banding.hashBandRows(bNew)
+        val bandsAll = bandsNew.union(Banding.hashBandRows(old))
           .localCheckpoint() // occupancy + join side both read it
         val coldKeys = bandsAll.groupBy(col("band"), col("bkey"))
           .agg(count(lit(1)).as("n"))
-          .where(col("n") <= Multimodal.PhashBandHotCap)
+          .where(col("n") <= Banding.HotCap)
           .select(col("band"), col("bkey"))
         val cand = bandsNew.join(coldKeys, Seq("band", "bkey"), "leftsemi")
           .as("x")

@@ -378,7 +378,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q175/q176 band-join on (band,bkey) — never a pair nested-loop; verify is codegen'd bit_count") {
-    for (q <- Seq("q175_image_phash_pairs", "q176_audio_fp_pairs")) {
+    for (q <- Seq("q122_simhash_pairs", "q175_image_phash_pairs",
+        "q176_audio_fp_pairs")) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q: ${p.take(800)}")
       // the only nested-loop allowed is the 1-row hot_buckets scalar

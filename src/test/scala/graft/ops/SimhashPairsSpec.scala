@@ -44,8 +44,8 @@ class SimhashPairsSpec extends SparkSpec {
       (id, sg) <- sigs; b <- 0 until 4
     } yield (b, sg.substring(b * 32, b * 32 + 32), id, sg)
     val occ = bands.groupBy(bk => (bk._1, bk._2)).view.mapValues(_.size)
-    val hot = occ.count(_._2 > Dedup.BandHotCap).toLong
-    val cold = bands.filter(bk => occ((bk._1, bk._2)) <= Dedup.BandHotCap)
+    val hot = occ.count(_._2 > Banding.HotCap).toLong
+    val cold = bands.filter(bk => occ((bk._1, bk._2)) <= Banding.HotCap)
     val cand = (for {
       x <- cold; y <- cold
       if x._1 == y._1 && x._2 == y._2 && x._3 < y._3
@@ -115,7 +115,7 @@ class SimhashPairsSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("graft-q123hot").toString
     // a 60-deep byte-identical family: the old digest self-join would
     // materialize C(60,2) = 1770 exact rows; the min-id star emits 59.
-    // SimHash's BandHotCap (50) suppresses the family's band buckets,
+    // The shared Banding.HotCap (50) suppresses the family's band buckets,
     // so the matrix must show the exact pairs as (T,T,F) — the very
     // hot-bucket-suppression diagnostic the docstring advertises
     val text = (1 to 80).map(i => s"f$i").mkString(" ")
