@@ -202,87 +202,61 @@ object Assembly {
     * Input must carry `id, next_id, offset, length, content` (leaf
     * sentinel `next_id = -1`).
     */
-  def stitchIterative(vertices: DataFrame, maxIters: Int = 64): DataFrame = {
-    var state = vertices
-      .select(col("id"), col("next_id"), col("offset"), col("length"), col("content"))
-      .localCheckpoint()
-    var it = 0
-    // empty-input guard (q196's lesson): a zero-vertex input would
-    // still pay one eagerly-checkpointed join round before the
-    // moved count reads 0 — the isEmpty probe on the checkpointed
-    // frame is one limit-1 job (the frontier variant needs no guard:
-    // its round-0 frontier count already reads 0 and the loop never
-    // enters)
-    var moved = !state.isEmpty
-    while (moved && it < maxIters) {
-      // convergence detection rides the superstep's own checkpoint job
-      // (Eager.checkpointCounting). A merge that changes content always
-      // moves (offset, length): cases A1/A2/A3/B/C/D all grow or shift.
-      val child = state.select(
-        col("id").as("c_id"), col("offset").as("c_offset"),
-        col("length").as("c_length"), col("content").as("c_content"))
-      val joined = state.join(child, col("next_id") === col("c_id"), "left")
-      val acc = struct(col("offset").as("offset"), col("length").as("length"),
-        col("content").as("content"))
-      val n = struct(col("c_offset").as("offset"), col("c_length").as("length"),
-        col("c_content").as("content"))
-      val merged = when(col("c_id").isNull, acc).otherwise(stitchStep(acc, n))
-      val (next, movedRows) = Eager.checkpointCounting(joined
-        .select(col("id"), col("next_id"), merged.as("m"),
-          col("offset").as("p_offset"), col("length").as("p_length"))
-        .select(col("id"), col("next_id"),
-          col("m.offset").as("offset"),
-          col("m.length").as("length"),
-          col("m.content").as("content"),
-          (col("m.offset") =!= col("p_offset") ||
-            col("m.length") =!= col("p_length")).as("_moved")),
-        col("_moved"))
-      moved = movedRows > 0
-      state = next.drop("_moved")
-      it += 1
-    }
-    state
-  }
+  def stitchIterative(vertices: DataFrame, maxIters: Int = 64): DataFrame =
+    stitchSupersteps(vertices, maxIters, frontier = false)
 
   /** Active-set (frontier) variant of [[stitchIterative]] — the
     * reference's `context.signal(edge.source())` delta scheduling
     * (assembly_final.cpp:619, SURVEY §2.10 X4) made explicit: each
     * superstep, ONLY parents whose chosen child changed last round
     * re-merge; everything else is carried through untouched. Same
-    * fixpoint as the dense form, but per-round work is proportional to
-    * the frontier, not the graph — on a long-tail workload (most chains
-    * short, few deep) the dense form re-scans every vertex per round
-    * while this touches the shrinking active set.
+    * fixpoint as the dense form. What is frontier-proportional is the
+    * child side: only last round's changed reads are shuffled and
+    * joined, so the merge work shrinks with the active set on a
+    * long-tail workload (most chains short, few deep). The parent side
+    * — the whole state — is still shuffled every round, as the older
+    * semi-join + anti-join spelling of this schedule also did.
     */
-  def stitchIterativeFrontier(vertices: DataFrame, maxIters: Int = 64): DataFrame = {
-    // frontier size detection rides each checkpoint's materialization
-    // (Eager.checkpointCounting) — no per-round count job
-    var state = vertices
-      .select(col("id"), col("next_id"), col("offset"), col("length"), col("content"))
-      .localCheckpoint()
-    // round 0: every vertex is "changed" (signal_all, assembly_final.cpp:732)
-    var (changed, frontierSize) =
-      Eager.checkpointCounting(state.select(col("id")), lit(true))
+  def stitchIterativeFrontier(vertices: DataFrame, maxIters: Int = 64): DataFrame =
+    stitchSupersteps(vertices, maxIters, frontier = true)
+
+  /** The one superstep loop behind both schedules. A round is
+    * `state LEFT JOIN child ON next_id = c_id`, where the child side is
+    * the whole state (dense) or only the reads whose span changed last
+    * round (`_ch`, frontier); a parent with no child row keeps its span.
+    * The round's one [[Eager.checkpointCounting]] materialises the next
+    * state and counts its changed reads, which is both the loop
+    * condition and the next frontier — a merge that changes content
+    * always moves (offset, length): cases A1/A2/A3/B/C/D all grow or
+    * shift. The initial state carries `_ch = true` (signal_all,
+    * assembly_final.cpp:732), so its own checkpoint counts the vertices
+    * and an empty input runs no round.
+    *
+    * The merge hint keeps each round at 3 jobs (two shuffle map stages
+    * and the checkpoint): without it AQE demotes the join to a
+    * broadcast after both shuffles have run, which costs a 4th job.
+    */
+  private def stitchSupersteps(vertices: DataFrame, maxIters: Int,
+      frontier: Boolean): DataFrame = {
+    var (state, changed) = Eager.checkpointCounting(vertices
+      .select(col("id"), col("next_id"), col("offset"), col("length"), col("content"),
+        lit(true).as("_ch")), col("_ch"))
     var it = 0
-    while (frontierSize > 0 && it < maxIters) {
-      val active = state
-        .join(changed.select(col("id").as("cid")), col("next_id") === col("cid"), "left_semi")
-      val child = state.select(
-        col("id").as("c_id"), col("offset").as("c_offset"),
-        col("length").as("c_length"), col("content").as("c_content"))
+    while (changed > 0 && it < maxIters) {
+      val child = (if (frontier) state.where(col("_ch")) else state)
+        .select(col("id").as("c_id"), col("offset").as("c_offset"),
+          col("length").as("c_length"), col("content").as("c_content"))
+        .hint("merge")
       val acc = struct(col("offset").as("offset"), col("length").as("length"),
         col("content").as("content"))
       val n = struct(col("c_offset").as("offset"), col("c_length").as("length"),
         col("c_content").as("content"))
-      // bind the merged struct ONCE, then project its fields (the dense
-      // form's safe spelling); the pre-merge span rides the same
-      // projection so the change flag — which is both next round's
-      // frontier membership AND (counted by the checkpoint) the loop
-      // condition — costs no join and no extra job: one checkpointed
-      // frame per round feeds state update and frontier
-      val (merged, movedRows) = Eager.checkpointCounting(
-        active.join(child, col("next_id") === col("c_id"))
-          .select(col("id"), col("next_id"), stitchStep(acc, n).as("m"),
+      val merged = when(col("c_id").isNull, acc).otherwise(stitchStep(acc, n))
+      // bind the merged struct ONCE, then project its fields; the
+      // pre-merge span rides the same projection for the change flag
+      val (next, movedRows) = Eager.checkpointCounting(
+        state.join(child, col("next_id") === col("c_id"), "left")
+          .select(col("id"), col("next_id"), merged.as("m"),
             col("offset").as("p_offset"), col("length").as("p_length"))
           .select(col("id"), col("next_id"),
             col("m.offset").as("offset"),
@@ -291,16 +265,11 @@ object Assembly {
             (col("m.offset") =!= col("p_offset") ||
               col("m.length") =!= col("p_length")).as("_ch")),
         col("_ch"))
-      // next state: merged rows replace their old versions
-      val untouched = state.join(merged.select(col("id").as("mid")),
-        col("id") === col("mid"), "left_anti")
-      state = untouched.unionByName(merged.drop("_ch")).localCheckpoint()
-      // next frontier: lazy filter over the already-materialized merge
-      changed = merged.where(col("_ch")).select(col("id"))
-      frontierSize = movedRows
+      state = next
+      changed = movedRows
       it += 1
     }
-    state
+    state.drop("_ch")
   }
 
   /** Ids on the `next_id` chain starting at `source` with their hop
@@ -322,16 +291,19 @@ object Assembly {
       .localCheckpoint()
     var grew = true
     var round = 0
-    var count = 1L
     while (grew && round < maxRounds) {
+      // the drain check rides the members checkpoint: an id is newly
+      // reached when no old member row fed its group
       val stepped = members.join(jump, Seq("id"))
-        .select(col("ptr").as("id"), (col("hop") + col("d")).as("hop"))
-      members = members.union(stepped)
-        .groupBy(col("id")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint()
-      val c = members.count()
-      grew = c > count
-      count = c
+        .select(col("ptr").as("id"), (col("hop") + col("d")).as("hop"),
+          lit(false).as("_old"))
+      val (next, reached) = Eager.checkpointCounting(
+        members.withColumn("_old", lit(true)).union(stepped)
+          .groupBy(col("id"))
+          .agg(min(col("hop")).as("hop"), max(col("_old")).as("_old")),
+        !col("_old"))
+      members = next.drop("_old")
+      grew = reached > 0
       jump = jump.as("a").join(
           jump.select(col("id").as("b_id"), col("ptr").as("b_ptr"),
             col("d").as("b_d")),

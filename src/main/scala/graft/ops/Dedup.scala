@@ -285,18 +285,20 @@ object Dedup {
     * exact-Jaccard verification of candidates at 0.8.
     */
   def q31MinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val sh = hashedShingles(s, dir).cache()
+    // Eager localCheckpoint (NOT cache), here and for sigN: the
+    // shingle set feeds the signature pass and both intersection join
+    // sides, the signatures feed both band self-join sides and the
+    // sizes join. A lazy cache is materialized concurrently by both
+    // self-join sides on first action (racing block writes recompute
+    // the shingle scan twice, measured 5× slower), and one the
+    // returned plan still reads stays registered with the cache
+    // manager for the JVM's life. A checkpoint materializes once,
+    // serially, and the ContextCleaner reaps it with the plan.
+    val sh = hashedShingles(s, dir).localCheckpoint()
     // ONE partial-aggregated pass computes all 16 minima AND the doc's
     // shingle count ([[minhashSignatures]]) — a separate sizes groupBy
     // would re-scan the whole shingle set for a value this pass
-    // already walks. Eager localCheckpoint (NOT cache): the band
-    // self-join and the sizes join all read this
-    // one-narrow-row-per-doc table, and a lazy cache here gets
-    // materialized concurrently by both self-join sides on first
-    // action — racing block writes recompute the expensive shingle
-    // scan twice (measured 5× slower); the eager checkpoint
-    // materializes it exactly once, serially, and pins sh's cache in
-    // the same pass.
+    // already walks.
     val sigN = minhashSignatures(sh).localCheckpoint()
     val bands = bandRows(sigN)
     val cand = bands.as("x")
@@ -548,9 +550,10 @@ object Dedup {
       .where(col("df") <= 50).select(col("h"))
     // EAGER checkpoint, not cache: both sides of the self-join below
     // read this frame, and a lazy cache gets raced into concurrent
-    // duplicate materialization (the q31 lesson); the checkpoint also
-    // materializes shAll's cache serially as a side effect
+    // duplicate materialization (the q31 lesson). Once it holds the
+    // capped set, nothing reads shAll again, so its cache is released.
     val sh = shAll.join(rare, "h").localCheckpoint()
+    shAll.unpersist()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = sh.as("x")
       .join(sh.as("y"), col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))

@@ -12,9 +12,9 @@ object Eager {
     * columns, and the count.
     *
     * This is the drain/convergence check of the engine's counted
-    * fixpoint loops (stitch iterate and frontier, min-label CC, the
-    * graph walk, MMR, radix `headK`): the count costs no job of its
-    * own. It rides a one-boolean kernel that bumps an accumulator
+    * fixpoint loops (the stitch supersteps, path doubling, min-label
+    * CC, the graph walk, MMR, radix `headK`): the count costs no job
+    * of its own. It rides a one-boolean kernel that bumps an accumulator
     * while the checkpoint materialises the round, and the helper
     * column holding that kernel is dropped only AFTER the checkpoint,
     * so the optimizer can never prune it away and read 0. Reading the

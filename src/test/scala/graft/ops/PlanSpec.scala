@@ -76,6 +76,18 @@ class PlanSpec extends SparkSpec {
       analyzed.take(500))
   }
 
+  test("q31 and q33 leave nothing registered with the cache manager") {
+    // both read their shingle set several times; a lazy `.cache()` of it
+    // that is never released stays pinned for the JVM's life, and a
+    // second q31 then hits Spark's "Asked to cache already cached data"
+    spark.catalog.clearCache()
+    val cacheManager = spark.sharedState.cacheManager
+    Seq("q31_minhash_pairs", "q33_jaccard_pairs", "q31_minhash_pairs").foreach { q =>
+      graft.SparkEntry.queries(q)(spark, dir).collect()
+      assert(cacheManager.isEmpty, s"$q left cached data behind")
+    }
+  }
+
   test("q90/q91 ADC joins broadcast the LUT; no join ever falls back to a cartesian") {
     // the ADC design rests on the corpus side staying a code-row scan
     // joined against a BROADCAST lookup table: a plan that shuffles the
