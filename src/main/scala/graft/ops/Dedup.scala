@@ -510,9 +510,9 @@ object Dedup {
     */
   def dedupAgreementStaged(s: SparkSession, dir: String,
       work: String): DataFrame = {
-    val mh = s.read.parquet(Staged.path(work, "pairs"))
+    val mh = Staged.read(s, work, "pairs")
       .select(col("doc_a"), col("doc_b"), lit(true).as("mh"))
-    val sh = s.read.parquet(Staged.path(work, "sh_pairs"))
+    val sh = Staged.read(s, work, "sh_pairs")
       .select(col("doc_a"), col("doc_b"), lit(true).as("sh"))
     val d = t(s, dir, "documents")
       .select(col("doc_id"), md5(normText(col("text"))).as("h"))
@@ -852,7 +852,7 @@ object Dedup {
   def stageClusters(s: SparkSession, workDir: String): String = {
     val p = s"$workDir/clusters"
     if (Staged.isFresh(workDir, "clusters")) return p
-    connectedComponentsStar(s.read.parquet(Staged.path(workDir, "pairs")))
+    connectedComponentsStar(Staged.read(s, workDir, "pairs"))
       .stagePublish(workDir, "clusters")
     p
   }
@@ -861,7 +861,7 @@ object Dedup {
   def stageSurvivors(s: SparkSession, dir: String, workDir: String): String = {
     val p = s"$workDir/survivors"
     if (Staged.isFresh(workDir, "survivors")) return p
-    survivorsOf(t(s, dir, "documents"), s.read.parquet(Staged.path(workDir, "clusters")))
+    survivorsOf(t(s, dir, "documents"), Staged.read(s, workDir, "clusters"))
       .stagePublish(workDir, "survivors")
     p
   }
@@ -914,8 +914,8 @@ object Dedup {
     stagePairs(s, dir, work)
     stageClusters(s, work)
     stageSurvivors(s, dir, work)
-    val clusters = s.read.parquet(Staged.path(work, "clusters"))
-    s.read.parquet(Staged.path(work, "survivors"))
+    val clusters = Staged.read(s, work, "clusters")
+    Staged.read(s, work, "survivors")
       .join(clusters.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
@@ -969,7 +969,7 @@ object Dedup {
     val work = stageRoot(dir)
     if (!Staged.isFresh(work, "pairs_star")) stagePairsStar(s, dir, work)
     val clusters = connectedComponentsStar(
-        s.read.parquet(Staged.path(work, "pairs_star")))
+        Staged.read(s, work, "pairs_star"))
       .localCheckpoint() // survivors anti-join + label join both read it
     survivorsOf(t(s, dir, "documents"), clusters)
       .join(clusters.select(col("doc_id"), col("cluster_id")),
@@ -1000,7 +1000,7 @@ object Dedup {
     val work = stageRoot(dir)
     stagePairs(s, dir, work)
     stageClusters(s, work)
-    val clusters = s.read.parquet(Staged.path(work, "clusters"))
+    val clusters = Staged.read(s, work, "clusters")
     val members = t(s, dir, "documents").select(col("doc_id"))
       .join(clusters.select(col("doc_id"), col("cluster_id")),
         Seq("doc_id"), "left")
@@ -1040,7 +1040,7 @@ object Dedup {
     val work = stageRoot(dir)
     stagePairs(s, dir, work)
     stageClusters(s, work)
-    val clusters = s.read.parquet(Staged.path(work, "clusters"))
+    val clusters = Staged.read(s, work, "clusters")
       .select(col("doc_id"), col("cluster_id"))
     val bucket = expr(
       "cast(conv(substr(md5(cast(rep as string)), 1, 4), 16, 10) as int) % 100")
@@ -1183,14 +1183,14 @@ object Dedup {
     val nhN = t(s, dir, "documents").where(isNew)
       .select(col("doc_id"), md5(normText(col("text"))).as("nh"))
     val exact = nhN.as("n")
-      .join(s.read.parquet(Staged.path(work, "corpus_nh")).as("c"),
+      .join(Staged.read(s, work, "corpus_nh").as("c"),
         col("n.nh") === col("c.nh"))
       .groupBy(col("n.doc_id").as("doc_id"))
       .agg(min(col("c.doc_id")).as("exact_id"))
     val shN = hashedShingles(s, dir).where(isNew).localCheckpoint()
     val sigB = minhashSignatures(shN)
       .localCheckpoint() // bands + sizes both read it
-    val cSig = s.read.parquet(Staged.path(work, "corpus_sig"))
+    val cSig = Staged.read(s, work, "corpus_sig")
     val cand = bandRows(sigB).as("x")
       .join(bandRows(cSig).as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
@@ -1198,7 +1198,7 @@ object Dedup {
       .distinct()
     val inter = cand
       .join(shN.select(col("doc_id").as("na"), col("h")), "na")
-      .join(s.read.parquet(Staged.path(work, "corpus_sh"))
+      .join(Staged.read(s, work, "corpus_sh")
         .select(col("doc_id").as("ca"), col("h")), Seq("ca", "h"))
       .groupBy(col("na"), col("ca"))
       .agg(count(lit(1)).as("inter"))

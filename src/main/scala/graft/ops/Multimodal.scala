@@ -1053,9 +1053,8 @@ object Multimodal {
     // would serialize the codec map downstream; spread them — the
     // shuffle moves megabytes once, the decode it parallelizes costs
     // seconds. A production media table is multi-gigabyte and splits
-    // naturally. The version directory is immutable, so its schema
-    // memo hit spares the inference job on every warm read.
-    readParquet(s, Staged.path(work, name))
+    // naturally.
+    Staged.read(s, work, name)
       .repartition(s.sparkContext.defaultParallelism)
   }
 

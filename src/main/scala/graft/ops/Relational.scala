@@ -758,7 +758,7 @@ object Relational {
           sum(col("l_extendedprice").cast(dec)).as("sp"))
     partials(li.where(!isNew))
       .stagePublish(work, "agg_state")
-    s.read.parquet(Staged.path(work, "agg_state"))
+    Staged.read(s, work, "agg_state")
       .unionByName(partials(li.where(isNew)))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(sum(col("n")).as("n_rows"), sum(col("sq")).as("sq"),

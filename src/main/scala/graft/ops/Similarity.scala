@@ -574,7 +574,7 @@ object Similarity {
         trainCodebook(s, dir, k = adaptiveCellCount(n))
       assigned.stagePublish(workDir, "cells", gen)
       val queries = scaledVectors(s, dir)
-        .join(s.read.parquet(Staged.path(workDir, "cells")).select(col("vec_id")), "vec_id")
+        .join(Staged.read(s, workDir, "cells").select(col("vec_id")), "vec_id")
         .where(col("vec_id") < maxQueryId)
         .select(col("vec_id"), col("v"), col("nrm"))
       ivfProbes(queries, centroids, nprobe)
@@ -590,7 +590,7 @@ object Similarity {
       asg.select(col("vec_id"), col("cell").cast("int").as("cluster"))
         .stagePublish(workDir, "cells", gen)
       val queries = scaledVectors(s, dir)
-        .join(s.read.parquet(Staged.path(workDir, "cells")).select(col("vec_id")), "vec_id")
+        .join(Staged.read(s, workDir, "cells").select(col("vec_id")), "vec_id")
         .where(col("vec_id") < maxQueryId)
         .select(col("vec_id"), col("v"), col("nrm"))
       // VOLUME-MATCHED probing (see [[volumeMatchedWidth]]): scan the
@@ -615,7 +615,7 @@ object Similarity {
       asg.select(col("vec_id"), col("cell").cast("int").as("cluster"))
         .stagePublish(workDir, "cells", gen)
       val queries = scaledVectors(s, dir)
-        .join(s.read.parquet(Staged.path(workDir, "cells")).select(col("vec_id")), "vec_id")
+        .join(Staged.read(s, workDir, "cells").select(col("vec_id")), "vec_id")
         .where(col("vec_id") < maxQueryId)
         .select(col("vec_id"), col("v"), col("nrm"))
       hier3Probes(queries, c1, cents2, cents3, k2, k3,
@@ -645,7 +645,7 @@ object Similarity {
   def q78AnnIvfTrained(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     stageCells(s, dir, work)
-    val cells = s.read.parquet(Staged.path(work, "cells"))
+    val cells = Staged.read(s, work, "cells")
     val iv = scaledVectors(s, dir)
       .join(cells, "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
@@ -714,7 +714,7 @@ object Similarity {
     corpusCells.union(newCells)
       .stagePublish(work, "cells_ingest")
     val iv = ivAll
-      .join(s.read.parquet(Staged.path(work, "cells_ingest")), "vec_id")
+      .join(Staged.read(s, work, "cells_ingest"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
     val probes = iv.where(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("cluster"),
@@ -743,7 +743,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     stageCells(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
     val a = iv.select(col("cluster"), col("vec_id").as("ia"),
       col("v").as("va"), col("nrm").as("na"))
@@ -783,7 +783,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
     // exact-dup pre-collapse on the CANDIDATE side ([[dupCollapsed]] —
     // the round-14 verdict's compute-only opportunity): a dup group
@@ -829,7 +829,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
     knnGraphOf(iv, k = 3)
   }
@@ -1175,7 +1175,7 @@ object Similarity {
   def stageKnnGraph(s: SparkSession, dir: String, work: String): Unit = {
     val key = s"cells=${Staged.versionOf(work, "cells").getOrElse("absent")}"
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
       .localCheckpoint() // graph, bridges, medoids, rescore all read it
     val (graph, medoids) = deriveKnnGraph(iv)
@@ -1245,7 +1245,7 @@ object Similarity {
   def q188KnnDescent(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     ensureKnnGraph(s, dir, work)
-    s.read.parquet(Staged.path(work, "knn_graph"))
+    Staged.read(s, work, "knn_graph")
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1313,10 +1313,10 @@ object Similarity {
     ensureKnnGraph(s, dir, work)
     val key = convergedGraphKey(work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
       .localCheckpoint() // every descent round scores through it
-    val start = s.read.parquet(Staged.path(work, "knn_graph"))
+    val start = Staged.read(s, work, "knn_graph")
       .select(col("query_id"), col("neighbor_id"))
     Staged.write(knnDescentConverged(iv, start, GraphDegree),
       work, "knn_graph_conv", group = Some(key))
@@ -1589,7 +1589,7 @@ object Similarity {
     val del =
       if (masked) {
         if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-        Some(s.read.parquet(Staged.path(work, "deletes")))
+        Some(Staged.read(s, work, "deletes"))
       } else None
     val queries0 = iv.where(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -1938,10 +1938,10 @@ object Similarity {
       work: String): Unit = {
     ensureIvfIndex(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val key = compactedGraphKey(work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
       .localCheckpoint() // graph, bridges, medoids, rescore all read it
@@ -2543,9 +2543,9 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     stageCells(s, dir, work)
     ensurePq(s, dir, work)
-    val cells = s.read.parquet(Staged.path(work, "cells"))
-    val cb = s.read.parquet(Staged.path(work, "pq_codebook"))
-    val codes = s.read.parquet(Staged.path(work, "pq_codes"))
+    val cells = Staged.read(s, work, "cells")
+    val cb = Staged.read(s, work, "pq_codebook")
+    val codes = Staged.read(s, work, "pq_codes")
     val lut = adcLutFor(
       scaledVectors(s, dir).where(col("vec_id") < 20)
         .select(col("vec_id"), col("v")), cb)
@@ -2641,10 +2641,10 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     ensurePq(s, dir, work)
-    val cells = s.read.parquet(Staged.path(work, "cells"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
-    val cb = s.read.parquet(Staged.path(work, "pq_codebook"))
-    val codes = s.read.parquet(Staged.path(work, "pq_codes"))
+    val cells = Staged.read(s, work, "cells")
+    val probes = Staged.read(s, work, "probes")
+    val cb = Staged.read(s, work, "pq_codebook")
+    val codes = Staged.read(s, work, "pq_codes")
     val lut = adcLutFor(
       scaledVectors(s, dir).where(col("vec_id") < 20)
         .select(col("vec_id"), col("v")), cb)
@@ -2746,10 +2746,10 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     ensurePq(s, dir, work)
-    val cells = s.read.parquet(Staged.path(work, "cells"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
-    val cb = s.read.parquet(Staged.path(work, "pq_codebook"))
-    val codes = s.read.parquet(Staged.path(work, "pq_codes"))
+    val cells = Staged.read(s, work, "cells")
+    val probes = Staged.read(s, work, "probes")
+    val cb = Staged.read(s, work, "pq_codebook")
+    val codes = Staged.read(s, work, "pq_codes")
     val lut = adcLutFor(
       scaledVectors(s, dir).where(col("vec_id") < 20)
         .select(col("vec_id"), col("v")), cb)
@@ -2830,7 +2830,7 @@ object Similarity {
   /** The staged per-dimension (lo, step) arrays — 64 rows, a model
     * collect by construction. */
   def sq8Params(s: SparkSession, work: String): (Array[Long], Array[Long]) = {
-    val p = s.read.parquet(Staged.path(work, "sq_params")).orderBy(col("dim")).collect()
+    val p = Staged.read(s, work, "sq_params").orderBy(col("dim")).collect()
     (p.map(_.getAs[Long]("lo")),
       p.map(r => r.getAs[Long]("hi") - r.getAs[Long]("lo")))
   }
@@ -2868,7 +2868,7 @@ object Similarity {
     ensureIvfIndex(s, dir, work)
     ensureSq8(s, dir, work)
     sq8SearchOn(s, dir, work,
-      s.read.parquet(Staged.path(work, "probes")))
+      Staged.read(s, work, "probes"))
   }
 
   /** The SQ8 serving chain, given a ready probe frame (query_id,
@@ -2882,8 +2882,8 @@ object Similarity {
     */
   def sq8SearchOn(s: SparkSession, dir: String, work: String,
       probes: DataFrame, topK: Int = 5): DataFrame = {
-    val cells = s.read.parquet(Staged.path(work, "cells"))
-    val codes = s.read.parquet(Staged.path(work, "sq_codes"))
+    val cells = Staged.read(s, work, "cells")
+    val codes = Staged.read(s, work, "sq_codes")
     val (lo, st) = sq8Params(s, work)
     val q = scaledVectors(s, dir)
       .join(probes.select(col("query_id").as("vec_id")).distinct(),
@@ -2941,7 +2941,7 @@ object Similarity {
     ensureIvfIndex(s, dir, work)
     ensureSq8(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val iv = scaledVectors(s, dir)
     val (lo, st) = sq8Params(s, work)
     val queries = iv.where(col("vec_id") < 20)
@@ -2956,10 +2956,10 @@ object Similarity {
         expr("aggregate(zip_with(v, st, (x, y) -> x * y), " +
           "CAST(0 AS BIGINT), (a, b) -> a + b)").as("qssum"))
       .localCheckpoint() // probe attach + pricing + label join read it
-    val cells = s.read.parquet(Staged.path(work, "cells"))
+    val cells = Staged.read(s, work, "cells")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .join(iv.select(col("vec_id"), col("label")), "vec_id")
-    val probes = s.read.parquet(Staged.path(work, "probes"))
+    val probes = Staged.read(s, work, "probes")
       .join(broadcast(queries.select(col("query_id"), col("label"))),
         "query_id")
     val adot = lit(2L * Sq8Levels) * col("qlo") +
@@ -2968,7 +2968,7 @@ object Similarity {
       .orderBy(col("acos").desc, col("neighbor_id"))
     val shortlist = probes.join(cells, Seq("cluster", "label"))
       .where(col("vec_id") =!= col("query_id"))
-      .join(s.read.parquet(Staged.path(work, "sq_codes")), Seq("vec_id"))
+      .join(Staged.read(s, work, "sq_codes"), Seq("vec_id"))
       .where(col("rsq") > 0)
       .join(broadcast(queries.drop("label")), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -3012,7 +3012,7 @@ object Similarity {
     ensurePq(s, dir, work)
     hierPqSearchOn(s, dir, work,
       scaledVectors(s, dir).where(col("vec_id") < 20),
-      s.read.parquet(Staged.path(work, "probes_hier")))
+      Staged.read(s, work, "probes_hier"))
   }
 
   /** q136's search chain for an ARBITRARY query frame (vec_id, v[,
@@ -3027,9 +3027,9 @@ object Similarity {
     */
   def hierPqSearchOn(s: SparkSession, dir: String, work: String,
       queries: DataFrame, probes: DataFrame): DataFrame = {
-    val cells = s.read.parquet(Staged.path(work, "cells_hier"))
-    val cb = s.read.parquet(Staged.path(work, "pq_codebook"))
-    val codes = s.read.parquet(Staged.path(work, "pq_codes"))
+    val cells = Staged.read(s, work, "cells_hier")
+    val cb = Staged.read(s, work, "pq_codebook")
+    val codes = Staged.read(s, work, "pq_codes")
     val lut = adcLutFor(queries.select(col("vec_id"), col("v")), cb)
     val cand = probes.join(cells, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
@@ -3079,10 +3079,10 @@ object Similarity {
     val swept = Seq("wreport/results", "wreport/truth").forall(n =>
       Staged.isFresh(work, n) && Staged.groupOf(work, n).contains(wkey))
     if (!swept) {
-      val cells = s.read.parquet(Staged.path(work, "cells"))
-      val probes = s.read.parquet(Staged.path(work, "probes"))
-      val cb = s.read.parquet(Staged.path(work, "pq_codebook"))
-      val codes = s.read.parquet(Staged.path(work, "pq_codes"))
+      val cells = Staged.read(s, work, "cells")
+      val probes = Staged.read(s, work, "probes")
+      val cb = Staged.read(s, work, "pq_codebook")
+      val codes = Staged.read(s, work, "pq_codes")
       val lut = adcLutFor(
         scaledVectors(s, dir).where(col("vec_id") < 20)
           .select(col("vec_id"), col("v")), cb)
@@ -3134,8 +3134,8 @@ object Similarity {
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .stagePublish(work, "wreport/truth", wkey)
     }
-    val truth = s.read.parquet(Staged.path(work, "wreport/truth"))
-    val results = s.read.parquet(Staged.path(work, "wreport/results"))
+    val truth = Staged.read(s, work, "wreport/truth")
+    val results = Staged.read(s, work, "wreport/results")
     val totals = truth.agg(count(lit(1)).as("t_rows"),
       countDistinct(col("query_id")).as("nq"))
     val matched = truth.as("t")
@@ -3508,7 +3508,7 @@ object Similarity {
     val gen = Staged.newGroupId(work) // one stamp across the family
     asg.stagePublish(work, "cells_hier", gen)
     val queries = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier")).select(col("vec_id")),
+      .join(Staged.read(s, work, "cells_hier").select(col("vec_id")),
         "vec_id")
       .where(col("vec_id") < 20)
       .select(col("vec_id"), col("v"), col("nrm"))
@@ -3531,10 +3531,10 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureHierIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier")), "vec_id")
+      .join(Staged.read(s, work, "cells_hier"), "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes_hier"))
+    val probes = Staged.read(s, work, "probes_hier")
       .withColumnRenamed("cell", "cluster")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
@@ -3573,7 +3573,7 @@ object Similarity {
     val gen = Staged.newGroupId(work) // one stamp across the family
     asg.stagePublish(work, "cells_hier3", gen)
     val queries = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier3")).select(col("vec_id")),
+      .join(Staged.read(s, work, "cells_hier3").select(col("vec_id")),
         "vec_id")
       .where(col("vec_id") < 20)
       .select(col("vec_id"), col("v"), col("nrm"))
@@ -3605,7 +3605,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureHier3Index(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier3")), "vec_id")
+      .join(Staged.read(s, work, "cells_hier3"), "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
     val probes = iv.where(col("vec_id") < 20)
@@ -3624,10 +3624,10 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureHier3Index(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier3")), "vec_id")
+      .join(Staged.read(s, work, "cells_hier3"), "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes_hier3"))
+    val probes = Staged.read(s, work, "probes_hier3")
       .withColumnRenamed("cell", "cluster")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
@@ -3795,8 +3795,8 @@ object Similarity {
       probes: DataFrame, topK: Int = 5,
       cellsPath: Option[String] = None): DataFrame = {
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(
-        cellsPath.getOrElse(Staged.path(work, "cells_shard"))), "vec_id")
+      .join(cellsPath.fold(Staged.read(s, work, "cells_shard"))(
+        Tables.readParquet(s, _)), "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
     searchCells(probes, iv, topK)
@@ -4156,7 +4156,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureHierIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier")), "vec_id")
+      .join(Staged.read(s, work, "cells_hier"), "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
     val probes = iv.where(col("vec_id") < 20)
@@ -4231,7 +4231,7 @@ object Similarity {
   def q92SemanticDedup(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     if (!Staged.isFresh(work, "sem_pairs")) stageSemPairs(s, dir, work)
-    Dedup.connectedComponents(s.read.parquet(Staged.path(work, "sem_pairs")))
+    Dedup.connectedComponents(Staged.read(s, work, "sem_pairs"))
       .select(col("doc_id").as("vec_id"), col("cluster_id").as("rep_id"),
         (col("doc_id") === col("cluster_id")).as("is_survivor"))
       .orderBy(col("vec_id"))
@@ -4294,7 +4294,7 @@ object Similarity {
   def stageSemPairs(s: SparkSession, dir: String, work: String): Unit = {
     if (!Staged.isFresh(work, "cells")) stageCells(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .where(col("nrm") > 0) // NULL cosine with everyone: never an edge
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
       .localCheckpoint() // both self-join sides read it (q31 race note)
@@ -4355,13 +4355,13 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     if (!Staged.isFresh(work, "sem_pairs")) stageSemPairs(s, dir, work)
     val nonSurvivors =
-      Dedup.connectedComponents(s.read.parquet(Staged.path(work, "sem_pairs")))
+      Dedup.connectedComponents(Staged.read(s, work, "sem_pairs"))
         .where(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id").as("vec_id"))
     prototypePruneOf(
       scaledVectors(s, dir).where(col("nrm") > 0)
         .select(col("vec_id"), col("v"), col("nrm"))
-        .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+        .join(Staged.read(s, work, "cells"), "vec_id")
         .join(nonSurvivors, Seq("vec_id"), "left_anti"))
   }
 
@@ -4407,7 +4407,7 @@ object Similarity {
   private def semanticDeconOn(s: SparkSession, dir: String,
       work: String): DataFrame = {
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
       .localCheckpoint() // both split sides read it (q31 race note)
     val isBench = col("vec_id") % 10 === 7
@@ -4494,7 +4494,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     tombstoneSearchOn(s, dir, work,
-      s.read.parquet(Staged.path(work, "probes")))
+      Staged.read(s, work, "probes"))
   }
 
   /** The tombstone-MASKED serving chain, given a ready probe frame
@@ -4510,9 +4510,9 @@ object Similarity {
   def tombstoneSearchOn(s: SparkSession, dir: String, work: String,
       probes: DataFrame, topK: Int = 5): DataFrame = {
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
     val pr = probes
@@ -4542,8 +4542,8 @@ object Similarity {
       work: String): Unit = {
     ensureIvfIndex(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
-    s.read.parquet(Staged.path(work, "cells"))
+    val deletes = Staged.read(s, work, "deletes")
+    Staged.read(s, work, "cells")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .stagePublish(work, "cells_compact")
     // truncate the consumed feed — to a NEW path: the un-truncated
@@ -4576,11 +4576,11 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     if (!Staged.isFresh(work, "cells_compact"))
       stageCompactedIndex(s, dir, work)
-    val cc = s.read.parquet(Staged.path(work, "cells_compact"))
+    val cc = Staged.read(s, work, "cells_compact")
     val iv = scaledVectors(s, dir)
       .join(cc, "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
+    val probes = Staged.read(s, work, "probes")
       .join(cc.select(col("vec_id").as("query_id")),
         Seq("query_id"), "left_semi")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
@@ -4614,13 +4614,13 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureHier3Index(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells_hier3")), "vec_id")
+      .join(Staged.read(s, work, "cells_hier3"), "vec_id")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes_hier3"))
+    val probes = Staged.read(s, work, "probes_hier3")
       .withColumnRenamed("cell", "cluster")
       .join(broadcast(deletes.withColumnRenamed("vec_id", "query_id")),
         Seq("query_id"), "left_anti")
@@ -4655,7 +4655,7 @@ object Similarity {
     prototypePruneOf(
       scaledVectors(s, dir).where(col("nrm") > 0)
         .select(col("vec_id"), col("v"), col("nrm"))
-        .join(s.read.parquet(Staged.path(work, "cells_hier3"))
+        .join(Staged.read(s, work, "cells_hier3")
           .select(col("vec_id"), col("cell").as("cluster")), "vec_id"))
   }
 
@@ -4710,9 +4710,9 @@ object Similarity {
   def q161CodebookRefresh(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     if (!Staged.isFresh(work, "cb_sums")) stageCodebookSums(s, dir, work)
-    mergedCodebook(s.read.parquet(Staged.path(work, "cb_sums")),
+    mergedCodebook(Staged.read(s, work, "cb_sums"),
       batchSumsOf(scaledVectors(s, dir)
-        .join(s.read.parquet(Staged.path(work, "cb_batch")), "vec_id")))
+        .join(Staged.read(s, work, "cb_batch"), "vec_id")))
   }
 
   /** The batch side's per-(cluster, dim) integer sufficient statistics
@@ -4785,7 +4785,7 @@ object Similarity {
     ensureIvfIndex(s, dir, work)
     clusterSampleElect(
       t(s, dir, "embeddings").select(col("vec_id"), col("label"))
-        .join(s.read.parquet(Staged.path(work, "cells")), "vec_id"))
+        .join(Staged.read(s, work, "cells"), "vec_id"))
   }
 
   /** The salted md5-derived 60-bit sampling key — a pure function of
@@ -4901,7 +4901,7 @@ object Similarity {
     prototypePruneOf(
       scaledVectors(s, dir).where(col("nrm") > 0)
         .select(col("vec_id"), col("v"), col("nrm"))
-        .join(s.read.parquet(Staged.path(work, "cells")), "vec_id"))
+        .join(Staged.read(s, work, "cells"), "vec_id"))
   }
 
   /** The prototype-pruning plan over rows carrying
@@ -5095,7 +5095,7 @@ object Similarity {
     prototypePruneAuto(
       scaledVectors(s, dir).where(col("nrm") > 0)
         .select(col("vec_id"), col("v"), col("nrm"))
-        .join(s.read.parquet(Staged.path(work, "cells")), "vec_id"))
+        .join(Staged.read(s, work, "cells"), "vec_id"))
   }
 
   /** Column wrapper for the codegen'd order-preserving double→bits
@@ -5129,7 +5129,7 @@ object Similarity {
     prototypePruneRadixKeep(
       scaledVectors(s, dir).where(col("nrm") > 0)
         .select(col("vec_id"), col("v"), col("nrm"))
-        .join(s.read.parquet(Staged.path(work, "cells")), "vec_id"))
+        .join(Staged.read(s, work, "cells"), "vec_id"))
   }
 
   /** q172 — q79's multi-probe search read through the GROUP-CONSISTENT
@@ -5214,7 +5214,7 @@ object Similarity {
   private def stagedLabeledCorpus(s: SparkSession, dir: String,
       work: String): DataFrame =
     scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("label"), col("cluster"), col("v"),
         col("nrm"))
 
@@ -5311,7 +5311,7 @@ object Similarity {
     ensureHierIndex(s, dir, work)
     ensurePq(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val iv = scaledVectors(s, dir)
     val queries = iv.where(col("vec_id") < 20)
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
@@ -5375,22 +5375,22 @@ object Similarity {
     ensureShardedIndex(s, dir, work)
     ensurePq(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val iv = scaledVectors(s, dir)
     val queries = iv.where(col("vec_id") < 20)
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .localCheckpoint() // LUT + probe attach + final label join read it
-    val cells = s.read.parquet(Staged.path(work, "cells_shard"))
+    val cells = Staged.read(s, work, "cells_shard")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .join(iv.select(col("vec_id"), col("label")), "vec_id")
     val lut = adcLutFor(queries.select(col("vec_id"), col("v")),
-      s.read.parquet(Staged.path(work, "pq_codebook")))
-    val probes = s.read.parquet(Staged.path(work, "probes_shard"))
+      Staged.read(s, work, "pq_codebook"))
+    val probes = Staged.read(s, work, "probes_shard")
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         col("label"))), "query_id")
     val cand = probes.join(cells, Seq("cell", "label"))
       .where(col("vec_id") =!= col("query_id"))
-      .join(s.read.parquet(Staged.path(work, "pq_codes")), Seq("vec_id"))
+      .join(Staged.read(s, work, "pq_codes"), Seq("vec_id"))
     val res = rerankExact(s, dir,
       adcRank(cand, lut, topK = RerankShortlist), topK = 5)
     res.join(broadcast(queries.select(col("vec_id").as("query_id"),
@@ -5437,7 +5437,7 @@ object Similarity {
   def q159MatryoshkaServing(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
-    matryoshkaSearchOn(s, dir, work, s.read.parquet(Staged.path(work, "probes")))
+    matryoshkaSearchOn(s, dir, work, Staged.read(s, work, "probes"))
   }
 
   /** The q159 search given a ready probe frame (query_id, cluster) —
@@ -5451,7 +5451,7 @@ object Similarity {
       probes: DataFrame): DataFrame = {
     val iv = scaledVectors(s, dir)
     val corpus = iv.select(col("vec_id"), col("v"))
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
     val p = probes
       .join(iv.select(col("vec_id").as("query_id"), col("v")),
         "query_id")
@@ -5547,9 +5547,9 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
+    val probes = Staged.read(s, work, "probes")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
       .select(col("query_id"), col("cluster"),
@@ -5637,12 +5637,12 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     if (!Staged.isFresh(work, "deletes")) stageDeletes(s, dir, work)
-    val deletes = s.read.parquet(Staged.path(work, "deletes"))
+    val deletes = Staged.read(s, work, "deletes")
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
+    val probes = Staged.read(s, work, "probes")
       .join(broadcast(deletes.withColumnRenamed("vec_id", "query_id")),
         Seq("query_id"), "left_anti")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
@@ -5695,9 +5695,9 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
+    val probes = Staged.read(s, work, "probes")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
       .select(col("query_id"), col("cluster"),
@@ -5763,9 +5763,9 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     ensureIvfIndex(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(Staged.path(work, "probes"))
+    val probes = Staged.read(s, work, "probes")
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
       .select(col("query_id"), col("cluster"),
@@ -5779,7 +5779,7 @@ object Similarity {
       .select(col("doc_id").as("query_id"), col("h"))
     val lw = Window.partitionBy(col("query_id"))
       .orderBy(col("n_overlap").desc, col("doc_id"))
-    val lex = s.read.parquet(Staged.path(work, "corpus_sh")).join(broadcast(qsh), "h")
+    val lex = Staged.read(s, work, "corpus_sh").join(broadcast(qsh), "h")
       .where(col("doc_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("n_overlap"))
@@ -5838,7 +5838,7 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     stageCells(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(Staged.path(work, "cells")), "vec_id")
+      .join(Staged.read(s, work, "cells"), "vec_id")
       .select(col("vec_id"), col("label"), col("cluster"), col("v"),
         col("nrm"))
       .localCheckpoint() // probe + corpus sides both read it (q31 note)
@@ -5991,7 +5991,7 @@ object Similarity {
           // post-filter — the ablation row prices 20 query groups,
           // never the whole corpus's windows
           knnGraphOf(scaledVectors(ss, d)
-              .join(ss.read.parquet(Staged.path(w, "cells")), "vec_id")
+              .join(Staged.read(ss, w, "cells"), "vec_id")
               .select(col("vec_id"), col("cluster"), col("v"),
                 col("nrm")),
             k = GraphDegree, maxQueryId = Some(20L))
@@ -6017,7 +6017,7 @@ object Similarity {
         (ss: SparkSession, d: String) => {
           val w = Dedup.stageRoot(d)
           ensureConvergedKnnGraph(ss, d, w)
-          ss.read.parquet(Staged.path(w, "knn_graph_conv"))
+          Staged.read(ss, w, "knn_graph_conv")
             .where(col("query_id") < 20)
         },
         Seq("cells", "knn_graph_conv")),
@@ -6040,7 +6040,7 @@ object Similarity {
           col("rank"), col("neighbor_id")).localCheckpoint()
         Staged.write(res, work, asset, group = Some(key))
       }
-      s.read.parquet(Staged.path(work, asset))
+      Staged.read(s, work, asset)
     }.reduce(_ unionByName _)
       .stagePublish(work, "recall/results")
     // ground truth depends on the embeddings alone, which the stage
@@ -6077,8 +6077,8 @@ object Similarity {
     * in SCALING.md measures the difference.
     */
   def recallReportStaged(s: SparkSession, work: String): DataFrame = {
-    val truth = s.read.parquet(Staged.path(work, "recall/truth"))
-    val results = s.read.parquet(Staged.path(work, "recall/results"))
+    val truth = Staged.read(s, work, "recall/truth")
+    val results = Staged.read(s, work, "recall/results")
     val totals = truth.agg(count(lit(1)).as("t_rows"),
       countDistinct(col("query_id")).as("nq"))
     val matched = truth.as("t")
@@ -6256,8 +6256,8 @@ object Similarity {
           (col("tot").cast("double") / col("n_vectors").cast("double"))
             .as("avg_sq_dist"))
     }
-    val moved = s.read.parquet(Staged.path(work, "compact/cells_before")).as("b")
-      .join(s.read.parquet(Staged.path(work, "compact/cells_after")).as("a"), "vec_id")
+    val moved = Staged.read(s, work, "compact/cells_before").as("b")
+      .join(Staged.read(s, work, "compact/cells_after").as("a"), "vec_id")
       .agg(sum(when(col("b.cluster") =!= col("a.cluster"), 1L).otherwise(0L))
         .as("n_moved"))
     phase("before").unionByName(phase("after"))

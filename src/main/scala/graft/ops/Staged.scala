@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
@@ -130,6 +130,14 @@ object Staged {
       else link.toString
     } catch { case _: Throwable => link.toString }
   }
+
+  /** Read the asset's current version — the one staged-read path.
+    * The resolved `v=N` directory is immutable, so
+    * [[Tables.readParquet]]'s schema memo makes a warm read run no
+    * schema-inference job.
+    */
+  def read(s: SparkSession, work: String, name: String): DataFrame =
+    Tables.readParquet(s, path(work, name))
 
   /** Claim a fresh immutable version directory for `name` — the
     * writer fills it, then [[commit]]s. Claiming is an atomic

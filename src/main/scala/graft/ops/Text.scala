@@ -1890,7 +1890,7 @@ object Text {
     // tokenizer is stale — the apply row's warm cost is the encode,
     // not a retrain per invocation
     if (!Staged.isFresh(work, "bpe_merges")) q116BpeTrain(s, dir)
-    val merges = s.read.parquet(Staged.path(work, "bpe_merges"))
+    val merges = Staged.read(s, work, "bpe_merges")
       .orderBy(col("round"))
       .select(col("w1"), col("w2")).collect()
     val init = t(s, dir, "documents")
@@ -2001,7 +2001,7 @@ object Text {
   def q182MaxmatchTokenize(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     ensureMaxMatchVocab(s, dir, work)
-    val toks = s.read.parquet(Staged.path(work, "mm_vocab"))
+    val toks = Staged.read(s, work, "mm_vocab")
       .select(col("tok")).orderBy(col("tok"))
       .collect().map(_.getString(0)) // model-sized tokenizer artifact
     wordTypeCounts(s, dir)
@@ -2265,7 +2265,7 @@ object Text {
     if (!Staged.isFresh(work, "bpe_merges")) q116BpeTrain(s, dir) // guarded: stages bpe_merges once
     q96VocabBuild(s, dir).select(col("token_id"), col("token"))
       .stagePublish(work, "vocab")
-    val merges = s.read.parquet(Staged.path(work, "bpe_merges"))
+    val merges = Staged.read(s, work, "bpe_merges")
       .orderBy(col("round"))
       .select(col("w1"), col("w2")).collect()
     val init = t(s, dir, "documents")
@@ -2274,7 +2274,7 @@ object Text {
       df.withColumn("norm",
         bpeMergeStep(col("norm"), lit(r.getString(0)), lit(r.getString(1))))
     }
-    val vocab = s.read.parquet(Staged.path(work, "vocab"))
+    val vocab = Staged.read(s, work, "vocab")
     encoded
       .select(col("doc_id"),
         posexplode(split(col("norm"), " ")).as(Seq("pos", "tok")))
@@ -2541,14 +2541,14 @@ object Text {
     val counts = stats.groupBy(col("lang")).agg(
       count(lit(1)).as("batch_docs"), sum(col("ntok")).as("btok"))
     val dup = stats
-      .join(s.read.parquet(Staged.path(work, "corpus_nh")).select(col("nh")).distinct(),
+      .join(Staged.read(s, work, "corpus_nh").select(col("nh")).distinct(),
         Seq("nh"), "left_semi")
       .groupBy(col("lang")).agg(count(lit(1)).as("dup_docs"))
     val bw = b.select(col("lang"),
         explode(split(col("norm"), " ")).as("w")).distinct()
       .localCheckpoint() // anti-join + denominator both read it
     val newWords = bw
-      .join(s.read.parquet(Staged.path(work, "corpus_vocab")), Seq("lang", "w"),
+      .join(Staged.read(s, work, "corpus_vocab"), Seq("lang", "w"),
         "left_anti")
       .groupBy(col("lang")).agg(count(lit(1)).as("new_words"))
     val batchWords = bw.groupBy(col("lang"))
@@ -2557,7 +2557,7 @@ object Text {
       .join(dup, Seq("lang"), "left")
       .join(newWords, Seq("lang"), "left")
       .join(batchWords, Seq("lang"), "left")
-      .join(s.read.parquet(Staged.path(work, "corpus_stats")), Seq("lang"), "left")
+      .join(Staged.read(s, work, "corpus_stats"), Seq("lang"), "left")
       .select(col("lang"), col("batch_docs"),
         when(col("corpus_docs") > 0,
           col("ctok").cast("double") / col("corpus_docs").cast("double"))

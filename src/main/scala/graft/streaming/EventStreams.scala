@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import java.sql.Timestamp
 
@@ -19,6 +19,31 @@ import java.sql.Timestamp
   * Scale notes: each op states its state-store footprint — the thing
   * that actually limits a 1000-executor streaming job. Watermarks bound
   * state; keys partition it.
+  *
+  * The ingest and serving twins keep their state in parquet logs, not
+  * in the state store, and drain with `Trigger.AvailableNow` through
+  * [[drain]]. `foreachBatch` is at-least-once: a batch retried after
+  * its write but before its offset commit, or a whole feed replayed
+  * through a fresh checkpoint, runs again. Every twin is therefore
+  * effectively-once by CONTENT, under one contract:
+  *
+  *  1. in-batch dedup — an at-least-once source can repeat a row
+  *     inside one batch, so each twin first folds its batch to one row
+  *     per key (`dropDuplicates`, or a deterministic MAX fold where a
+  *     conflicting redelivery must resolve the same under any
+  *     batching);
+  *  2. anti-join by content — [[unseen]] drops the rows whose keys
+  *     the log already holds, so a replay appends nothing;
+  *  3. evaluate before append — the anti-join reads the log the append
+  *     then writes, so the frame is `localCheckpoint`ed first
+  *     (read-your-own-writes);
+  *  4. key log last — a twin that writes several logs or assets
+  *     appends its idempotence key log after all of them, and its
+  *     earlier writes tolerate a replay, so a crash between two writes
+  *     is healed by redelivery rather than frozen.
+  *
+  * [[appendOnce]] is the whole contract for a twin with one log;
+  * [[logged]] is the one existence rule for a log or staged asset.
   */
 object EventStreams {
 
@@ -117,11 +142,8 @@ object EventStreams {
     */
   def parquetSink(events: DataFrame, path: String,
       checkpoint: String): StreamingQuery =
-    events.writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(events.writeStream.format("parquet").option("path", path),
+      checkpoint)
 
   case class Scd2Closed(user_id: Long, version: Long, state: String,
       valid_from_us: Long, valid_to_us: Long, n_events: Long)
@@ -182,6 +204,120 @@ object EventStreams {
       }
   }
 
+  /** The one AvailableNow drain: set the checkpoint, process
+    * everything available in bounded micro-batches, stop. */
+  private def drain(sink: DataStreamWriter[Row],
+      checkpoint: String): StreamingQuery =
+    sink.option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** [[drain]] with `body` run on each micro-batch and its id. */
+  private def drain(input: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(input.writeStream.foreachBatch(body), checkpoint)
+
+  /** The log or staged asset at `path`, if it holds data. A directory
+    * with no visible (not `_`- or `.`-prefixed) entry counts as
+    * absent: a first append that crashed leaves only `_temporary/`,
+    * which Spark cannot infer a schema from, and reading it would
+    * fail every later batch. The probe goes through the Hadoop
+    * FileSystem of the path itself, so it holds on HDFS/S3 as on local
+    * disk.
+    */
+  private def logged(s: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val visible = fs.exists(p) && fs.listStatus(p).exists { f =>
+      val n = f.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (visible) Some(graft.ops.Tables.readParquet(s, path)) else None
+  }
+
+  /** `df` minus its rows whose `keys` appear in `seen` — the one
+    * idempotence anti-join. `seen` is cut to its distinct keys: the
+    * anti-join's result does not depend on duplicates there, and the
+    * distinct bounds a log whose key repeats (one PQ code row per
+    * subspace, several result rows per query).
+    */
+  private def unseen(df: DataFrame, seen: DataFrame,
+      keys: String*): DataFrame =
+    df.join(seen.select(keys.map(col): _*).distinct(), keys, "left_anti")
+
+  /** [[unseen]] against the log at `path`; all of `df` while there is
+    * none. */
+  private def unseen(df: DataFrame, path: String,
+      keys: String*): DataFrame =
+    logged(df.sparkSession, path).fold(df)(unseen(df, _, keys: _*))
+
+  /** A one-log twin: per micro-batch, `rows` computes the batch's
+    * rows, [[unseen]] drops those whose `keys` the log at `path`
+    * already holds, and the rest is evaluated, then appended. */
+  private def appendOnce(input: DataFrame, checkpoint: String,
+      path: String, keys: String*)(
+      rows: (DataFrame, Long) => DataFrame): StreamingQuery =
+    drain(input, checkpoint) { (batch, id) =>
+      unseen(rows(batch, id), path, keys: _*)
+        .localCheckpoint() // read-your-own-writes: evaluate, then append
+        .write.mode("append").parquet(path)
+    }
+
+  /** Fold `edges` into the versioned star archive `name`: the previous
+    * star ∪ edges re-contract through
+    * [[graft.ops.Dedup.connectedComponentsStar]] and republish. The
+    * fold is insert-monotone, so any batch split — and any replay —
+    * reaches the same star. The fold input is evaluated before the
+    * publish (read-your-own-writes; the versioned publish also pins
+    * the read's v=N dir).
+    */
+  private def foldStar(edges: DataFrame, stagedDir: String,
+      name: String): Unit = {
+    import graft.ops.{Dedup, Staged}
+    val folded = logged(edges.sparkSession, Staged.path(stagedDir, name))
+      .fold(edges)(_.union(edges)).localCheckpoint()
+    val star =
+      if (folded.isEmpty) folded
+      else Dedup.connectedComponentsStar(folded)
+        .where(col("doc_id") =!= col("cluster_id"))
+        .select(col("cluster_id").as("doc_a"), col("doc_id").as("doc_b"))
+    Staged.write(star.orderBy(col("doc_a"), col("doc_b")), stagedDir, name)
+  }
+
+  /** A batch's assignable vectors (nrm > 0; a zero vector has no
+    * nearest cell), one row per vec_id. */
+  private def assignable(batch: DataFrame): DataFrame =
+    batch.where(col("nrm") > 0).dropDuplicates("vec_id")
+
+  /** The nprobe flat-centroid cells of each query (no shuffle). */
+  private def probesOf(q: DataFrame, centroids: Array[Array[Double]],
+      nprobe: Int): DataFrame =
+    graft.ops.Similarity.ivfProbes(q, centroids, nprobe)
+      .select(col("query_id"), col("cluster"))
+
+  /** The graph-walk serving twins: the served log is consulted BEFORE
+    * the walk, not after. The walk loop's per-round checkpoints run
+    * eagerly, so a redelivered query filtered at the end would still
+    * pay the whole rounds×beam traversal to append nothing; an
+    * all-replay batch skips the walk entirely. `serve` gets the
+    * session, the unserved queries and their probes.
+    */
+  private def walkOnce(queries: DataFrame, path: String,
+      centroids: Array[Array[Double]], nprobe: Int, checkpoint: String)(
+      serve: (SparkSession, DataFrame, DataFrame) => DataFrame)
+      : StreamingQuery =
+    drain(queries, checkpoint) { (batch, _) =>
+      val q0 = assignable(batch)
+      val q = logged(batch.sparkSession, path)
+        .fold(q0)(log => unseen(q0,
+          log.withColumnRenamed("query_id", "vec_id"), "vec_id"))
+        .localCheckpoint() // probes + the walk read it
+      if (!q.isEmpty)
+        serve(batch.sparkSession, q, probesOf(q, centroids, nprobe))
+          .localCheckpoint()
+          .write.mode("append").parquet(path)
+    }
+
   /** Streaming exact-dedup ingestion — the q48 nightly-batch shape
     * promoted to a continuous stream: each micro-batch of documents is
     * deduped WITHIN itself (min doc_id per normalized-content hash,
@@ -191,9 +327,8 @@ object EventStreams {
     * — the index the stream maintains and every later batch consumes.
     * With batches arriving in doc_id order, greedy first-wins equals
     * q30's global min-id election, which the spec asserts on the real
-    * documents table; exactly-once comes from foreachBatch riding the
-    * checkpoint (a drained AvailableNow re-run appends nothing —
-    * asserted).
+    * documents table; a drained AvailableNow re-run appends nothing
+    * (asserted).
     *
     * Scale shape per batch: one hash groupBy of the BATCH (small), one
     * anti-join against the staged parquet keyed on the digest — the
@@ -202,46 +337,16 @@ object EventStreams {
     * parquet, not the state store: a restart resumes from the digest
     * table + checkpoint, and the table is directly queryable.
     */
-  /** Storage-agnostic existence probe for a staged table: goes through
-    * the Hadoop FileSystem resolved from the path itself, so the
-    * anti-join guard engages on HDFS/S3 exactly as on local disk — a
-    * java.io.File probe would silently report "absent" on any remote
-    * filesystem and re-append every batch.
-    */
-  private def stagedExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   def dedupIngest(docs: DataFrame, stagedDir: String,
-      checkpoint: String): StreamingQuery = {
-    import org.apache.spark.sql.DataFrame
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val digests = batch
-          .select(col("doc_id"),
-            md5(graft.ops.Text.normText(col("text"))).as("norm_hash"))
-          .groupBy(col("norm_hash"))
-          .agg(min(col("doc_id")).as("doc_id"))
-        val path = s"$stagedDir/corpus_digests"
-        val existing =
-          if (stagedExists(s, path)) s.read.parquet(path)
-          else s.emptyDataFrame.select(lit("").as("norm_hash"),
-            lit(0L).as("doc_id")).limit(0)
-        digests
-          .join(existing.select(col("norm_hash")), Seq("norm_hash"),
-            "left_anti")
-          // the anti-join must fully evaluate BEFORE the append opens
-          // the same path for writing (read-your-own-writes hazard)
-          .localCheckpoint()
-          .write.mode("append").parquet(path)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    appendOnce(docs, checkpoint, s"$stagedDir/corpus_digests",
+        "norm_hash") { (batch, _) =>
+      batch
+        .select(col("doc_id"),
+          md5(graft.ops.Text.normText(col("text"))).as("norm_hash"))
+        .groupBy(col("norm_hash"))
+        .agg(min(col("doc_id")).as("doc_id"))
+    }
 
   /** Streaming ingest twin of the PACKING family (q177–q179): a
     * continuous corpus feed folds per-doc token counts into a durable
@@ -269,42 +374,26 @@ object EventStreams {
     */
   def packIngestStream(docs: DataFrame, stagedDir: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // in-batch replays fold by MAX count, not dropDuplicates: two
-        // deliveries of one doc_id with CONFLICTING text are a feed
-        // bug, but the log must still be deterministic under them
-        // (dropDuplicates keeps an arbitrary row). ACROSS batches the
-        // rule is ARRIVAL-INDEPENDENT (the round-16 unification —
-        // previously first-write-wins, which made a conflicting
-        // feed's survivor depend on where the batch boundary fell):
-        // identical redeliveries drop via the content-keyed anti-join
-        // below, a conflicting redelivery APPENDS, and readers
-        // resolve per doc by the SAME MAX fold
-        // ([[resolvedPackCounts]]) — so resolved log content is the
-        // per-key maximum over every row ever delivered, identical
-        // under ANY batching, while the log file stays append-only.
-        // IngestRebatchSpec pins the two-batchings identity.
-        val counts = graft.ops.Text.tokenCountsOf(batch)
-          .groupBy(col("doc_id"))
-          .agg(max(col("n_tokens")).as("n_tokens"))
-        val path = s"$stagedDir/pack_counts"
-        val existing =
-          if (stagedExists(s, path)) s.read.parquet(path)
-          else s.emptyDataFrame.select(lit(0L).as("doc_id"),
-            lit(0L).as("n_tokens")).limit(0)
-        counts
-          .join(existing, Seq("doc_id", "n_tokens"), "left_anti")
-          // fully evaluate before appending to the same path
-          // (read-your-own-writes hazard — the dedupIngest note)
-          .localCheckpoint()
-          .write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    // in-batch replays fold by MAX count, not dropDuplicates: two
+    // deliveries of one doc_id with CONFLICTING text are a feed
+    // bug, but the log must still be deterministic under them
+    // (dropDuplicates keeps an arbitrary row). ACROSS batches the
+    // rule is ARRIVAL-INDEPENDENT (the round-16 unification —
+    // previously first-write-wins, which made a conflicting
+    // feed's survivor depend on where the batch boundary fell):
+    // identical redeliveries drop via the content-keyed anti-join,
+    // a conflicting redelivery APPENDS, and readers
+    // resolve per doc by the SAME MAX fold
+    // ([[resolvedPackCounts]]) — so resolved log content is the
+    // per-key maximum over every row ever delivered, identical
+    // under ANY batching, while the log file stays append-only.
+    // IngestRebatchSpec pins the two-batchings identity.
+    appendOnce(docs, checkpoint, s"$stagedDir/pack_counts",
+        "doc_id", "n_tokens") { (batch, _) =>
+      graft.ops.Text.tokenCountsOf(batch)
+        .groupBy(col("doc_id"))
+        .agg(max(col("n_tokens")).as("n_tokens"))
+    }
 
   /** The read-side resolve of [[packIngestStream]]'s count log: one
     * row per doc_id, conflicts folded by the same MAX the in-batch
@@ -358,39 +447,27 @@ object EventStreams {
     * two-batchings identity.
     */
   def videoHashIngestStream(hashes: DataFrame, stagedDir: String,
-      checkpoint: String): StreamingQuery =
-    hashes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // deterministic in-batch replay fold: the SAME struct-MAX rule
-        // the read-side resolver applies, so in-batch and cross-batch
-        // redeliveries resolve identically (arrival-independence)
-        val rows = batch
-          .select(col("doc_id"), col("frame_idx"),
-            struct(col("h0"), col("h1")).as("hs"))
-          .groupBy(col("doc_id"), col("frame_idx"))
-          .agg(max(col("hs")).as("hs"))
-          .select(col("doc_id"), col("frame_idx"),
-            col("hs.h0").as("h0"), col("hs.h1").as("h1"))
-        val path = s"$stagedDir/video_frame_hashes"
-        val existing =
-          if (stagedExists(s, path)) requireFrameHashSchema(
-            s.read.parquet(path), "videoHashIngestStream")
-          else rows.limit(0)
-        rows
-          // content-keyed anti-join: identical redeliveries drop,
-          // conflicting ones append and resolve at read time
-          .join(existing,
-            Seq("doc_id", "frame_idx", "h0", "h1"), "left_anti")
-          // fully evaluate before appending to the same path
-          // (read-your-own-writes hazard — the dedupIngest note)
-          .localCheckpoint()
-          .write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery = {
+    val path = s"$stagedDir/video_frame_hashes"
+    // content-keyed: identical redeliveries drop, conflicting ones
+    // append and resolve at read time
+    appendOnce(hashes, checkpoint, path,
+        "doc_id", "frame_idx", "h0", "h1") { (batch, _) =>
+      // a legacy-format log fails by name before the anti-join
+      logged(batch.sparkSession, path)
+        .foreach(requireFrameHashSchema(_, "videoHashIngestStream"))
+      // deterministic in-batch replay fold: the SAME struct-MAX rule
+      // the read-side resolver applies, so in-batch and cross-batch
+      // redeliveries resolve identically (arrival-independence)
+      batch
+        .select(col("doc_id"), col("frame_idx"),
+          struct(col("h0"), col("h1")).as("hs"))
+        .groupBy(col("doc_id"), col("frame_idx"))
+        .agg(max(col("hs")).as("hs"))
+        .select(col("doc_id"), col("frame_idx"),
+          col("hs.h0").as("h0"), col("hs.h1").as("h1"))
+    }
+  }
 
   /** Schema guard for the frame-hash log: a log written by the
     * retired (doc_id, frame_idx, h) 64-bit format would make the
@@ -463,72 +540,49 @@ object EventStreams {
     */
   def neardupStarStream(docs: DataFrame, stagedDir: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import graft.ops.{Dedup, Staged}
-        val sigPath = s"$stagedDir/neardup_sigs"
-        val shPath = s"$stagedDir/neardup_shingles"
-        val starName = "pairs_star_stream"
-        val b0 = batch.dropDuplicates("doc_id")
-        val bNew = (if (stagedExists(s, sigPath))
-            b0.join(s.read.parquet(sigPath).select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-          else b0).localCheckpoint() // shingle + signature passes read it
-        val shNew = Dedup.hashedShinglesOf(bNew).localCheckpoint()
-        val sigNew = Dedup.minhashSignatures(shNew).localCheckpoint()
-        val sigOld =
-          if (stagedExists(s, sigPath)) s.read.parquet(sigPath)
-          else sigNew.limit(0)
-        val shOld =
-          if (stagedExists(s, shPath)) s.read.parquet(shPath)
-          else shNew.limit(0)
-        val bandsNew = Dedup.bandRows(sigNew)
-        val bandsAll = bandsNew.union(Dedup.bandRows(sigOld))
-        // new×(new ∪ old): least/greatest normalizes orientation, so a
-        // new×new bucket pair (seen from both sides) dedups in the
-        // distinct — exactly q31's (doc_a < doc_b) candidate set
-        val cand = bandsNew.as("x").join(bandsAll.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") =!= col("y.doc_id"))
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("db"))
-          .distinct()
-        val shAll = shNew.union(shOld) // cheap re-scan: ckpt + parquet
-        val inter = cand
-          .join(shAll.select(col("doc_id").as("da"), col("h")), "da")
-          .join(shAll.select(col("doc_id").as("db"), col("h")), Seq("db", "h"))
-          .groupBy(col("da"), col("db"))
-          .agg(count(lit(1)).as("inter"))
-        val sizes = sigNew.select(col("doc_id"), col("n"))
-          .union(sigOld.select(col("doc_id"), col("n")))
-        val newEdges = Dedup.scoredPairs(inter, sizes, 0.8)
-          .select(col("doc_a"), col("doc_b"))
-        val prev =
-          if (stagedExists(s, s"$stagedDir/$starName"))
-            s.read.parquet(Staged.path(stagedDir, starName))
-          else newEdges.limit(0)
-        // evaluate the fold input fully BEFORE republishing the asset
-        // it reads (read-your-own-writes; the versioned publish also
-        // pins prev's v=N dir, belt and braces)
-        val folded = prev.union(newEdges).localCheckpoint()
-        val star =
-          if (folded.isEmpty) folded
-          else Dedup.connectedComponentsStar(folded)
-            .where(col("doc_id") =!= col("cluster_id"))
-            .select(col("cluster_id").as("doc_a"),
-              col("doc_id").as("doc_b"))
-        Staged.write(star.orderBy(col("doc_a"), col("doc_b")),
-          stagedDir, starName)
-        // logs append LAST — after every consumer above evaluated
-        sigNew.write.mode("append").parquet(sigPath)
-        shNew.write.mode("append").parquet(shPath)
-        ()
-      }
-      .start()
+    drain(docs, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      import graft.ops.Dedup
+      val sigPath = s"$stagedDir/neardup_sigs"
+      val shPath = s"$stagedDir/neardup_shingles"
+      val bNew = unseen(batch.dropDuplicates("doc_id"), sigPath, "doc_id")
+        .localCheckpoint() // shingle + signature passes read it
+      val shNew = Dedup.hashedShinglesOf(bNew).localCheckpoint()
+      val sigNew = Dedup.minhashSignatures(shNew).localCheckpoint()
+      val sigOld = logged(s, sigPath).getOrElse(sigNew.limit(0))
+      // this batch's shingles come from the new side only: a replay
+      // after a crash between the two appends finds them logged too,
+      // and counting both copies would double `inter`
+      val shOld = logged(s, shPath)
+        .fold(shNew.limit(0))(unseen(_, bNew, "doc_id"))
+      val bandsNew = Dedup.bandRows(sigNew)
+      val bandsAll = bandsNew.union(Dedup.bandRows(sigOld))
+      // new×(new ∪ old): least/greatest normalizes orientation, so a
+      // new×new bucket pair (seen from both sides) dedups in the
+      // distinct — exactly q31's (doc_a < doc_b) candidate set
+      val cand = bandsNew.as("x").join(bandsAll.as("y"),
+          col("x.band") === col("y.band") &&
+            col("x.bkey") === col("y.bkey") &&
+            col("x.doc_id") =!= col("y.doc_id"))
+        .select(least(col("x.doc_id"), col("y.doc_id")).as("da"),
+          greatest(col("x.doc_id"), col("y.doc_id")).as("db"))
+        .distinct()
+      val shAll = shNew.union(shOld) // cheap re-scan: ckpt + parquet
+      val inter = cand
+        .join(shAll.select(col("doc_id").as("da"), col("h")), "da")
+        .join(shAll.select(col("doc_id").as("db"), col("h")), Seq("db", "h"))
+        .groupBy(col("da"), col("db"))
+        .agg(count(lit(1)).as("inter"))
+      val sizes = sigNew.select(col("doc_id"), col("n"))
+        .union(sigOld.select(col("doc_id"), col("n")))
+      foldStar(Dedup.scoredPairs(inter, sizes, 0.8)
+        .select(col("doc_a"), col("doc_b")), stagedDir, "pairs_star_stream")
+      // logs append LAST, the signature log (the idempotence key)
+      // last of all; a replayed shingle append drops its logged docs
+      unseen(shNew, shPath, "doc_id").localCheckpoint()
+        .write.mode("append").parquet(shPath)
+      sigNew.write.mode("append").parquet(sigPath)
+    }
 
   /** Streaming SEMANTIC dedup pair staging — q92's SemDeDup as a
     * continuous ingest ([[neardupStarStream]]'s shape on the
@@ -565,86 +619,67 @@ object EventStreams {
   def semDedupStarStream(vectors: DataFrame,
       centroids: Array[Array[Double]], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import graft.ops.{Dedup, Similarity, Staged}
-        val idPath = s"$stagedDir/semdedup_ids"
-        val repPath = s"$stagedDir/semdedup_reps"
-        val starName = "sem_pairs_stream"
-        val b0 = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-        val bNew = (if (stagedExists(s, idPath))
-            b0.join(s.read.parquet(idPath).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else b0)
-          .select(col("vec_id"),
-            Similarity.cellAssignment(centroids).as("cluster"),
-            col("v"), col("nrm"))
-          .localCheckpoint() // dup split + rep election + logs read it
-        val repsOld =
-          if (stagedExists(s, repPath)) s.read.parquet(repPath)
-          else bNew.select(col("vec_id").as("rep_id"), col("cluster"),
-            col("v"), col("nrm")).limit(0)
-        // exact copies of a LOGGED representative: edge now, no cosine
-        val vsLog = bNew.join(repsOld
-            .select(col("cluster"), col("v"), col("rep_id")),
-          Seq("cluster", "v"), "left")
-        val dupVsLog = vsLog.where(col("rep_id").isNotNull)
-          .select(col("rep_id").as("doc_a"), col("vec_id").as("doc_b"))
-        // in-batch collapse of the remainder: min-id member represents
-        val unmatched = vsLog.where(col("rep_id").isNull).drop("rep_id")
-        val batchReps = unmatched.groupBy(col("cluster"), col("v"))
-          .agg(min(col("vec_id")).as("rep_id"), first(col("nrm")).as("nrm"))
-          .localCheckpoint() // dup stars + candidate join + log append
-        val dupInBatch = unmatched
-          .join(batchReps.select(col("cluster"), col("v"), col("rep_id")),
-            Seq("cluster", "v"))
-          .where(col("vec_id") =!= col("rep_id"))
-          .select(col("rep_id").as("doc_a"), col("vec_id").as("doc_b"))
-        // distinct new reps verify against (logged ∪ in-batch) reps of
-        // their own cell — each rep pair priced once
-        val nr = batchReps.select(col("cluster"),
-          col("rep_id").as("na_id"), col("v").as("na_v"),
-          col("nrm").as("na_n"))
-        val allReps = repsOld.select(col("cluster"),
-            col("rep_id").as("nb_id"), col("v").as("nb_v"),
-            col("nrm").as("nb_n"))
-          .union(batchReps.select(col("cluster"),
-            col("rep_id").as("nb_id"), col("v").as("nb_v"),
-            col("nrm").as("nb_n")))
-        val verified = nr.join(allReps, Seq("cluster"))
-          .where(col("na_id") =!= col("nb_id"))
-          .select(least(col("na_id"), col("nb_id")).as("doc_a"),
-            greatest(col("na_id"), col("nb_id")).as("doc_b"),
-            Similarity.cosine(Similarity.idot(col("na_v"), col("nb_v")),
-              col("na_n"), col("nb_n")).as("cos"))
-          .where(col("cos") >= Similarity.SemDedupThreshold)
-          .select(col("doc_a"), col("doc_b"))
-          .distinct()
-        val prev =
-          if (stagedExists(s, s"$stagedDir/$starName"))
-            s.read.parquet(Staged.path(stagedDir, starName))
-          else verified.limit(0)
-        val folded = prev.union(dupVsLog).union(dupInBatch)
-          .union(verified).localCheckpoint() // evaluate before republish
-        val star =
-          if (folded.isEmpty) folded
-          else Dedup.connectedComponentsStar(folded)
-            .where(col("doc_id") =!= col("cluster_id"))
-            .select(col("cluster_id").as("doc_a"),
-              col("doc_id").as("doc_b"))
-        Staged.write(star.orderBy(col("doc_a"), col("doc_b")),
-          stagedDir, starName)
-        // logs append LAST (read-your-own-writes)
-        bNew.select(col("vec_id")).write.mode("append").parquet(idPath)
-        batchReps.select(col("rep_id"), col("cluster"), col("v"),
-            col("nrm"))
-          .write.mode("append").parquet(repPath)
-        ()
-      }
-      .start()
+    drain(vectors, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      import graft.ops.Similarity
+      val idPath = s"$stagedDir/semdedup_ids"
+      val repPath = s"$stagedDir/semdedup_reps"
+      val bNew = unseen(assignable(batch), idPath, "vec_id")
+        .select(col("vec_id"),
+          Similarity.cellAssignment(centroids).as("cluster"),
+          col("v"), col("nrm"))
+        .localCheckpoint() // dup split + rep election + logs read it
+      // this batch's representatives come from the new side only (the
+      // neardupStarStream replay note)
+      val repsOld = logged(s, repPath).fold(
+          bNew.select(col("vec_id").as("rep_id"), col("cluster"),
+            col("v"), col("nrm")).limit(0))(
+          unseen(_, bNew.select(col("vec_id").as("rep_id")), "rep_id"))
+      // exact copies of a LOGGED representative: edge now, no cosine
+      val vsLog = bNew.join(repsOld
+          .select(col("cluster"), col("v"), col("rep_id")),
+        Seq("cluster", "v"), "left")
+      val dupVsLog = vsLog.where(col("rep_id").isNotNull)
+        .select(col("rep_id").as("doc_a"), col("vec_id").as("doc_b"))
+      // in-batch collapse of the remainder: min-id member represents
+      val unmatched = vsLog.where(col("rep_id").isNull).drop("rep_id")
+      val batchReps = unmatched.groupBy(col("cluster"), col("v"))
+        .agg(min(col("vec_id")).as("rep_id"), first(col("nrm")).as("nrm"))
+        .localCheckpoint() // dup stars + candidate join + log append
+      val dupInBatch = unmatched
+        .join(batchReps.select(col("cluster"), col("v"), col("rep_id")),
+          Seq("cluster", "v"))
+        .where(col("vec_id") =!= col("rep_id"))
+        .select(col("rep_id").as("doc_a"), col("vec_id").as("doc_b"))
+      // distinct new reps verify against (logged ∪ in-batch) reps of
+      // their own cell — each rep pair priced once
+      val nr = batchReps.select(col("cluster"),
+        col("rep_id").as("na_id"), col("v").as("na_v"),
+        col("nrm").as("na_n"))
+      val allReps = repsOld.select(col("cluster"),
+          col("rep_id").as("nb_id"), col("v").as("nb_v"),
+          col("nrm").as("nb_n"))
+        .union(batchReps.select(col("cluster"),
+          col("rep_id").as("nb_id"), col("v").as("nb_v"),
+          col("nrm").as("nb_n")))
+      val verified = nr.join(allReps, Seq("cluster"))
+        .where(col("na_id") =!= col("nb_id"))
+        .select(least(col("na_id"), col("nb_id")).as("doc_a"),
+          greatest(col("na_id"), col("nb_id")).as("doc_b"),
+          Similarity.cosine(Similarity.idot(col("na_v"), col("nb_v")),
+            col("na_n"), col("nb_n")).as("cos"))
+        .where(col("cos") >= Similarity.SemDedupThreshold)
+        .select(col("doc_a"), col("doc_b"))
+        .distinct()
+      foldStar(dupVsLog.union(dupInBatch).union(verified),
+        stagedDir, "sem_pairs_stream")
+      // logs append LAST, the id log (the idempotence key) last of all
+      unseen(batchReps.select(col("rep_id"), col("cluster"), col("v"),
+          col("nrm")), repPath, "rep_id")
+        .localCheckpoint()
+        .write.mode("append").parquet(repPath)
+      bNew.select(col("vec_id")).write.mode("append").parquet(idPath)
+    }
 
   /** Streaming ingest for the GRAPH family (q187–q189) — the one
     * staged family the round-14 verdict noted had no stream twin. The
@@ -674,35 +709,19 @@ object EventStreams {
   def knnGraphIngestStream(vectors: DataFrame,
       centroids: Array[Array[Double]], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import graft.ops.Similarity
-        val path = s"$stagedDir/knn_vectors"
-        val rows = batch.select(col("vec_id"), col("v"))
-          .groupBy(col("vec_id")).agg(max(col("v")).as("v"))
-          .withColumn("nrm",
-            sqrt(Similarity.idot(col("v"), col("v")).cast("double")))
-          .select(col("vec_id"),
-            Similarity.cellAssignment(centroids).as("cluster"),
-            col("v"), col("nrm"))
-        val existing =
-          if (stagedExists(s, path)) s.read.parquet(path)
-          else rows.limit(0)
-        rows
-          // content-keyed: identical redeliveries drop, conflicts
-          // append and resolve at read time (arrival-independence)
-          .join(existing.select(col("vec_id"), col("v")),
-            Seq("vec_id", "v"), "left_anti")
-          // fully evaluate before appending to the same path
-          // (read-your-own-writes hazard — the dedupIngest note)
-          .localCheckpoint()
-          .write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    // content-keyed: identical redeliveries drop, conflicts append and
+    // resolve at read time (arrival-independence)
+    appendOnce(vectors, checkpoint, s"$stagedDir/knn_vectors",
+        "vec_id", "v") { (batch, _) =>
+      import graft.ops.Similarity
+      batch.select(col("vec_id"), col("v"))
+        .groupBy(col("vec_id")).agg(max(col("v")).as("v"))
+        .withColumn("nrm",
+          sqrt(Similarity.idot(col("v"), col("v")).cast("double")))
+        .select(col("vec_id"),
+          Similarity.cellAssignment(centroids).as("cluster"),
+          col("v"), col("nrm"))
+    }
 
   /** The read-side resolve of [[knnGraphIngestStream]]'s vector log:
     * one row per vec_id, conflicts folded by the same
@@ -777,76 +796,51 @@ object EventStreams {
     */
   def hammingStarStream(hashes: DataFrame, stagedDir: String,
       checkpoint: String): StreamingQuery =
-    hashes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import graft.ops.{Banding, Dedup, Staged}
-        val logPath = s"$stagedDir/hamming_hashes"
-        val starName = "media_pairs_star_stream"
-        val b0 = batch.dropDuplicates("doc_id")
-        val bNew = (if (stagedExists(s, logPath))
-            b0.join(s.read.parquet(logPath).select(col("doc_id")),
-              Seq("doc_id"), "left_anti")
-          else b0).localCheckpoint() // bands + verify + log append read it
-        val old =
-          if (stagedExists(s, logPath)) s.read.parquet(logPath)
-          else bNew.limit(0)
-        val bandsNew = Banding.hashBandRows(bNew)
-        val bandsAll = bandsNew.union(Banding.hashBandRows(old))
-          .localCheckpoint() // occupancy + join side both read it
-        val coldKeys = bandsAll.groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("n"))
-          .where(col("n") <= Banding.HotCap)
-          .select(col("band"), col("bkey"))
-        val cand = bandsNew.join(coldKeys, Seq("band", "bkey"), "leftsemi")
-          .as("x")
-          .join(bandsAll.join(coldKeys, Seq("band", "bkey"), "leftsemi").as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") =!= col("y.doc_id"))
-          // least/greatest normalizes orientation so a new×new bucket
-          // pair (seen from both sides) dedups in the distinct
-          // struct ordering is lexicographic with doc_id first, so
-          // each hash pair stays tied to its own doc after the swap
-          .select(least(struct(col("x.doc_id"), col("x.h0"), col("x.h1")),
-              struct(col("y.doc_id"), col("y.h0"), col("y.h1"))).as("a"),
-            greatest(struct(col("x.doc_id"), col("x.h0"), col("x.h1")),
-              struct(col("y.doc_id"), col("y.h0"), col("y.h1"))).as("b"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            col("a.h0").as("pa0"), col("a.h1").as("pa1"),
-            col("b.h0").as("pb0"), col("b.h1").as("pb1"))
-          .distinct()
-        val newEdges = cand
+    drain(hashes, checkpoint) { (batch, _) =>
+      import graft.ops.Banding
+      val logPath = s"$stagedDir/hamming_hashes"
+      val bNew = unseen(batch.dropDuplicates("doc_id"), logPath, "doc_id")
+        .localCheckpoint() // bands + verify + log append read it
+      val old = logged(batch.sparkSession, logPath)
+        .getOrElse(bNew.limit(0))
+      val bandsNew = Banding.hashBandRows(bNew)
+      val bandsAll = bandsNew.union(Banding.hashBandRows(old))
+        .localCheckpoint() // occupancy + join side both read it
+      val coldKeys = bandsAll.groupBy(col("band"), col("bkey"))
+        .agg(count(lit(1)).as("n"))
+        .where(col("n") <= Banding.HotCap)
+        .select(col("band"), col("bkey"))
+      val cand = bandsNew.join(coldKeys, Seq("band", "bkey"), "leftsemi")
+        .as("x")
+        .join(bandsAll.join(coldKeys, Seq("band", "bkey"), "leftsemi").as("y"),
+          col("x.band") === col("y.band") &&
+            col("x.bkey") === col("y.bkey") &&
+            col("x.doc_id") =!= col("y.doc_id"))
+        // least/greatest normalizes orientation so a new×new bucket
+        // pair (seen from both sides) dedups in the distinct
+        // struct ordering is lexicographic with doc_id first, so
+        // each hash pair stays tied to its own doc after the swap
+        .select(least(struct(col("x.doc_id"), col("x.h0"), col("x.h1")),
+            struct(col("y.doc_id"), col("y.h0"), col("y.h1"))).as("a"),
+          greatest(struct(col("x.doc_id"), col("x.h0"), col("x.h1")),
+            struct(col("y.doc_id"), col("y.h0"), col("y.h1"))).as("b"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.h0").as("pa0"), col("a.h1").as("pa1"),
+          col("b.h0").as("pb0"), col("b.h1").as("pb1"))
+        .distinct()
+      foldStar(cand
           .withColumn("hamming",
             expr("bit_count(pa0 ^ pb0) + bit_count(pa1 ^ pb1)")
               .cast("long"))
           .where(col("hamming") <= 3)
-          .select(col("doc_a"), col("doc_b"))
-        val prev =
-          if (stagedExists(s, s"$stagedDir/$starName"))
-            s.read.parquet(Staged.path(stagedDir, starName))
-          else newEdges.limit(0)
-        // evaluate the fold input fully BEFORE republishing the asset
-        // it reads (read-your-own-writes)
-        val folded = prev.union(newEdges).localCheckpoint()
-        val star =
-          if (folded.isEmpty) folded
-          else Dedup.connectedComponentsStar(folded)
-            .where(col("doc_id") =!= col("cluster_id"))
-            .select(col("cluster_id").as("doc_a"),
-              col("doc_id").as("doc_b"))
-        Staged.write(star.orderBy(col("doc_a"), col("doc_b")),
-          stagedDir, starName)
-        // log appends LAST — after every consumer above evaluated
-        bNew.write.mode("append").parquet(logPath)
-        ()
-      }
-      .start()
+          .select(col("doc_a"), col("doc_b")),
+        stagedDir, "media_pairs_star_stream")
+      // the log appends LAST — after every consumer above evaluated
+      bNew.write.mode("append").parquet(logPath)
+    }
 
-  /** Streaming IVF index ingest — [[dedupIngest]]'s foreachBatch-
-    * maintains-a-staged-table pattern composed with q81's zero-shuffle
+  /** Streaming IVF index ingest — [[dedupIngest]]'s
+    * stream-maintains-a-staged-table pattern composed with q81's zero-shuffle
     * cell assignment: vectors stream in, each batch is assigned to its
     * nearest TRAINED cell by the same broadcast-centroid argmax
     * expression the batch ingest and the training loop share
@@ -856,14 +850,8 @@ object EventStreams {
     * (the centroids are an input, not a per-batch cost), each
     * micro-batch is a pure map stage — no shuffle, no state store —
     * and the index stays a directly queryable parquet table that q78's
-    * search consumes unchanged. Effectively-once by CONTENT, not by
-    * offset alone: foreachBatch is at-least-once (a batch retried
-    * after a completed write but before the offset commit would
-    * re-append), so each batch drops in-batch vec_id duplicates (an
-    * at-least-once source can redeliver a row WITHIN one batch too)
-    * and anti-joins the staged table on vec_id before appending —
-    * [[dedupIngest]]'s discipline — making any replay a no-op; a
-    * drained AvailableNow re-run appends nothing.
+    * search consumes unchanged. Effectively-once by content, keyed on
+    * vec_id (the contract in the [[EventStreams]] header).
     * Zero-norm vectors are unassignable and sit out, exactly as in
     * training. IvfIngestStreamSpec asserts the streamed index equals
     * q81's batch-ingested index row-for-row over ≥3 micro-batches.
@@ -871,27 +859,11 @@ object EventStreams {
   def ivfIngestStream(vectors: DataFrame,
       centroids: Array[Array[Double]], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cells_stream"
-        val assigned = batch.where(col("nrm") > 0)
-          .dropDuplicates("vec_id")
-          .select(col("vec_id"),
-            graft.ops.Similarity.cellAssignment(centroids).as("cluster"))
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        // evaluate the anti-join fully BEFORE the append opens the
-        // same path for writing (read-your-own-writes hazard)
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/cells_stream", "vec_id") {
+      (batch, _) =>
+        assignable(batch).select(col("vec_id"),
+          graft.ops.Similarity.cellAssignment(centroids).as("cluster"))
+    }
 
   /** Streaming CODEBOOK REFRESH — q161's batch-linear centroid update
     * as a stream consumer ([[ivfIngestStream]]'s discipline applied to
@@ -912,25 +884,11 @@ object EventStreams {
   def codebookRefreshStream(vectors: DataFrame,
       centroids: Array[Array[Double]], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cb_log"
-        val assigned = batch.where(col("nrm") > 0)
-          .dropDuplicates("vec_id")
-          .select(col("vec_id"), col("v"),
-            graft.ops.Similarity.cellAssignment(centroids).as("cluster"))
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/cb_log", "vec_id") {
+      (batch, _) =>
+        assignable(batch).select(col("vec_id"), col("v"),
+          graft.ops.Similarity.cellAssignment(centroids).as("cluster"))
+    }
 
   /** The stream-refreshed codebook: staged corpus sums merged with the
     * [[codebookRefreshStream]] log's sufficient statistics through the
@@ -969,36 +927,25 @@ object EventStreams {
   def clusterSampleStream(vectors: DataFrame,
       centroids: Array[Array[Double]], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/sample_stream"
-        val assigned = batch.where(col("nrm") > 0)
-          .dropDuplicates("vec_id")
-          .select(col("vec_id"), col("label"),
-            graft.ops.Similarity.cellAssignment(centroids).as("cluster"))
-        val merged =
-          if (stagedExists(s, path))
-            s.read.parquet(path)
-              .select(col("vec_id"), col("label"), col("cluster"))
-              .unionByName(assigned)
-              .dropDuplicates("vec_id")
-          else assigned
-        // versioned publish (Staged): the merged election lands in a
-        // fresh v=N+1 dir and swaps in atomically, so a crash mid-write
-        // can no longer lose previously elected rows — the sample stays
-        // on its last complete snapshot until the swap commits (the
-        // read side keeps its pinned v=N listing, so no localCheckpoint
-        // is needed either)
-        graft.ops.Staged.write(
-          graft.ops.Similarity.clusterSampleElect(merged)
-            .select(col("cluster"), col("vec_id"), col("label")),
-          stagedDir, "sample_stream")
-        ()
-      }
-      .start()
+    drain(vectors, checkpoint) { (batch, _) =>
+      import graft.ops.{Similarity, Staged}
+      val assigned = assignable(batch).select(col("vec_id"), col("label"),
+        Similarity.cellAssignment(centroids).as("cluster"))
+      val merged = logged(batch.sparkSession,
+          Staged.path(stagedDir, "sample_stream"))
+        .fold(assigned)(_.select(col("vec_id"), col("label"), col("cluster"))
+          .unionByName(assigned)
+          .dropDuplicates("vec_id"))
+      // versioned publish (Staged): the merged election lands in a
+      // fresh v=N+1 dir and swaps in atomically, so a crash mid-write
+      // can no longer lose previously elected rows — the sample stays
+      // on its last complete snapshot until the swap commits (the
+      // read side keeps its pinned v=N listing, so no localCheckpoint
+      // is needed either)
+      Staged.write(Similarity.clusterSampleElect(merged)
+          .select(col("cluster"), col("vec_id"), col("label")),
+        stagedDir, "sample_stream")
+    }
 
   /** The stream-maintained sample, ranked through the same election
     * batch q163 runs — (cluster, rank, vec_id, label, h), directly
@@ -1025,24 +972,11 @@ object EventStreams {
   def hierIngestStream(vectors: DataFrame, c1: Array[Array[Double]],
       cents: DataFrame, k2: Int, stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cells_hier_stream"
-        val assigned = graft.ops.Similarity.assignHierCells(
-          batch.where(col("nrm") > 0).dropDuplicates("vec_id"),
-          c1, cents, k2)
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/cells_hier_stream",
+        "vec_id") { (batch, _) =>
+      graft.ops.Similarity.assignHierCells(
+        assignable(batch), c1, cents, k2)
+    }
 
   /** Streaming ingest into the THREE-level index — [[hierIngestStream]]
     * one level deeper, completing the ingest matrix at the depth the
@@ -1061,24 +995,11 @@ object EventStreams {
   def hier3IngestStream(vectors: DataFrame, c1: Array[Array[Double]],
       cents2: DataFrame, cents3: DataFrame, k2: Int, k3: Int,
       stagedDir: String, checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cells_hier3_stream"
-        val assigned = graft.ops.Similarity.assignHier3Cells(
-          batch.where(col("nrm") > 0).dropDuplicates("vec_id"),
-          c1, cents2, cents3, k2, k3)
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/cells_hier3_stream",
+        "vec_id") { (batch, _) =>
+      graft.ops.Similarity.assignHier3Cells(
+        assignable(batch), c1, cents2, cents3, k2, k3)
+    }
 
   /** Streaming ingest into the SHARDED index — [[hierIngestStream]]'s
     * twin for the scatter-gather shard layout (q143): micro-batches
@@ -1097,24 +1018,11 @@ object EventStreams {
   def shardIngestStream(vectors: DataFrame, cents: DataFrame,
       shards: Int, kShard: Int, stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cells_shard_stream"
-        val assigned = graft.ops.Similarity.assignShardCells(
-          batch.where(col("nrm") > 0).dropDuplicates("vec_id"),
-          cents, shards, kShard)
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/cells_shard_stream",
+        "vec_id") { (batch, _) =>
+      graft.ops.Similarity.assignShardCells(
+        assignable(batch), cents, shards, kShard)
+    }
 
   /** Streaming ingest into the SHARDED HIERARCHICAL index —
     * [[shardIngestStream]] with q169's per-shard two-level trees, the
@@ -1135,24 +1043,11 @@ object EventStreams {
   def shardedHierIngestStream(vectors: DataFrame, cents1: DataFrame,
       cents2: DataFrame, shards: Int, kSup: Int, kSub: Int,
       stagedDir: String, checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cells_shard_hier_stream"
-        val assigned = graft.ops.Similarity.assignShardHierCells(
-          batch.where(col("nrm") > 0).dropDuplicates("vec_id"),
-          cents1, cents2, shards, kSup, kSub)
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/cells_shard_hier_stream",
+        "vec_id") { (batch, _) =>
+      graft.ops.Similarity.assignShardHierCells(
+        assignable(batch), cents1, cents2, shards, kSup, kSub)
+    }
 
   /** Streaming ingest into the sharded THREE-level index —
     * [[shardedHierIngestStream]] at the full depth the 10¹⁰-vector
@@ -1175,24 +1070,11 @@ object EventStreams {
       cents2: DataFrame, cents3: DataFrame, shards: Int,
       k1: Int, k2: Int, k3: Int,
       stagedDir: String, checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/cells_shard_hier3_stream"
-        val assigned = graft.ops.Similarity.assignShardHier3Cells(
-          batch.where(col("nrm") > 0).dropDuplicates("vec_id"),
-          cents1, cents2, cents3, shards, k1, k2, k3)
-        val fresh =
-          if (stagedExists(s, path))
-            assigned.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint,
+        s"$stagedDir/cells_shard_hier3_stream", "vec_id") { (batch, _) =>
+      graft.ops.Similarity.assignShardHier3Cells(
+        assignable(batch), cents1, cents2, cents3, shards, k1, k2, k3)
+    }
 
   /** Streaming DELETE-feed ingest — the tombstone half of the index
     * lifecycle (q144's serving-time mask is the consumer): delete
@@ -1200,10 +1082,9 @@ object EventStreams {
     * tombstone table that every delete-aware search anti-joins. A
     * delete needs NO model at all — no assignment, no codebook — so
     * each micro-batch is a pure projection; the only discipline is
-    * the same effectively-once-by-content append as
-    * [[ivfIngestStream]] (in-batch dedup + anti-join against the
-    * staged table), which also makes deleting an already-deleted id
-    * a no-op — delete feeds are rife with redelivery. The index
+    * the effectively-once append of the [[EventStreams]] header, which
+    * also makes deleting an already-deleted id a no-op — delete feeds
+    * are rife with redelivery. The index
     * itself is never touched: at 100 TB a delete costs one row in a
     * model-sized side table until q135's compaction report says the
     * accumulated tombstone fraction justifies a refresh.
@@ -1212,22 +1093,10 @@ object EventStreams {
     */
   def deleteIngestStream(deletes: DataFrame, stagedDir: String,
       checkpoint: String): StreamingQuery =
-    deletes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/deletes_stream"
-        val ids = batch.select(col("vec_id")).dropDuplicates("vec_id")
-        val fresh =
-          if (stagedExists(s, path))
-            ids.join(s.read.parquet(path).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else ids
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(deletes, checkpoint, s"$stagedDir/deletes_stream",
+        "vec_id") { (batch, _) =>
+      batch.select(col("vec_id")).dropDuplicates("vec_id")
+    }
 
   /** Streaming COMPACTION — the refresh half of the delete lifecycle
     * ([[deleteIngestStream]] is the accumulate half, q154/
@@ -1254,36 +1123,24 @@ object EventStreams {
     */
   def compactionStream(deletes: DataFrame, cellsPath: String,
       stagedDir: String, checkpoint: String): StreamingQuery =
-    deletes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(deletes, checkpoint) { (batch, _) =>
+      import graft.ops.Staged
+      val feed = s"$stagedDir/deletes_compacted_stream"
+      val ids = batch.select(col("vec_id")).dropDuplicates("vec_id")
+      val fresh = unseen(ids, feed, "vec_id").localCheckpoint()
+      if (!fresh.isEmpty) { // a pure redelivery skips the index rewrite
         val s = batch.sparkSession
-        val feed = s"$stagedDir/deletes_compacted_stream"
-        val idx = s"$stagedDir/cells_compact_stream"
-        val ids = batch.select(col("vec_id")).dropDuplicates("vec_id")
-        val fresh =
-          (if (stagedExists(s, feed))
-            ids.join(s.read.parquet(feed).select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          else ids).localCheckpoint()
-        if (fresh.isEmpty) () // pure redelivery: skip the index rewrite
-        else {
-          val base =
-            if (stagedExists(s, idx)) s.read.parquet(idx)
-            else s.read.parquet(cellsPath)
-          // versioned publish (Staged): the rewrite lands in a fresh
-          // v=N+1 dir and swaps in atomically — the read side keeps its
-          // pinned v=N listing (no localCheckpoint needed), and a crash
-          // mid-rewrite leaves the index on the old complete snapshot
-          graft.ops.Staged.write(
-            base.join(broadcast(fresh), Seq("vec_id"), "left_anti"),
-            stagedDir, "cells_compact_stream")
-          fresh.write.mode("append").parquet(feed)
-        }
-        ()
+        val base = logged(s, Staged.path(stagedDir, "cells_compact_stream"))
+          .getOrElse(s.read.parquet(cellsPath))
+        // versioned publish (Staged): the rewrite lands in a fresh
+        // v=N+1 dir and swaps in atomically — the read side keeps its
+        // pinned v=N listing (no localCheckpoint needed), and a crash
+        // mid-rewrite leaves the index on the old complete snapshot
+        Staged.write(unseen(base, broadcast(fresh), "vec_id"),
+          stagedDir, "cells_compact_stream")
+        fresh.write.mode("append").parquet(feed)
       }
-      .start()
+    }
 
   /** Streaming corpus-drift MONITOR — q150's stream twin: each
     * micro-batch of incoming documents is scored against the STAGED
@@ -1312,28 +1169,15 @@ object EventStreams {
     */
   def driftMonitorStream(docs: DataFrame, work: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/drift_stream"
+    appendOnce(docs, checkpoint, s"$work/drift_stream", "batch_sig") {
+      (batch, batchId) =>
         val b = batch.dropDuplicates("doc_id").localCheckpoint()
         val sig = b.agg(coalesce(bit_xor(xxhash64(col("doc_id"))), lit(0L))
           .as("batch_sig"))
-        val report = graft.ops.Text.driftSignalsOn(s, work, b)
+        graft.ops.Text.driftSignalsOn(batch.sparkSession, work, b)
           .crossJoin(broadcast(sig)) // 1-row scalar
           .withColumn("batch_id", lit(batchId))
-        val fresh =
-          if (stagedExists(s, path))
-            report.join(
-              s.read.parquet(path).select(col("batch_sig")).distinct(),
-              Seq("batch_sig"), "left_anti")
-          else report
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    }
 
   /** Streaming PQ encode ingest — [[ivfIngestStream]]'s twin for the
     * compressed index (q93's nightly batch as a stream): vectors
@@ -1352,25 +1196,12 @@ object EventStreams {
   def pqIngestStream(vectors: DataFrame,
       codebook: Array[Array[Array[Long]]], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/pq_codes_stream"
-        val codes = graft.ops.Similarity
-          .pqCodes(batch.dropDuplicates("vec_id"), codebook)
-          .select(col("vec_id"), col("sub"), col("code"))
-        val fresh =
-          if (stagedExists(s, path))
-            codes.join(
-              s.read.parquet(path).select(col("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti")
-          else codes
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/pq_codes_stream",
+        "vec_id") { (batch, _) =>
+      graft.ops.Similarity
+        .pqCodes(batch.dropDuplicates("vec_id"), codebook)
+        .select(col("vec_id"), col("sub"), col("code"))
+    }
 
   /** Streaming SQ8 encode ingest — [[pqIngestStream]]'s twin for the
     * scalar-quantized layout (q167): vectors stream in, each
@@ -1390,24 +1221,10 @@ object EventStreams {
   def sq8IngestStream(vectors: DataFrame, lo: Array[Long],
       st: Array[Long], stagedDir: String,
       checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$stagedDir/sq_codes_stream"
-        val codes = graft.ops.Similarity
-          .sq8Encode(batch.dropDuplicates("vec_id"), lo, st)
-        val fresh =
-          if (stagedExists(s, path))
-            codes.join(
-              s.read.parquet(path).select(col("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti")
-          else codes
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(vectors, checkpoint, s"$stagedDir/sq_codes_stream",
+        "vec_id") { (batch, _) =>
+      graft.ops.Similarity.sq8Encode(batch.dropDuplicates("vec_id"), lo, st)
+    }
 
   /** Streaming ANN SERVING — the query half of the index lifecycle,
     * closing the loop the ingest matrix (exact-dedup / IVF / hier /
@@ -1434,28 +1251,12 @@ object EventStreams {
   def hierPqSearchStream(queries: DataFrame, dir: String, work: String,
       c1: Array[Array[Double]], cents: DataFrame, k2: Int, width: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/search_results_stream"
-        val q = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-          .localCheckpoint() // probes + LUT + re-rank all read it
-        val probes =
-          graft.ops.Similarity.hierProbes(q, c1, cents, k2, width)
-        val res = graft.ops.Similarity.hierPqSearchOn(s, dir, work, q,
-          probes)
-        val fresh =
-          if (stagedExists(s, path))
-            res.join(
-              s.read.parquet(path).select(col("query_id")).distinct(),
-              Seq("query_id"), "left_anti")
-          else res
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(queries, checkpoint, s"$work/search_results_stream",
+        "query_id") { (batch, _) =>
+      val q = assignable(batch).localCheckpoint() // probes + search read it
+      graft.ops.Similarity.hierPqSearchOn(batch.sparkSession, dir, work, q,
+        graft.ops.Similarity.hierProbes(q, c1, cents, k2, width))
+    }
 
   /** Streaming QUALITY-GATE scoring — q160's serving half as a stream
     * consumer: micro-batches of incoming documents are featurized and
@@ -1474,29 +1275,16 @@ object EventStreams {
     */
   def perceptronScoreStream(docs: DataFrame, work: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/gate_scores_stream"
-        val wr = s.read.parquet(graft.ops.Staged.path(work, "perceptron_weights"))
+    appendOnce(docs, checkpoint, s"$work/gate_scores_stream", "doc_id") {
+      (batch, _) =>
+        import graft.ops.{Staged, Text}
+        val wr = Staged.read(batch.sparkSession, work, "perceptron_weights")
           .collect()(0) // model-sized: the 4 trained weights
         val w = Array(wr.getLong(0), wr.getLong(1), wr.getLong(2),
           wr.getLong(3))
-        val res = graft.ops.Text.perceptronPredictions(
-          graft.ops.Text.perceptronFeatures(
-            batch.dropDuplicates("doc_id")), w)
-        val fresh =
-          if (stagedExists(s, path))
-            res.join(
-              s.read.parquet(path).select(col("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-          else res
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+        Text.perceptronPredictions(
+          Text.perceptronFeatures(batch.dropDuplicates("doc_id")), w)
+    }
 
   /** Streaming MATRYOSHKA-prefix serving — [[hierPqSearchStream]]'s
     * twin for q159's two-tier route: micro-batches of query vectors
@@ -1515,28 +1303,11 @@ object EventStreams {
   def matryoshkaSearchStream(queries: DataFrame, dir: String,
       work: String, centroids: Array[Array[Double]], nprobe: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/matryoshka_results_stream"
-        val q = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-          .localCheckpoint() // probe selection + the search read it
-        val probes = graft.ops.Similarity.ivfProbes(q, centroids, nprobe)
-          .select(col("query_id"), col("cluster"))
-        val res = graft.ops.Similarity
-          .matryoshkaSearchOn(s, dir, work, probes)
-        val fresh =
-          if (stagedExists(s, path))
-            res.join(
-              s.read.parquet(path).select(col("query_id")).distinct(),
-              Seq("query_id"), "left_anti")
-          else res
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(queries, checkpoint, s"$work/matryoshka_results_stream",
+        "query_id") { (batch, _) =>
+      graft.ops.Similarity.matryoshkaSearchOn(batch.sparkSession, dir, work,
+        probesOf(assignable(batch).localCheckpoint(), centroids, nprobe))
+    }
 
   /** Streaming TOMBSTONE-MASKED serving — the CONSTRAINTS column of
     * the serving-stream matrix (the layout and compression columns
@@ -1555,28 +1326,11 @@ object EventStreams {
   def tombstoneSearchStream(queries: DataFrame, dir: String,
       work: String, centroids: Array[Array[Double]], nprobe: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/tombstone_results_stream"
-        val q = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-          .localCheckpoint() // probe selection + the search read it
-        val probes = graft.ops.Similarity.ivfProbes(q, centroids, nprobe)
-          .select(col("query_id"), col("cluster"))
-        val res = graft.ops.Similarity
-          .tombstoneSearchOn(s, dir, work, probes)
-        val fresh =
-          if (stagedExists(s, path))
-            res.join(
-              s.read.parquet(path).select(col("query_id")).distinct(),
-              Seq("query_id"), "left_anti")
-          else res
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(queries, checkpoint, s"$work/tombstone_results_stream",
+        "query_id") { (batch, _) =>
+      graft.ops.Similarity.tombstoneSearchOn(batch.sparkSession, dir, work,
+        probesOf(assignable(batch).localCheckpoint(), centroids, nprobe))
+    }
 
   /** Streaming GRAPH-WALK serving — the serving twin of the
     * TABLE-BEST-recall route (q189, 0.95/0.81 in the q126 table),
@@ -1601,39 +1355,14 @@ object EventStreams {
   def graphWalkSearchStream(queries: DataFrame, dir: String,
       work: String, centroids: Array[Array[Double]], nprobe: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import graft.ops.Similarity
-        val path = s"$work/graph_walk_results_stream"
-        // effectively-once guard BEFORE the walk, not after: the walk
-        // loop's per-round checkpoints execute eagerly, so a
-        // redelivered query filtered at the end would still pay the
-        // whole rounds×beam traversal to append nothing — anti-join
-        // the batch against the served log first and skip an
-        // all-replay batch entirely (the compactionStream discipline)
-        val q0 = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-        val q = (if (stagedExists(s, path))
-            q0.join(s.read.parquet(path)
-                .select(col("query_id").as("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti")
-          else q0).localCheckpoint() // probes + the walk read it
-        if (!q.isEmpty) {
-          val probes = Similarity.ivfProbes(q, centroids, nprobe)
-            .select(col("query_id"), col("cluster"))
-          val (snap, gsnap) =
-            Similarity.resolveWalkSnapshots(s, dir, work)
-          Similarity.graphWalkServeOn(s, dir, snap, gsnap,
-              q.select(col("vec_id").as("query_id"),
-                col("v").as("qv"), col("nrm").as("qn")), probes)
-            .localCheckpoint()
-            .write.mode("append").parquet(path)
-        }
-        ()
-      }
-      .start()
+    walkOnce(queries, s"$work/graph_walk_results_stream", centroids,
+        nprobe, checkpoint) { (s, q, probes) =>
+      import graft.ops.Similarity
+      val (snap, gsnap) = Similarity.resolveWalkSnapshots(s, dir, work)
+      Similarity.graphWalkServeOn(s, dir, snap, gsnap,
+        q.select(col("vec_id").as("query_id"),
+          col("v").as("qv"), col("nrm").as("qn")), probes)
+    }
 
   /** Streaming COMPRESSED graph-walk serving — the q194 route's
     * twin, completing the graph family's serving-stream column for
@@ -1655,33 +1384,14 @@ object EventStreams {
   def graphWalkPqSearchStream(queries: DataFrame, dir: String,
       work: String, centroids: Array[Array[Double]], nprobe: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import graft.ops.{Similarity, Staged}
-        val path = s"$work/graph_walk_pq_results_stream"
-        val q0 = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-        val q = (if (stagedExists(s, path))
-            q0.join(s.read.parquet(path)
-                .select(col("query_id").as("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti")
-          else q0).localCheckpoint() // probes + the walk read it
-        if (!q.isEmpty) {
-          val probes = Similarity.ivfProbes(q, centroids, nprobe)
-            .select(col("query_id"), col("cluster"))
-          val (_, gsnap) = Similarity.resolveWalkSnapshots(s, dir, work)
-          val pq = Staged.resolveGroup(work,
-            Seq("pq_codes", "pq_codebook"))
-          Similarity.graphWalkPqServeOn(s, dir, gsnap, pq,
-              q.select(col("vec_id").as("query_id"), col("v")), probes)
-            .localCheckpoint()
-            .write.mode("append").parquet(path)
-        }
-        ()
-      }
-      .start()
+    walkOnce(queries, s"$work/graph_walk_pq_results_stream", centroids,
+        nprobe, checkpoint) { (s, q, probes) =>
+      import graft.ops.{Similarity, Staged}
+      val (_, gsnap) = Similarity.resolveWalkSnapshots(s, dir, work)
+      val pq = Staged.resolveGroup(work, Seq("pq_codes", "pq_codebook"))
+      Similarity.graphWalkPqServeOn(s, dir, gsnap, pq,
+        q.select(col("vec_id").as("query_id"), col("v")), probes)
+    }
 
   /** Streaming SQ8 serving — [[matryoshkaSearchStream]]'s twin for
     * q167's scalar-quantized route, completing the serving-stream
@@ -1699,27 +1409,11 @@ object EventStreams {
   def sq8SearchStream(queries: DataFrame, dir: String, work: String,
       centroids: Array[Array[Double]], nprobe: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/sq8_results_stream"
-        val q = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-          .localCheckpoint() // probe selection + the search read it
-        val probes = graft.ops.Similarity.ivfProbes(q, centroids, nprobe)
-          .select(col("query_id"), col("cluster"))
-        val res = graft.ops.Similarity.sq8SearchOn(s, dir, work, probes)
-        val fresh =
-          if (stagedExists(s, path))
-            res.join(
-              s.read.parquet(path).select(col("query_id")).distinct(),
-              Seq("query_id"), "left_anti")
-          else res
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(queries, checkpoint, s"$work/sq8_results_stream",
+        "query_id") { (batch, _) =>
+      graft.ops.Similarity.sq8SearchOn(batch.sparkSession, dir, work,
+        probesOf(assignable(batch).localCheckpoint(), centroids, nprobe))
+    }
 
   /** Streaming SHARDED serving — [[hierPqSearchStream]]'s twin for
     * the scatter-gather layout (q143's query half): micro-batches of
@@ -1741,32 +1435,18 @@ object EventStreams {
   def shardedSearchStream(queries: DataFrame, dir: String, work: String,
       cents: DataFrame, kShard: Int, nprobe: Int,
       checkpoint: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val path = s"$work/shard_results_stream"
-        val q = batch.where(col("nrm") > 0).dropDuplicates("vec_id")
-          .localCheckpoint() // probe selection + gather both read it
-        val probes = graft.ops.Similarity
-          .shardProbes(q, cents, kShard, nprobe)
-          .withColumnRenamed("cell", "cluster")
-          .join(q.withColumnRenamed("vec_id", "query_id"), "query_id")
-          .select(col("query_id"), col("cluster"),
-            col("v").as("qv"), col("nrm").as("qn"))
-        val res = graft.ops.Similarity.shardedSearchOn(s, dir, work,
-          probes)
-        val fresh =
-          if (stagedExists(s, path))
-            res.join(
-              s.read.parquet(path).select(col("query_id")).distinct(),
-              Seq("query_id"), "left_anti")
-          else res
-        fresh.localCheckpoint().write.mode("append").parquet(path)
-        ()
-      }
-      .start()
+    appendOnce(queries, checkpoint, s"$work/shard_results_stream",
+        "query_id") { (batch, _) =>
+      val q = assignable(batch).localCheckpoint() // probes + gather read it
+      val probes = graft.ops.Similarity
+        .shardProbes(q, cents, kShard, nprobe)
+        .withColumnRenamed("cell", "cluster")
+        .join(q.withColumnRenamed("vec_id", "query_id"), "query_id")
+        .select(col("query_id"), col("cluster"),
+          col("v").as("qv"), col("nrm").as("qn"))
+      graft.ops.Similarity.shardedSearchOn(batch.sparkSession, dir, work,
+        probes)
+    }
 
   case class UserRollup(user_id: Long, n_events: Long, total_value: Double,
       last_ts: Timestamp)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Similarity, Staged}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
 class SemDedupStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  test("streamed sem-pair star equals batch q92 components over 3 batch splits") {
-    implicit val sqlCtx = spark.sqlContext
+  /** The planted corpus written under a fresh dir, q92's expected
+    * (rep_id, member) star, the trained centroids and the scaled
+    * vector rows a stream feeds. */
+  private def fixture(): (Seq[(Long, Long)], Array[Array[Double]],
+      Seq[(Long, Seq[Long], Double)]) = {
     val d = java.nio.file.Files.createTempDirectory("semdedup-stream-corpus").toString
     val g = 120
     val base: Seq[Float] =
@@ -55,6 +58,19 @@ class SemDedupStreamSpec extends SparkSpec {
     val vecRows = Similarity.scaledVectors(spark, d)
       .select(col("vec_id"), col("v"), col("nrm"))
       .as[(Long, Seq[Long], Double)].collect().toSeq
+    (expected, centroids, vecRows)
+  }
+
+  // id % 3 split scatters every copy group and near-dup across batches
+  private def batches(vecRows: Seq[(Long, Seq[Long], Double)])
+      : Seq[Seq[(Long, Seq[Long], Double)]] = {
+    val shuffled = vecRows.sortBy { case (id, _, _) => (id % 3, id) }
+    shuffled.grouped((shuffled.size + 2) / 3).toSeq
+  }
+
+  test("streamed sem-pair star equals batch q92 components over 3 batch splits") {
+    implicit val sqlCtx = spark.sqlContext
+    val (expected, centroids, vecRows) = fixture()
     val staged =
       java.nio.file.Files.createTempDirectory("semdedup-stream").toString
     val ckpt =
@@ -64,9 +80,7 @@ class SemDedupStreamSpec extends SparkSpec {
       EventStreams.semDedupStarStream(
         st.toDF().toDF("vec_id", "v", "nrm"), centroids, staged, ck)
         .awaitTermination()
-    // id % 3 split scatters every copy group and near-dup across batches
-    val shuffled = vecRows.sortBy { case (id, _, _) => (id % 3, id) }
-    shuffled.grouped((shuffled.size + 2) / 3).foreach { chunk =>
+    batches(vecRows).foreach { chunk =>
       src.addData(chunk: _*)
       drain(ckpt, src)
     }
@@ -92,5 +106,46 @@ class SemDedupStreamSpec extends SparkSpec {
     assert(readStar() === expected)
     assert(spark.read.parquet(s"$staged/semdedup_ids").count() ===
       vecRows.size.toLong)
+  }
+
+  test("a crash between the two log appends heals on redelivery") {
+    implicit val sqlCtx = spark.sqlContext
+    val (expected, centroids, vecRows) = fixture()
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def drain(staged: String, ck: String,
+        st: MemoryStream[(Long, Seq[Long], Double)]): Unit =
+      EventStreams.semDedupStarStream(
+        st.toDF().toDF("vec_id", "v", "nrm"), centroids, staged, ck)
+        .awaitTermination()
+    val split = batches(vecRows)
+    // the first batch, run to completion on its own, gives the writes a
+    // crash before the id append leaves behind: the star archive and
+    // the representative log, with no id (idempotence key) rows
+    val side = tmp("semdedup-side")
+    val first = MemoryStream[(Long, Seq[Long], Double)]
+    first.addData(split.head: _*)
+    drain(side, tmp("semdedup-side-ckpt"), first)
+    val staged = tmp("semdedup-crashed")
+    Staged.write(spark.read.parquet(s"$side/sem_pairs_stream"),
+      staged, "sem_pairs_stream")
+    spark.read.parquet(s"$side/semdedup_reps")
+      .write.parquet(s"$staged/semdedup_reps")
+
+    // redeliver that batch, then the rest
+    val src = MemoryStream[(Long, Seq[Long], Double)]
+    val ckpt = tmp("semdedup-crashed-ckpt")
+    split.foreach { chunk =>
+      src.addData(chunk: _*)
+      drain(staged, ckpt, src)
+    }
+    assert(spark.read.parquet(s"$staged/sem_pairs_stream")
+      .as[(Long, Long)].collect().toSeq.sorted === expected)
+    val reps = spark.read.parquet(s"$staged/semdedup_reps")
+    assert(reps.count() === (1 + 15 + 12).toLong)
+    assert(reps.select("rep_id").distinct().count() === reps.count(),
+      "the representative log must hold one row per rep_id")
+    val ids = spark.read.parquet(s"$staged/semdedup_ids")
+    assert(ids.count() === vecRows.size.toLong)
+    assert(ids.distinct().count() === vecRows.size.toLong)
   }
 }

@@ -70,4 +70,29 @@ class TombstoneStreamSpec extends SparkSpec {
       .collect().toSeq
     assert(viaStream === batch)
   }
+
+  test("a delete log whose first append crashed is ingested afresh") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = "/root/testdata/sf0.001"
+    val work = Dedup.stageRoot(dir)
+    if (!Staged.isFresh(work, "deletes"))
+      Similarity.stageDeletes(spark, dir, work)
+    val batchDeletes = spark.read.parquet(s"$work/deletes")
+      .as[Long].collect().toSet
+    // what a crash inside the first `write.mode("append")` leaves: the
+    // committer's staging dir and no data file — Spark cannot infer a
+    // schema from it, so reading it as a log would fail every batch
+    val staged =
+      java.nio.file.Files.createTempDirectory("del-crashed").toString
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(staged, "deletes_stream", "_temporary", "0"))
+    val src = MemoryStream[Long]
+    src.addData(batchDeletes.toSeq.sorted: _*)
+    EventStreams.deleteIngestStream(src.toDF().toDF("vec_id"), staged,
+      java.nio.file.Files.createTempDirectory("del-crashed-ckpt").toString)
+      .awaitTermination()
+    val streamed = spark.read.parquet(s"$staged/deletes_stream")
+    assert(streamed.as[Long].collect().toSet === batchDeletes)
+    assert(streamed.count() === batchDeletes.size.toLong)
+  }
 }
