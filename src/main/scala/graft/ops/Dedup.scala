@@ -435,11 +435,12 @@ object Dedup {
     */
   def stageSimhashPairs(s: SparkSession, dir: String,
       workDir: String): String = {
-    val p = s"$workDir/sh_pairs"
-    if (Staged.isFresh(workDir, "sh_pairs")) return p
     simhashPairCore(s, dir)._1.stagePublish(workDir, "sh_pairs")
-    p
+    s"$workDir/sh_pairs"
   }
+
+  lazy val SimhashPairs: Staged.Family =
+    Staged.Family("sh_pairs")()(stageSimhashPairs)
 
   /** Dedup-signal AGREEMENT MATRIX — the method-diligence table a
     * corpus team reads before trusting any one dedup signal: every
@@ -470,8 +471,8 @@ object Dedup {
     */
   def q123DedupAgreement(s: SparkSession, dir: String): DataFrame = {
     val work = stageRoot(dir)
-    stagePairs(s, dir, work)
-    stageSimhashPairs(s, dir, work)
+    Pairs.need(s, dir, work)
+    SimhashPairs.need(s, dir, work)
     dedupAgreementStaged(s, dir, work)
   }
 
@@ -480,9 +481,8 @@ object Dedup {
     * against q123's replay SQL, but consuming pair assets an earlier
     * query in the SAME run staged instead of re-deriving them.
     * Staging happens only when no query of this run has staged the
-    * asset yet (the [[Staged]] run-scoped guard — a stage root left
-    * in /tmp by a PREVIOUS round may hold content a code change
-    * since made stale, so cross-run assets are never trusted); on a
+    * asset yet (the [[Pairs]]/[[SimhashPairs]] families — the
+    * [[Staged]] family rule); on a
     * warm run the query is exactly the model-sized matrix joins —
     * SCALING.md's 15× staged-vs-self-contained row is the measured
     * difference, and StagedEntriesSpec pins both result-equivalence
@@ -493,8 +493,8 @@ object Dedup {
     */
   def q138DedupAgreementStaged(s: SparkSession, dir: String): DataFrame = {
     val work = stageRoot(dir)
-    if (!Staged.isFresh(work, "pairs")) stagePairs(s, dir, work)
-    if (!Staged.isFresh(work, "sh_pairs")) stageSimhashPairs(s, dir, work)
+    Pairs.need(s, dir, work)
+    SimhashPairs.need(s, dir, work)
     dedupAgreementStaged(s, dir, work)
   }
 
@@ -826,14 +826,13 @@ object Dedup {
     * persisted once. Returns the pairs path.
     */
   def stagePairs(s: SparkSession, dir: String, workDir: String): String = {
-    val p = s"$workDir/pairs"
-    // freshness short-circuit inside the function (stageCells'
-    // discipline): the expensive LSH derivation runs once per refresh,
-    // and every consumer (q37/q86/q123/q127/...) pays reads only warm
-    if (Staged.isFresh(workDir, "pairs")) return p
     q31MinhashPairs(s, dir).stagePublish(workDir, "pairs")
-    p
+    s"$workDir/pairs"
   }
+
+  /** The expensive LSH derivation runs once per refresh; every consumer
+    * (q37/q86/q123/q127/...) pays reads only warm. */
+  lazy val Pairs: Staged.Family = Staged.Family("pairs")()(stagePairs)
 
   /** Stage 2: pairs parquet → cluster labels, persisted. Reads ONLY the
     * staged pairs — no raw text, no re-hashing. Uses the O(log n) star
@@ -850,21 +849,29 @@ object Dedup {
     * near-dup chains can't blow it up.
     */
   def stageClusters(s: SparkSession, workDir: String): String = {
-    val p = s"$workDir/clusters"
-    if (Staged.isFresh(workDir, "clusters")) return p
     connectedComponentsStar(Staged.read(s, workDir, "pairs"))
       .stagePublish(workDir, "clusters")
-    p
+    s"$workDir/clusters"
   }
+
+  lazy val Clusters: Staged.Family =
+    Staged.Family("clusters")() { (s, dir, work) =>
+      Pairs.need(s, dir, work)
+      stageClusters(s, work)
+    }
 
   /** Stage 3: cluster parquet + corpus ids → surviving corpus. */
   def stageSurvivors(s: SparkSession, dir: String, workDir: String): String = {
-    val p = s"$workDir/survivors"
-    if (Staged.isFresh(workDir, "survivors")) return p
     survivorsOf(t(s, dir, "documents"), Staged.read(s, workDir, "clusters"))
       .stagePublish(workDir, "survivors")
-    p
+    s"$workDir/survivors"
   }
+
+  lazy val Survivors: Staged.Family =
+    Staged.Family("survivors")() { (s, dir, work) =>
+      Clusters.need(s, dir, work)
+      stageSurvivors(s, dir, work)
+    }
 
   /** Per-sf staging area. Ephemeral derived data (same category as
     * Spark's own checkpoint/shuffle files), so it lives under the JVM
@@ -911,11 +918,8 @@ object Dedup {
     */
   def q37StagedSurvivors(s: SparkSession, dir: String): DataFrame = {
     val work = stageRoot(dir)
-    stagePairs(s, dir, work)
-    stageClusters(s, work)
-    stageSurvivors(s, dir, work)
-    val clusters = Staged.read(s, work, "clusters")
-    Staged.read(s, work, "survivors")
+    val clusters = Clusters.read(s, dir, work, "clusters")
+    Survivors.read(s, dir, work, "survivors")
       .join(clusters.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
@@ -941,14 +945,15 @@ object Dedup {
     * partitions, so it shaved only 2.4M → 1.6M on the same replica.
     */
   def stagePairsStar(s: SparkSession, dir: String, workDir: String): String = {
-    val p = s"$workDir/pairs_star"
-    if (Staged.isFresh(workDir, "pairs_star")) return p
     connectedComponentsStar(q31MinhashPairs(s, dir))
       .where(col("doc_id") =!= col("cluster_id"))
       .select(col("cluster_id").as("doc_a"), col("doc_id").as("doc_b"))
       .stagePublish(workDir, "pairs_star")
-    p
+    s"$workDir/pairs_star"
   }
+
+  lazy val PairsStar: Staged.Family =
+    Staged.Family("pairs_star")()(stagePairsStar)
 
   /** q173 — q37's staged pipeline with the STAR pair archive:
     * pairs_star → CC (trivial on a star: one round) → survivors.
@@ -966,10 +971,8 @@ object Dedup {
     * the archive alone reproduces the pipeline's answer.
     */
   def q173StagedSurvivorsStar(s: SparkSession, dir: String): DataFrame = {
-    val work = stageRoot(dir)
-    if (!Staged.isFresh(work, "pairs_star")) stagePairsStar(s, dir, work)
     val clusters = connectedComponentsStar(
-        Staged.read(s, work, "pairs_star"))
+        PairsStar.read(s, dir, stageRoot(dir), "pairs_star"))
       .localCheckpoint() // survivors anti-join + label join both read it
     survivorsOf(t(s, dir, "documents"), clusters)
       .join(clusters.select(col("doc_id"), col("cluster_id")),
@@ -998,8 +1001,7 @@ object Dedup {
     */
   def q127QualitySurvivors(s: SparkSession, dir: String): DataFrame = {
     val work = stageRoot(dir)
-    stagePairs(s, dir, work)
-    stageClusters(s, work)
+    Clusters.need(s, dir, work)
     val clusters = Staged.read(s, work, "clusters")
     val members = t(s, dir, "documents").select(col("doc_id"))
       .join(clusters.select(col("doc_id"), col("cluster_id")),
@@ -1038,8 +1040,7 @@ object Dedup {
     */
   def q86LeakfreeSplit(s: SparkSession, dir: String): DataFrame = {
     val work = stageRoot(dir)
-    stagePairs(s, dir, work)
-    stageClusters(s, work)
+    Clusters.need(s, dir, work)
     val clusters = Staged.read(s, work, "clusters")
       .select(col("doc_id"), col("cluster_id"))
     val bucket = expr(
@@ -1151,14 +1152,26 @@ object Dedup {
     */
   def stageDedupArchive(s: SparkSession, dir: String,
       work: String): Unit = {
-    val isNew = col("doc_id") % 10 === 9
-    t(s, dir, "documents").where(!isNew)
-      .select(col("doc_id"), md5(normText(col("text"))).as("nh"))
-      .stagePublish(work, "corpus_nh")
-    val csh = hashedShingles(s, dir).where(!isNew).localCheckpoint()
+    CorpusNh.need(s, dir, work)
+    val csh = hashedShingles(s, dir).where(col("doc_id") % 10 =!= 9)
+      .localCheckpoint()
     csh.stagePublish(work, "corpus_sh")
     minhashSignatures(csh).stagePublish(work, "corpus_sig")
   }
+
+  lazy val DedupArchive: Staged.Family =
+    Staged.Family("corpus_sh", "corpus_sig")()(stageDedupArchive)
+
+  /** The archive's normalized-text hash table (the exact-dup tier) —
+    * one asset shared by the dedup archive and the drift baseline
+    * ([[Text.stageDriftBaseline]]), so both stagers need it from here.
+    */
+  lazy val CorpusNh: Staged.Family =
+    Staged.Family("corpus_nh")() { (s, dir, work) =>
+      t(s, dir, "documents").where(col("doc_id") % 10 =!= 9)
+        .select(col("doc_id"), md5(normText(col("text"))).as("nh"))
+        .stagePublish(work, "corpus_nh")
+    }
 
   /** q148 — q48's incremental-ingest dedup as the PRODUCTION
     * staged-input entry: the nightly batch (doc_id % 10 = 9) is the
@@ -1175,15 +1188,12 @@ object Dedup {
     */
   def q148IngestDedupStaged(s: SparkSession, dir: String): DataFrame = {
     val work = stageRoot(dir)
-    if (!Staged.isFresh(work, "corpus_nh") ||
-        !Staged.isFresh(work, "corpus_sh") ||
-        !Staged.isFresh(work, "corpus_sig"))
-      stageDedupArchive(s, dir, work)
+    DedupArchive.need(s, dir, work)
     val isNew = col("doc_id") % 10 === 9
     val nhN = t(s, dir, "documents").where(isNew)
       .select(col("doc_id"), md5(normText(col("text"))).as("nh"))
     val exact = nhN.as("n")
-      .join(Staged.read(s, work, "corpus_nh").as("c"),
+      .join(CorpusNh.read(s, dir, work, "corpus_nh").as("c"),
         col("n.nh") === col("c.nh"))
       .groupBy(col("n.doc_id").as("doc_id"))
       .agg(min(col("c.doc_id")).as("exact_id"))

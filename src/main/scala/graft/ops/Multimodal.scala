@@ -141,12 +141,12 @@ object Multimodal {
     * construction law exactly, and the DuckDB oracle recomputes them
     * FROM that law — so a hash match proves the encoder and the parser
     * agree byte-for-byte on every document. Scale shape: staged-blob
-    * read + spread + one decode map ([[ensureMediaTable]] — the
+    * read + spread + one decode map ([[mediaTable]] — the
     * production economics: blobs are stored, not re-encoded per query).
     */
   def q80PpmDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ensureMediaTable(s, dir, "ppm_media", ppmTable).as[PpmRow]
+    mediaTable(s, dir, PpmMedia).as[PpmRow]
       .mapPartitions(_.map { r =>
         val img = Ppm.decode(r.payload)
         var sum = 0L
@@ -184,7 +184,7 @@ object Multimodal {
   def q124ImageEmbed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val idot = graft.ops.Similarity.idot _
-    val feats = ensureMediaTable(s, dir, "ppm_media", ppmTable).as[PpmRow]
+    val feats = mediaTable(s, dir, PpmMedia).as[PpmRow]
       .mapPartitions(_.map { r =>
         val img = Ppm.decode(r.payload)
         val n = img.width * img.height
@@ -252,7 +252,7 @@ object Multimodal {
     import s.implicits._
     val (ow, oh) = (4, 3)
     val M = 1L << 53
-    ensureMediaTable(s, dir, "ppm_media", ppmTable).as[PpmRow]
+    mediaTable(s, dir, PpmMedia).as[PpmRow]
       .mapPartitions(_.map { r =>
         val img = Ppm.decode(r.payload)
         var hsh = 0L
@@ -316,11 +316,11 @@ object Multimodal {
     * which the oracle recomputes without ever parsing RIFF: a hash
     * match proves encoder and parser agree byte-for-byte, junk chunks
     * included. Scale shape: staged-blob read + spread + one decode
-    * map ([[ensureMediaTable]] — q80's economics).
+    * map ([[mediaTable]] — q80's economics).
     */
   def q108WavDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ensureMediaTable(s, dir, "wav_media", wavTable).as[WavRow]
+    mediaTable(s, dir, WavMedia).as[WavRow]
       .mapPartitions(_.map { r =>
         val a = Wav.decode(r.payload)
         var sumAbs = 0L
@@ -379,7 +379,7 @@ object Multimodal {
     */
   def q155PngDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ensureMediaTable(s, dir, "png_media", pngTable).as[PngRow]
+    mediaTable(s, dir, PngMedia).as[PngRow]
       .mapPartitions(_.map { r =>
         val img = Png.decode(r.payload)
         var sum = 0L
@@ -450,7 +450,7 @@ object Multimodal {
     */
   def q157JpegDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ensureMediaTable(s, dir, "jpeg_media", jpegTable).as[JpegRow]
+    mediaTable(s, dir, JpegMedia).as[JpegRow]
       .mapPartitions(_.map { r =>
         val img = Jpeg.decode(r.payload)
         var sum = 0L
@@ -528,7 +528,7 @@ object Multimodal {
     */
   def q170VideoDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    ensureMediaTable(s, dir, "avi_media", aviTable).as[AviRow]
+    mediaTable(s, dir, AviMedia).as[AviRow]
       .mapPartitions(_.flatMap { r =>
         val v = Avi.decode(r.payload)
         v.frames.zipWithIndex.collect {
@@ -656,7 +656,7 @@ object Multimodal {
     */
   def q175ImagePhashPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hashes = ensureMediaTable(s, dir, "phash_media", phashJpegTable)
+    val hashes = mediaTable(s, dir, PhashMedia)
       .as[JpegRow]
       .mapPartitions(_.map { r =>
         val (h0, h1) = graft.functions.Phash.phash128(phashLuma(r.payload))
@@ -720,7 +720,7 @@ object Multimodal {
     */
   def q185VideoPhashPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hashes = ensureMediaTable(s, dir, "vphash_media", vphashAviTable)
+    val hashes = mediaTable(s, dir, VphashMedia)
       .as[AviRow]
       .mapPartitions(_.flatMap { r =>
         val v = Avi.decode(r.payload)
@@ -818,7 +818,7 @@ object Multimodal {
     */
   def q186VideoClipPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hashes = ensureMediaTable(s, dir, "vclip_media", vclipAviTable)
+    val hashes = mediaTable(s, dir, VclipMedia)
       .as[AviRow]
       .mapPartitions(_.flatMap { r =>
         Avi.decode(r.payload).frames.zipWithIndex.map { case (fb, f) =>
@@ -947,7 +947,7 @@ object Multimodal {
     */
   def q191VideoCutContainment(s: SparkSession, dir: String): DataFrame =
     clipHashPairs(cutSampledFrameHashes(s,
-      ensureMediaTable(s, dir, "vcut_media", vcutAviTable)))
+      mediaTable(s, dir, VcutMedia)))
 
   /** The cut-sampling stage of [[q191VideoCutContainment]], factored
     * for VideoCutSpec (sampled-volume and recall-parity pins):
@@ -1036,27 +1036,38 @@ object Multimodal {
       .orderBy(col("doc_a"), col("doc_b"), col("delta"))
   }
 
-  /** Stage a synthetic media table once per (data, build) and read it
-    * back as the versioned parquet asset — the production economics:
-    * a real corpus' blobs are STORED, not synthesized per query, so
-    * q175/q176's warm cost is honestly decode + hash + join, with the
-    * one-time encode paid at staging like every index build
-    * (`Staged.isFresh` guard — the round-14 ensure* discipline).
+  /** A synthetic media table staged once per (data, build), one family
+    * per media name — the production economics: a real corpus' blobs
+    * are STORED, not synthesized per query, so q175/q176's warm cost is
+    * honestly decode + hash + join, with the one-time encode paid at
+    * staging like every index build.
     */
-  private def ensureMediaTable(s: SparkSession, dir: String, name: String,
-      build: (SparkSession, String) => DataFrame): DataFrame = {
-    import Staged.StagedWriter
-    val work = Dedup.stageRoot(dir)
-    if (!Staged.isFresh(work, name)) build(s, dir).stagePublish(work, name)
+  private def mediaFamily(name: String,
+      build: (SparkSession, String) => DataFrame): Staged.Family =
+    Staged.Family(name)()((s, dir, work) =>
+      Staged.write(build(s, dir), work, name))
+
+  private lazy val PpmMedia = mediaFamily("ppm_media", ppmTable)
+  private lazy val WavMedia = mediaFamily("wav_media", wavTable)
+  private lazy val PngMedia = mediaFamily("png_media", pngTable)
+  private lazy val JpegMedia = mediaFamily("jpeg_media", jpegTable)
+  private lazy val AviMedia = mediaFamily("avi_media", aviTable)
+  private lazy val PhashMedia = mediaFamily("phash_media", phashJpegTable)
+  private lazy val VphashMedia = mediaFamily("vphash_media", vphashAviTable)
+  private lazy val VclipMedia = mediaFamily("vclip_media", vclipAviTable)
+  private lazy val VcutMedia = mediaFamily("vcut_media", vcutAviTable)
+  private lazy val FpMedia = mediaFamily("fp_media", fpWavTable)
+
+  private def mediaTable(s: SparkSession, dir: String,
+      media: Staged.Family): DataFrame =
     // the staged blobs are small enough that the file scanner packs
     // them into ONE split (5000 × ~3 KB ≪ maxPartitionBytes), which
     // would serialize the codec map downstream; spread them — the
     // shuffle moves megabytes once, the decode it parallelizes costs
     // seconds. A production media table is multi-gigabyte and splits
     // naturally.
-    Staged.read(s, work, name)
+    media.read(s, dir, Dedup.stageRoot(dir), media.names.head)
       .repartition(s.sparkContext.defaultParallelism)
-  }
 
   /** The media near-dup pairs behind q175 (image pHash) and q176
     * (audio fingerprint): [[Banding.hammingPairs]] over (doc_id, h0,
@@ -1139,7 +1150,7 @@ object Multimodal {
     */
   def q176AudioFpPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hashes = ensureMediaTable(s, dir, "fp_media", fpWavTable)
+    val hashes = mediaTable(s, dir, FpMedia)
       .as[WavRow]
       .mapPartitions(_.map { r =>
         val (h0, h1) = graft.functions.AudioFp.fingerprint128(

@@ -53,6 +53,23 @@ import scala.jdk.CollectionConverters._
   * economics that previously stopped at the JVM boundary. Staging is
   * deterministic everywhere (no RNG — DeterminismSpec), which is what
   * makes byte-level reuse sound.
+  *
+  * Every staged asset belongs to exactly one [[Family]], declared once
+  * next to its stager; consumers call the family's `need`/`read`/
+  * `resolve`, never a freshness check of their own. The family rule:
+  *
+  *   - its MEMBERS are the assets one build publishes together; the
+  *     family is fresh only when EVERY member is (a half-published
+  *     family rebuilds, never serves);
+  *   - its SOURCES are the (label, asset) pairs of other families it
+  *     derives from, in stamp order. A family with sources stamps each
+  *     member with its LINEAGE — `label=version` per source (the
+  *     manifest's `v=N`), joined with `,` — and is fresh only while
+  *     every member carries the lineage of the sources' CURRENT
+  *     versions, so a moved source rebuilds it;
+  *   - a SOURCELESS family only needs fresh members (its stager may
+  *     still stamp them with a refresh nonce, [[newGroupId]], for
+  *     all-or-nothing reads).
   */
 object Staged {
   private val fresh =
@@ -138,6 +155,110 @@ object Staged {
     */
   def read(s: SparkSession, work: String, name: String): DataFrame =
     Tables.readParquet(s, path(work, name))
+
+  /** One member of a [[Family]] — what a derived family names as a
+    * source. */
+  final case class Asset(family: Family, name: String)
+
+  /** A staged asset family: its member names, the sources it derives
+    * from, and the stager that publishes every member (the family rule
+    * is in this object's header). `build(s, dir, work)` runs only from
+    * [[need]], after the sources' families are built; a stager of a
+    * family with sources stamps each member with [[lineage]].
+    */
+  final class Family(val names: Seq[String],
+      val sources: Seq[(String, Asset)],
+      build: (SparkSession, String, String) => Unit) {
+    require(names.nonEmpty, "staged: a family needs at least one member")
+
+    /** This family's member `name`, as a source of another family. */
+    def apply(name: String): Asset = {
+      require(names.contains(name), s"staged: $name is not in $this")
+      Asset(this, name)
+    }
+
+    private def upstream: Seq[Family] = sources.map(_._2.family).distinct
+
+    /** The stamp a build over the sources' current versions carries. */
+    def lineage(work: String): String =
+      stamp(versionOf(work, _).getOrElse("absent"))
+
+    /** The stamp a build over PINNED source versions (a [[resolve]]d
+      * snapshot: name → `v=N` path) carries. */
+    def lineageOf(pinned: Map[String, String]): String =
+      stamp(n => Paths.get(pinned(n)).getFileName.toString)
+
+    private def stamp(version: String => String): String =
+      sources.map { case (label, a) => s"$label=${version(a.name)}" }
+        .mkString(",")
+
+    private def fresh(work: String): Boolean =
+      names.forall(isFresh(work, _)) && (sources.isEmpty || {
+        val want = lineage(work)
+        names.forall(groupOf(work, _).contains(want))
+      })
+
+    /** Build the sources' families, then this one if it is stale. */
+    def need(s: SparkSession, dir: String, work: String): Unit = {
+      upstream.foreach(_.need(s, dir, work))
+      if (!fresh(work)) build(s, dir, work)
+    }
+
+    def read(s: SparkSession, dir: String, work: String,
+        name: String): DataFrame = {
+      need(s, dir, work)
+      Staged.read(s, work, this(name).name)
+    }
+
+    /** Pin this family and its sources' families to concrete version
+      * dirs (member name → `v=N` path) that belong together: each
+      * family's members resolve group-consistently ([[resolveGroup]];
+      * a lone unstamped member resolves to its manifest version), and
+      * this family's stamp must equal the lineage of the pinned source
+      * versions. A source refresh landing between the two resolves
+      * reads as a mismatch: rebuild and retry, and fail by name if the
+      * sources keep moving.
+      */
+    def resolve(s: SparkSession, dir: String, work: String): Map[String, String] = {
+      var attempt = 0
+      while (true) {
+        need(s, dir, work)
+        val src = upstream.map(_.resolve(s, dir, work)).foldLeft(
+          Map.empty[String, String])(_ ++ _)
+        val (own, got) = pin(work)
+        val want = lineageOf(src)
+        if (sources.isEmpty || got.contains(want)) return src ++ own
+        attempt += 1
+        require(attempt < 5, s"staged: $this kept trailing a moving " +
+          s"source refresh (stamp ${got.getOrElse("none")} vs expected $want)")
+      }
+      throw new IllegalStateException("unreachable")
+    }
+
+    private def pin(work: String): (Map[String, String], Option[String]) =
+      if (names.size == 1 && groupOf(work, names.head).isEmpty) {
+        val n = names.head
+        val p = versionOf(work, n)
+          .map(v => Paths.get(work, ".v", n, v).toString)
+          .getOrElse(path(work, n))
+        (Map(n -> p), None)
+      } else {
+        val (m, g) = resolveGroupStamped(work, names)
+        (m, Some(g))
+      }
+
+    override def toString: String = names.mkString("family(", ", ", ")")
+  }
+
+  object Family {
+    /** `Family("a", "b")()(stageAB)` declares a sourceless family;
+      * `Family("g")("cells" -> ivf("cells"))(stageG)` one derived from
+      * the IVF family's `cells`, stamped `cells=v=N`.
+      */
+    def apply(names: String*)(sources: (String, Asset)*)(
+        build: (SparkSession, String, String) => Unit): Family =
+      new Family(names, sources, build)
+  }
 
   /** Claim a fresh immutable version directory for `name` — the
     * writer fills it, then [[commit]]s. Claiming is an atomic

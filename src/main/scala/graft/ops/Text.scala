@@ -1863,11 +1863,14 @@ object Text {
     perRound.reduce(_ unionAll _).orderBy(col("round"))
   }
 
+  lazy val BpeMerges: Staged.Family =
+    Staged.Family("bpe_merges")()((s, dir, _) => q116BpeTrain(s, dir))
+
   /** Tokenizer APPLY — the inference half of q116's training loop:
     * encode every document with the STAGED merge table (the trained
     * tokenizer artifact q116 writes), applying the [[BpeRounds]]
-    * merges in training order. A GUARDED [[q116BpeTrain]] invocation
-    * makes the query self-contained (Verify's query order is
+    * merges in training order. The [[BpeMerges]] family (training by
+    * [[q116BpeTrain]] only when stale) makes the query self-contained (Verify's query order is
     * arbitrary, so a staged consumer must be able to stage — the
     * q78/q37 discipline — but a warm run pays the encode only, never
     * a retrain per invocation); the
@@ -1886,11 +1889,9 @@ object Text {
     */
   def q121BpeEncode(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
-    // guarded (q126's recert discipline): train only when the staged
-    // tokenizer is stale — the apply row's warm cost is the encode,
-    // not a retrain per invocation
-    if (!Staged.isFresh(work, "bpe_merges")) q116BpeTrain(s, dir)
-    val merges = Staged.read(s, work, "bpe_merges")
+    // train only when the staged tokenizer is stale — the apply row's
+    // warm cost is the encode, not a retrain per invocation
+    val merges = BpeMerges.read(s, dir, work, "bpe_merges")
       .orderBy(col("round"))
       .select(col("w1"), col("w2")).collect()
     val init = t(s, dir, "documents")
@@ -1971,9 +1972,8 @@ object Text {
   def stageMaxMatchVocab(s: SparkSession, dir: String, work: String): Unit =
     substringPool(s, dir).stagePublish(work, "mm_vocab")
 
-  private def ensureMaxMatchVocab(s: SparkSession, dir: String,
-      work: String): Unit =
-    if (!Staged.isFresh(work, "mm_vocab")) stageMaxMatchVocab(s, dir, work)
+  lazy val MaxMatchVocab: Staged.Family =
+    Staged.Family("mm_vocab")()(stageMaxMatchVocab)
 
   /** q182 — MaxMatch (WordPiece-inference) TOKENIZER APPLY: greedy
     * longest-match segmentation of every distinct corpus word under
@@ -2000,8 +2000,7 @@ object Text {
     */
   def q182MaxmatchTokenize(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
-    ensureMaxMatchVocab(s, dir, work)
-    val toks = Staged.read(s, work, "mm_vocab")
+    val toks = MaxMatchVocab.read(s, dir, work, "mm_vocab")
       .select(col("tok")).orderBy(col("tok"))
       .collect().map(_.getString(0)) // model-sized tokenizer artifact
     wordTypeCounts(s, dir)
@@ -2103,6 +2102,9 @@ object Text {
       .stagePublish(work, "unigram_segs", gen)
   }
 
+  lazy val UnigramEstep: Staged.Family =
+    Staged.Family("unigram_model0", "unigram_segs")()(stageUnigramEstep)
+
   /** q190 — the unigram-LM M-STEP as a declarative catalog row (the
     * round-14 verdict's "shrink the spec-only surface": the E-step
     * proper is the Viterbi kernel — spec-certified under the kmeans
@@ -2120,11 +2122,7 @@ object Text {
     */
   def q190UnigramMstep(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
-    if (!Staged.isFresh(work, "unigram_model0") ||
-        !Staged.isFresh(work, "unigram_segs"))
-      stageUnigramEstep(s, dir, work)
-    val snap = Staged.resolveGroup(work,
-      Seq("unigram_model0", "unigram_segs"))
+    val snap = UnigramEstep.resolve(s, dir, work)
     val m0 = s.read.parquet(snap("unigram_model0"))
     val c = s.read.parquet(snap("unigram_segs"))
       .groupBy(col("token")).agg(sum(col("wc")).as("c"))
@@ -2262,7 +2260,7 @@ object Text {
     */
   def q129BpeTokenIds(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
-    if (!Staged.isFresh(work, "bpe_merges")) q116BpeTrain(s, dir) // guarded: stages bpe_merges once
+    BpeMerges.need(s, dir, work)
     q96VocabBuild(s, dir).select(col("token_id"), col("token"))
       .stagePublish(work, "vocab")
     val merges = Staged.read(s, work, "bpe_merges")
@@ -2488,15 +2486,12 @@ object Text {
   /** Stage the drift BASELINE — the corpus-side aggregates the
     * streaming monitor compares every micro-batch against: per-lang
     * doc/token counts, the distinct (lang, word) vocabulary, and the
-    * normalized-hash table for the exact-dup probe. The nh table is
-    * byte-identical to the q148 archive's `corpus_nh` (one asset, two
-    * stagers), so it is written only when no query of the run has
-    * staged it yet — a monitor deployment that stages ONLY the drift
-    * baseline must not fail on its first micro-batch (round-10
-    * advisor), and one that runs after the dedup archive must not
-    * re-derive the corpus. Like the dedup archive, these grow by
-    * append as batches are admitted; the corpus split stands in for
-    * the current state.
+    * normalized-hash table for the exact-dup probe — the q148
+    * archive's `corpus_nh` family ([[Dedup.CorpusNh]]), needed here so
+    * a monitor deployment that stages ONLY the drift baseline does not
+    * fail on its first micro-batch (round-10 advisor). Like the dedup
+    * archive, these grow by append as batches are admitted; the corpus
+    * split stands in for the current state.
     */
   def stageDriftBaseline(s: SparkSession, dir: String,
       work: String): Unit = {
@@ -2511,11 +2506,7 @@ object Text {
       .select(col("lang"), explode(words(col("text"))).as("w"))
       .distinct()
       .stagePublish(work, "corpus_vocab")
-    if (!Staged.isFresh(work, "corpus_nh")) {
-      t(s, dir, "documents").where(!isNew)
-        .select(col("doc_id"), md5(normText(col("text"))).as("nh"))
-        .stagePublish(work, "corpus_nh")
-    }
+    Dedup.CorpusNh.need(s, dir, work)
   }
 
   /** q150's batch-side signals for ONE batch of (doc_id, lang, text)

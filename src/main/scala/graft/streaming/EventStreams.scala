@@ -957,7 +957,7 @@ object EventStreams {
       s.read.parquet(s"$stagedDir/sample_stream"))
 
   /** Streaming ingest into the TWO-LEVEL index — [[ivfIngestStream]]'s
-    * twin for the hierarchical quantizer (the stageCells production
+    * twin for the hierarchical quantizer (the stageIvfIndex production
     * default above the flat clamp): micro-batches super-assign
     * through the same broadcast literal argmax and sub-assign against
     * the broadcast model-sized level-2 centroid table
@@ -1358,8 +1358,8 @@ object EventStreams {
     walkOnce(queries, s"$work/graph_walk_results_stream", centroids,
         nprobe, checkpoint) { (s, q, probes) =>
       import graft.ops.Similarity
-      val (snap, gsnap) = Similarity.resolveWalkSnapshots(s, dir, work)
-      Similarity.graphWalkServeOn(s, dir, snap, gsnap,
+      Similarity.graphWalkServeOn(Similarity.walkInputs(s, dir,
+          Similarity.KnnGraph.resolve(s, dir, work)),
         q.select(col("vec_id").as("query_id"),
           col("v").as("qv"), col("nrm").as("qn")), probes)
     }
@@ -1386,10 +1386,10 @@ object EventStreams {
       checkpoint: String): StreamingQuery =
     walkOnce(queries, s"$work/graph_walk_pq_results_stream", centroids,
         nprobe, checkpoint) { (s, q, probes) =>
-      import graft.ops.{Similarity, Staged}
-      val (_, gsnap) = Similarity.resolveWalkSnapshots(s, dir, work)
-      val pq = Staged.resolveGroup(work, Seq("pq_codes", "pq_codebook"))
-      Similarity.graphWalkPqServeOn(s, dir, gsnap, pq,
+      import graft.ops.Similarity
+      Similarity.graphWalkPqServeOn(s, dir,
+        Similarity.KnnGraph.resolve(s, dir, work),
+        Similarity.PqIndex.resolve(s, dir, work),
         q.select(col("vec_id").as("query_id"), col("v")), probes)
     }
 

@@ -13,7 +13,10 @@ import scala.jdk.CollectionConverters._
   *    runs one inference job per read;
   *  - `foreachBatch` and `Trigger.AvailableNow` appear only inside
   *    `EventStreams.drain`, so every streaming twin goes through the
-  *    one micro-batch skeleton.
+  *    one micro-batch skeleton;
+  *  - `Staged.isFresh`, `Staged.versionOf` and `Staged.groupOf` are
+  *    called only inside `Staged.scala`: whether a staged asset is
+  *    stale, and its lineage stamp, are decided by its `Staged.Family`.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -61,6 +64,16 @@ class SourceLintSpec extends AnyFunSuite {
         .mkString(", "))
     assert(hits.count(_._3 == "foreachBatch") === 1,
       "foreachBatch must appear exactly once, inside drain")
+  }
+
+  test("staged freshness and stamps are read only inside Staged") {
+    val check = """\bStaged\.(isFresh|versionOf|groupOf)\b""".r
+    val hits = for {
+      (file, src) <- sources if file != "graft/ops/Staged.scala"
+      m <- check.findAllMatchIn(src)
+    } yield s"${m.matched} at $file:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, "a freshness or stamp check outside " +
+      s"Staged.Family: ${hits.mkString(", ")}")
   }
 }
 

@@ -379,7 +379,7 @@ class PlanSpec extends SparkSpec {
     val p = plan("q170_video_decode")
     // exactly two Exchanges: the round-robin spread of the staged
     // blob read (small files pack into one split — the repartition
-    // parallelizes the codec map, see ensureMediaTable) and the final
+    // parallelizes the codec map, see Multimodal.mediaTable) and the final
     // global orderBy; demux and per-frame decode all ride
     // mapPartitions/SerializeFromObject, and nothing joins
     val exchanges = p.linesIterator.count(_.trim.startsWith("+- Exchange")) +

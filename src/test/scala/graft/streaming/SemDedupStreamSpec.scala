@@ -50,7 +50,7 @@ class SemDedupStreamSpec extends SparkSpec {
     assert(expected.nonEmpty, "planted corpus must produce sem clusters")
 
     // the SAME trained centroids the batch staged its cells with
-    // (stageCells below the flat clamp == trainCodebook, deterministic)
+    // (stageIvfIndex below the flat clamp == trainCodebook, deterministic)
     val n = spark.read.parquet(s"$d/embeddings.parquet").count()
     val (centroids, _) =
       Similarity.trainCodebook(spark, d, Similarity.adaptiveCellCount(n))
