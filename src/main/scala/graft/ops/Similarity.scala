@@ -304,11 +304,12 @@ object Similarity {
     // the last Lloyd update moves the centroids AFTER the in-loop
     // assignment was taken, so a vector near a cell boundary could be
     // assigned under the penultimate codebook while every later consumer
-    // (probe-side descent, streaming ingest's assignHierCells, the staged
+    // (probe-side descent, streaming ingest's CellTree.assign, the staged
     // search joins) scores the FINAL one — a streamed row would then land
     // in a different cell than its batch-staged twin. One extra
-    // assignment pass under the final centroids closes that gap for both
-    // the flat and (via trainHier's level 1) the hierarchical index.
+    // assignment pass under the final centroids closes that gap for the
+    // flat index; CellTree's codebook root re-assigns under the final
+    // centroids the same way.
     (centroids, iv.select(col("vec_id"),
       cellAssignment(centroids).as("cluster")))
   }
@@ -337,8 +338,8 @@ object Similarity {
     * seeding rounds, not the table width). Capacity: 64³ = 262,144
     * cells ≈ 537M vectors per refresh partition at [[CellTarget]] —
     * k ~ n^(1/3) per level keeps training corpus-linear. Above THAT a
-    * fourth [[trainSubCells]] pass is the same one-liner (the trainer
-    * is depth-agnostic), or shard the refresh across partitions — a
+    * fourth learned [[CellTree]] level is one more k in the shape (the
+    * trainer is depth-agnostic), or shard the refresh — a
     * 10¹⁰-vector corpus refreshes as ~20 partition-local indexes, the
     * standard sharded-ANN serving layout.
     */
@@ -496,104 +497,48 @@ object Similarity {
     */
   val EscalationProbes = 8
 
-  /** Stage the full IVF index in ONE training run: the cell assignments
-    * (vec_id → cluster) AND the multi-probe lists (query_id → probed
-    * cell, nprobe=2 and [[EscalationProbes]]). Probe selection depends
-    * on the trained model (like the assignments), so it stages; the
-    * SEARCH over staged probes+cells is pure relational algebra the
-    * oracle replays. At 100 TB the assignment table IS the index:
-    * training runs once (or per refresh), every search after that is
-    * an equi-join against the staged tables and never re-trains.
-    *
-    * Quantizer selection is AUTOMATIC: flat single-codebook Lloyd
-    * ([[trainCodebook]]) while the ~[[CellTarget]]-sized cell count
-    * fits the k ≤ 64 literal-column clamp (the historical form every
-    * sf0.01/sf0.1 oracle certifies), the two-level hierarchical
-    * quantizer ([[trainHier]] — centroids a broadcast TABLE,
-    * corpus-linear training, measured 2.5× cheaper than flat at equal
-    * capacity, SCALING.md "Hierarchical vs flat coarse training") above
-    * it — with probe selection by TREE DESCENT ([[hierProbes]]: k1 +
-    * O(k2·width) scores per query; at volume-matched widths ≥ k1 the
-    * bound degenerates to k1 + k1·k2, still far below scoring the
-    * corpus) — and three levels above [[Hier2MaxCells]]. Consumers
-    * (q78/q79/q82/q92/q99/q106/q117/q130) read only the staged
-    * (cells, probes) tables and cannot tell which quantizer produced
-    * them. Measured at the 70× probe (140k vectors): flat-path q79 was
-    * 292.7 s, dominated by k=64 literal-expression Lloyd; the hier path
-    * trains the same corpus in ~44 s.
+  /** The production IVF index's shape, chosen AUTOMATICALLY from the
+    * corpus size n: the flat codebook (the depth-0 [[CellTree]], the
+    * historical form every sf0.01/sf0.1 oracle certifies) while the
+    * ~[[CellTarget]]-sized cell count fits the k ≤ 64 literal-column
+    * clamp; above it a codebook root plus one learned level
+    * ([[hierFactors]] — centroids a broadcast TABLE, corpus-linear
+    * training, measured 2.5× cheaper than flat at equal capacity,
+    * SCALING.md "Hierarchical vs flat coarse training"); and two
+    * learned levels above [[Hier2MaxCells]]. Measured at the 70× probe
+    * (140k vectors): flat-path q79 was 292.7 s, dominated by k=64
+    * literal-expression Lloyd; the two-level tree trains the same
+    * corpus in ~44 s.
     */
-  def stageIvfIndex(s: SparkSession, dir: String, workDir: String,
-      nprobe: Int = 2, maxQueryId: Long = 20L): Unit = {
-    val n = vectorCount(s, dir)
+  def ivfShape(n: Long): CellTree.Shape = {
     val want = (n + CellTarget - 1) / CellTarget
-    // ONE nonce per refresh invocation stamps all three assets, so
-    // resolveGroup readers observe the cells/probes/probes_wide family
-    // all-or-nothing (Staged.newGroupId scaladoc)
-    val gen = Staged.newGroupId(workDir)
-    if (want <= 64) {
-      val (centroids, assigned) =
-        trainCodebook(s, dir, k = adaptiveCellCount(n))
-      assigned.stagePublish(workDir, "cells", gen)
-      val queries = scaledVectors(s, dir)
-        .join(Staged.read(s, workDir, "cells").select(col("vec_id")), "vec_id")
-        .where(col("vec_id") < maxQueryId)
-        .select(col("vec_id"), col("v"), col("nrm"))
-      ivfProbes(queries, centroids, nprobe)
-        .select(col("query_id"), col("cluster"))
-        .stagePublish(workDir, "probes", gen)
-      ivfProbes(queries, centroids,
-          math.min(EscalationProbes, centroids.length))
-        .select(col("query_id"), col("cluster"))
-        .stagePublish(workDir, "probes_wide", gen)
-    } else if (want <= Hier2MaxCells) {
+    if (want <= 64)
+      CellTree.Shape(CellTree.Codebook(adaptiveCellCount(n)), Nil)
+    else if (want <= Hier2MaxCells) {
       val (k1, k2) = hierFactors(want)
-      val (c1, cents, asg) = trainHier(s, dir, k1, k2)
-      asg.select(col("vec_id"), col("cell").cast("int").as("cluster"))
-        .stagePublish(workDir, "cells", gen)
-      val queries = scaledVectors(s, dir)
-        .join(Staged.read(s, workDir, "cells").select(col("vec_id")), "vec_id")
-        .where(col("vec_id") < maxQueryId)
-        .select(col("vec_id"), col("v"), col("nrm"))
-      // VOLUME-MATCHED probing (see [[volumeMatchedWidth]]): scan the
-      // same corpus fraction as nprobe flat-default probes. With
-      // hierFactors sizing (k1·k2 ≈ want ≈ the unclamped flat cell
-      // count vs the clamped flat 64) this stays close to nprobe —
-      // never a silent k2× candidate blow-up.
-      hierProbes(queries, c1, cents, k2,
-          volumeMatchedWidth(k1.toLong * k2, n, nprobe))
-        .select(col("query_id"), col("cell").cast("int").as("cluster"))
-        .stagePublish(workDir, "probes", gen)
-      hierProbes(queries, c1, cents, k2,
-          volumeMatchedWidth(k1.toLong * k2, n, EscalationProbes))
-        .select(col("query_id"), col("cell").cast("int").as("cluster"))
-        .stagePublish(workDir, "probes_wide", gen)
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2))
     } else {
-      // above the two-level 4096-cell ceiling: three levels, same
-      // staged interface — consumers still read (cells, probes) and
-      // cannot tell the quantizer grew a level
       val (k1, k2, k3) = hierFactors3(want)
-      val (c1, cents2, cents3, asg) = trainHier3(s, dir, k1, k2, k3)
-      asg.select(col("vec_id"), col("cell").cast("int").as("cluster"))
-        .stagePublish(workDir, "cells", gen)
-      val queries = scaledVectors(s, dir)
-        .join(Staged.read(s, workDir, "cells").select(col("vec_id")), "vec_id")
-        .where(col("vec_id") < maxQueryId)
-        .select(col("vec_id"), col("v"), col("nrm"))
-      hier3Probes(queries, c1, cents2, cents3, k2, k3,
-          volumeMatchedWidth(k1.toLong * k2 * k3, n, nprobe))
-        .select(col("query_id"), col("cell").cast("int").as("cluster"))
-        .stagePublish(workDir, "probes", gen)
-      hier3Probes(queries, c1, cents2, cents3, k2, k3,
-          volumeMatchedWidth(k1.toLong * k2 * k3, n, EscalationProbes))
-        .select(col("query_id"), col("cell").cast("int").as("cluster"))
-        .stagePublish(workDir, "probes_wide", gen)
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2, k3))
     }
   }
 
+  /** Stage the full IVF index in ONE training run: the cell assignments
+    * (vec_id → cluster) AND the multi-probe lists (query_id → probed
+    * cell, nprobe=2 and [[EscalationProbes]]) of an [[ivfShape]] tree.
+    * At 100 TB the assignment table IS the index: training runs once
+    * (or per refresh), every search after that is an equi-join against
+    * the staged tables and never re-trains. Consumers
+    * (q78/q79/q82/q92/q99/q106/q117/q130) read only the staged
+    * (cells, probes) tables and cannot tell which shape produced them.
+    */
+  def stageIvfIndex(s: SparkSession, dir: String, work: String): Unit =
+    stageTree(s, dir, work, ivfShape, col("cell").cast("int").as("cluster"),
+      "cells", "probes" -> 2, "probes_wide" -> EscalationProbes)
+
   /** The IVF index family: one training publishes all three. */
   lazy val IvfIndex: Staged.Family =
-    Staged.Family("cells", "probes", "probes_wide")()(
-      stageIvfIndex(_, _, _))
+    Staged.Family("cells", "probes", "probes_wide")()(stageIvfIndex)
 
   /** Trained-IVF ANN — q42 with the `label` stand-in replaced by REAL
     * k-means cells ([[trainCodebook]]), searched through the STAGED
@@ -638,9 +583,9 @@ object Similarity {
     // but a concurrent refresh can never serve this plan mixed cells)
     val snap = IvfIndex.resolve(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(snap("cells")), "vec_id")
+      .join(readParquet(s, snap("cells")), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(snap("probes"))
+    val probes = readParquet(s, snap("probes"))
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
       .select(col("query_id"), col("cluster"),
@@ -1302,7 +1247,7 @@ object Similarity {
     val snap = ConvergedKnnGraph.resolve(s, dir, Dedup.stageRoot(dir))
     val in = walkInputs(s, dir, snap, graph = "knn_graph_conv")
     graphWalkServeOn(in, walkQueries(in.iv, None),
-      s.read.parquet(snap("probes")))
+      readParquet(s, snap("probes")))
   }
 
   /** Beam width and round count for the greedy graph walk — chosen
@@ -1399,7 +1344,7 @@ object Similarity {
   private[graft] def walkVectors(s: SparkSession, dir: String,
       snap: Map[String, String]): DataFrame =
     scaledVectors(s, dir)
-      .join(s.read.parquet(snap("cells")), "vec_id")
+      .join(readParquet(s, snap("cells")), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
 
   /** The walk's traversal substrate from a staged edge table: traverse
@@ -1440,8 +1385,8 @@ object Similarity {
       snap: Map[String, String], graph: String = "knn_graph",
       medoids: String = "knn_medoids"): WalkInputs =
     WalkInputs(walkVectors(s, dir, snap).localCheckpoint(),
-      walkSubstrate(s.read.parquet(snap(graph))).localCheckpoint(),
-      s.read.parquet(snap(medoids)))
+      walkSubstrate(readParquet(s, snap(graph))).localCheckpoint(),
+      readParquet(s, snap(medoids)))
 
   /** The batch walk entries' queries: vec_id < 20, deleted ids masked. */
   private def walkQueries(iv: DataFrame,
@@ -1492,7 +1437,7 @@ object Similarity {
       if (masked) Some(Deletes.read(s, dir, work, "deletes")) else None
     val in = walkInputs(s, dir, snap)
     graphWalkServeOn(in, walkQueries(in.iv, del),
-      s.read.parquet(snap("probes")), topK = 5, mask = del,
+      readParquet(s, snap("probes")), topK = 5, mask = del,
       filterLabels = if (filtered)
         Some(scaledVectors(s, dir).select(col("vec_id"), col("label")))
       else None)
@@ -1565,7 +1510,7 @@ object Similarity {
     graphWalkPqServeOn(s, dir, snap, PqIndex.resolve(s, dir, work),
       scaledVectors(s, dir).where(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("v")),
-      s.read.parquet(snap("probes")))
+      readParquet(s, snap("probes")))
   }
 
   /** The ONE compressed-walk serving chain, over resolved snapshots
@@ -1580,16 +1525,16 @@ object Similarity {
       snap: Map[String, String], pq: Map[String, String],
       queries: DataFrame, probes: DataFrame,
       topK: Int = 5): DataFrame = {
-    val codes = s.read.parquet(pq("pq_codes"))
+    val codes = readParquet(s, pq("pq_codes"))
     // eager ONCE per serve (the graphWalkServeOn note): the LUT is
     // model-sized (|Q|·m·k rows) and the substrate's window+distinct
     // are two shuffles — both re-executed every round otherwise
     val lut = adcLutFor(
       queries.select(col("query_id").as("vec_id"), col("v")),
-      s.read.parquet(pq("pq_codebook"))).localCheckpoint()
-    val graph = walkSubstrate(s.read.parquet(snap("knn_graph")))
+      readParquet(s, pq("pq_codebook"))).localCheckpoint()
+    val graph = walkSubstrate(readParquet(s, snap("knn_graph")))
       .localCheckpoint()
-    val medoids = s.read.parquet(snap("knn_medoids"))
+    val medoids = readParquet(s, snap("knn_medoids"))
     val visited = graphWalkVisitedAdc(probes, medoids, graph, codes,
       lut, rounds = WalkRounds, beam = WalkPqBeam)
     // the caller's OWN query vectors thread into the exact tail (the
@@ -1669,12 +1614,12 @@ object Similarity {
       work: String): Unit = {
     val snap = KnnGraph.resolve(s, dir, work)
     val key = WalkSubstrate.lineageOf(snap)
-    val nCells = s.read.parquet(snap("knn_medoids")).count()
-    val nbOf = s.read.parquet(snap("cells"))
+    val nCells = readParquet(s, snap("knn_medoids")).count()
+    val nbOf = readParquet(s, snap("cells"))
       .select(col("vec_id"),
         walkBucketExpr(col("cluster"), col("vec_id"), nCells).as("nb"))
     Staged.writePartitioned(
-      walkSubstrate(s.read.parquet(snap("knn_graph")))
+      walkSubstrate(readParquet(s, snap("knn_graph")))
         .join(nbOf.withColumnRenamed("vec_id", "node"), "node")
         .join(nbOf.select(col("vec_id").as("neighbor_id"),
           col("nb").as("neighbor_nb")), "neighbor_id")
@@ -1736,7 +1681,7 @@ object Similarity {
     // The map lives on the DRIVER (it is model-sized by construction),
     // which turns the former per-round (bucket-join collect + known
     // union checkpoint) — two whole jobs per round — into free lookups
-    val medoidsDf = s.read.parquet(src("knn_medoids")).localCheckpoint()
+    val medoidsDf = readParquet(s, src("knn_medoids")).localCheckpoint()
     val known = scala.collection.mutable.HashMap.empty[Long, Long]
     medoidsDf
       .select(col("medoid").as("node"),
@@ -1769,8 +1714,8 @@ object Similarity {
         .toDF("node", "neighbor_id")
     }
     val visited = graphWalkLoop(
-      score(walkSeeds(s.read.parquet(src("probes")),
-        s.read.parquet(src("knn_medoids")))),
+      score(walkSeeds(readParquet(s, src("probes")),
+        readParquet(s, src("knn_medoids")))),
       graphFor, score, Seq(col("cosine").desc, col("neighbor_id")),
       WalkRounds, WalkBeam)
     val wb = Window.partitionBy(col("query_id"))
@@ -1851,8 +1796,8 @@ object Similarity {
     val in = walkInputs(s, dir, snap, graph = "knn_graph_compact",
       medoids = "knn_medoids_compact")
     graphWalkServeOn(in,
-      walkQueries(in.iv, Some(s.read.parquet(snap("deletes")))),
-      s.read.parquet(snap("probes")))
+      walkQueries(in.iv, Some(readParquet(s, snap("deletes")))),
+      readParquet(s, snap("probes")))
   }
 
   /** The q156 escalation ladder on the WALK route — q193's honest
@@ -1919,7 +1864,7 @@ object Similarity {
     // checkpoints
     val in = walkInputs(s, dir, snap)
     escalatedFilteredWalk(walkQueries(in.iv, None),
-        s.read.parquet(snap("probes")), in.medoids, in.graph, in.iv,
+        readParquet(s, snap("probes")), in.medoids, in.graph, in.iv,
         scaledVectors(s, dir).select(col("vec_id"), col("label")),
         rounds = WalkRounds, beam = WalkBeam, topK = 5)
       .orderBy(col("query_id"), col("rank"))
@@ -2997,371 +2942,113 @@ object Similarity {
       ivfPqSearch(s, dir, nprobe, k, iters, RerankShortlist, maxQueryId),
       topK)
 
-  // ---- hierarchical (two-level) coarse quantizer ----
+  // ---- cell-tree indexes: one stager, one staged search ----
 
-  /** Sub-cells per super-cell for the two-level quantizer. Total cell
-    * count is k1·k2 with both factors ≤ 64, lifting the single-codebook
-    * clamp ([[adaptiveCellCount]]'s k ≤ 64, where the codebook travels
-    * as literal plan columns) to ~4096 cells — the k ~ √n a true
-    * 100 TB coarse quantizer needs — WITHOUT ever putting 4096 vectors
-    * in a plan: level-2 centroids live in a (k1·k2)-row broadcast
-    * TABLE, not in expression literals.
+  /** Sub-cells per codebook cell of the forced two-level index below
+    * the flat clamp ([[hierSizing]]).
     */
   val HierSubCells = 4
 
-  /** Cosine score of a member row against a centroid ROW (cv, cnrm) —
-    * the table-join twin of [[cellAssignment]]'s literal-column argmax;
-    * −2 (below any real cosine) when the centroid degenerated to zero
-    * norm, so `max` never elects it.
+  /** Stage one [[CellTree]] index in ONE training run: train
+    * `shapeOf(n)` over the corpus, publish the leaf assignment as
+    * `cells` and, for each (name, nprobe), the descent probe list of
+    * the queries (vec_id < 20) at the [[volumeMatchedWidth]] — the same
+    * probed corpus fraction per shard as nprobe probes of the flat
+    * default (exactly nprobe for the flat index and for each shard of a
+    * sharded flat one; nprobe·k2 for the forced two-level index below
+    * the clamp, the 0.35 → 0.90 recall@1 fix). `key` is the staged cell
+    * column: the flat IVF family's consumers read an int `cluster`,
+    * every other family a long `cell`. One group nonce stamps every
+    * member, so `resolve` readers see the family all-or-nothing. Probe
+    * selection depends on the trained model, so it stages; the search
+    * over the staged (probes, cells) pair is pure relational algebra
+    * the oracle replays, and it cannot tell the root or the depth.
     */
-  private def hierScore: Column =
-    coalesce(
-      when(col("cnrm") > 0,
-        idot(col("v"), col("cv")).cast("double") / (col("nrm") * col("cnrm"))),
-      lit(-2.0))
-
-  /** Per-vector argmax over its OWN super-cell's sub-centroids: join on
-    * the super id against the broadcast centroid table (k2 candidate
-    * rows per vector), then one partial-agg max of (cos, −sub) — ties
-    * to the lowest sub id, exactly [[cellAssignment]]'s policy.
-    */
-  /** Two-level cell assignment of a (vec_id, v, nrm) frame under an
-    * ALREADY-TRAINED model (level-1 literal centroids + the
-    * model-sized level-2 broadcast table) — the pure map stage
-    * [[graft.streaming.EventStreams.hierIngestStream]] shares with
-    * trainHier's own final assignment: super-cell by the broadcast
-    * literal argmax (zero shuffle), sub-cell by one INPUT-local
-    * partial-agg argmax against the broadcast table. The corpus is
-    * never touched; cost is linear in the input frame.
-    */
-  def assignHierCells(vecs: DataFrame, c1: Array[Array[Double]],
-      cents: DataFrame, k2: Int): DataFrame =
-    hierAssign(vecs.withColumn("cluster", cellAssignment(c1)), cents)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * k2 + col("sub")).as("cell"))
-
-  /** Full THREE-level descent assignment of fresh (vec_id, v, nrm)
-    * rows — [[assignHierCells]] one level deeper, reproducing
-    * [[trainHier3]]'s own assignment exactly: level 1+2 via the same
-    * literal-argmax + broadcast-table argmax, then the level-2 cell
-    * keys one more broadcast-table argmax against the level-3
-    * centroids. All model tables are broadcast; the input is touched
-    * twice, never shuffled on a corpus key — the shape the streaming
-    * ingest twin needs per micro-batch.
-    */
-  def assignHier3Cells(vecs: DataFrame, c1: Array[Array[Double]],
-      cents2: DataFrame, cents3: DataFrame, k2: Int,
-      k3: Int): DataFrame = {
-    val lvl2 = assignHierCells(vecs, c1, cents2, k2)
-      .select(col("vec_id"), col("cell").as("cluster"))
-    hierAssign(vecs.select(col("vec_id"), col("v"), col("nrm"))
-        .join(lvl2, "vec_id"), cents3)
-      .select(col("vec_id"),
-        (col("cluster") * k3 + col("sub")).as("cell"))
-  }
-
-  private def hierAssign(ivs: DataFrame, cents: DataFrame): DataFrame =
-    ivs.join(broadcast(cents), Seq("cluster"))
-      .select(col("vec_id"), col("cluster"),
-        struct(hierScore.as("cos"), (-col("sub")).as("negsub")).as("sc"))
-      .groupBy(col("vec_id"), col("cluster"))
-      .agg(max(col("sc")).as("m"))
-      .select(col("vec_id"), col("cluster"),
-        (-col("m.negsub")).cast("int").as("sub"))
-
-  /** Two-level coarse quantizer: [[trainCodebookOn]] trains k1 ≤ 64
-    * super-cells exactly as before, then ONE distributed Lloyd loop
-    * trains the k2 sub-cells of ALL super-cells simultaneously — each
-    * round is one broadcast-join assignment pass + one partial-agg
-    * mean update over the whole corpus, shared across every super-cell
-    * (the same shared-rounds discipline as [[trainPq]]'s per-subspace
-    * Lloyd; a per-cell driver loop would serialize k1 trainings). The
-    * centroid state between rounds is a (k1·k2)-row TABLE — broadcast,
-    * never collected, never literal — so the two-level form scales to
-    * k1·k2 ~ 4096 cells with the driver holding nothing. Sub-seeding
-    * is greedy farthest-point WITHIN each super-cell, all cells at
-    * once: seed 0 is the md5-min member, each next seed the member
-    * minimizing max-cosine to the cell's existing seeds (k2−1 rounds
-    * of join + argmin — bounded by k2 ≤ 64, not by cell count).
-    * Degenerate corners: a sub-centroid that loses every member drops
-    * out of the update (fewer live subs — deterministic); a cell with
-    * fewer members than k2 re-elects an existing seed whose duplicate
-    * centroid never wins the tie-broken argmax. Returns (vec_id,
-    * cell = super·k2 + sub); search over it is the SAME equi-join as
-    * q78's — the entire point of lifting k this way.
-    */
-  /** [[trainHierCells]] plus the trained model itself: (level-1
-    * centroid arrays, level-2 centroid TABLE (cluster, sub, cv, cnrm),
-    * assignments (vec_id, cell)) — the form tree-descent probing
-    * (q120) needs: level 1 scores k1 literal centroids per query
-    * ([[ivfProbes]] unchanged), level 2 scores only the probed
-    * supers' sub-rows from the broadcast table.
-    */
-  /** The shared SUB-LEVEL trainer both hierarchical depths ride: given
-    * a parent-keyed corpus frame `ivs` = (vec_id, v, nrm, cluster) —
-    * `cluster` is the parent cell id at ANY granularity (a level-1
-    * super for the two-level index, a level-2 cell for the three-level
-    * one) — train `k` sub-centroids per parent with the broadcast-
-    * TABLE Lloyd: greedy farthest-point seeding WITHIN each parent
-    * (all parents at once, k−1 rounds of join + argmin — bounded by
-    * k ≤ 64, not by parent count), then `iters` shared Lloyd rounds
-    * (one broadcast-join assignment pass + one partial-agg mean update
-    * over the whole corpus per round). The centroid state is a
-    * (parents·k)-row TABLE — broadcast, never collected, never
-    * literal — which is exactly what makes the depth stackable.
-    * Returns (cluster, sub, cv, cnrm).
-    */
-  private def trainSubCells(ivs: DataFrame, k: Int,
-      iters: Int): DataFrame = {
-    var cents = ivs
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("cluster")).orderBy(
-          md5(concat(lit("hier:"), col("vec_id").cast("string"))),
-          col("vec_id"))))
-      .where(col("rk") === 1)
-      .select(col("cluster"), lit(0).as("sub"),
-        col("v").as("cv"), col("nrm").as("cnrm"))
-      .localCheckpoint()
-    for (j <- 1 until k) {
-      val far = ivs.join(broadcast(cents), Seq("cluster"))
-        .select(col("cluster"), col("vec_id"), col("v"), col("nrm"),
-          hierScore.as("cos"))
-        .groupBy(col("cluster"), col("vec_id"))
-        .agg(max(col("cos")).as("mc"),
-          first(col("v")).as("v"), first(col("nrm")).as("nrm"))
-      val pick = far
-        .select(col("cluster"),
-          struct(col("mc"), col("vec_id"), col("v"), col("nrm")).as("c"))
-        .groupBy(col("cluster")).agg(min(col("c")).as("c"))
-        .select(col("cluster"), lit(j).as("sub"),
-          col("c.v").as("cv"), col("c.nrm").as("cnrm"))
-      cents = cents.unionByName(pick).localCheckpoint()
+  private def stageTree(s: SparkSession, dir: String, work: String,
+      shapeOf: Long => CellTree.Shape, key: Column, cells: String,
+      probes: (String, Int)*): Unit = {
+    val n = vectorCount(s, dir)
+    val shape = shapeOf(n)
+    val (tree, asg) = CellTree.train(s, dir, shape)
+    val gen = Staged.newGroupId(work)
+    asg.select(col("vec_id"), key).stagePublish(work, cells, gen)
+    val queries = scaledVectors(s, dir).where(col("vec_id") < 20)
+    val perShard = (n + shape.shards - 1) / shape.shards
+    probes.foreach { case (name, nprobe) =>
+      tree.probes(queries,
+          volumeMatchedWidth(shape.cellsPerShard, perShard, nprobe))
+        .select(col("query_id"), key)
+        .stagePublish(work, name, gen)
     }
-    for (_ <- 1 to iters) {
-      val asg = hierAssign(ivs, cents)
-      val sums = asg
-        .join(ivs.select(col("vec_id"), col("v")), Seq("vec_id"))
-        .select(col("cluster"), col("sub"),
-          posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cluster"), col("sub"), col("dim"))
-        .agg(expr("sum(x) div count(1)").as("w"))
-      cents = sums
-        .groupBy(col("cluster"), col("sub"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("w"))))
-          .as("ps"))
-        .select(col("cluster"), col("sub"),
-          expr("transform(ps, p -> p.w)").as("cv"))
-        .withColumn("cnrm", sqrt(
-          expr("aggregate(cv, CAST(0 AS BIGINT), (a, x) -> a + x * x)")
-            .cast("double")))
-        .localCheckpoint()
-    }
-    cents
   }
 
-  def trainHier(s: SparkSession, dir: String, k1: Int,
-      k2: Int = HierSubCells, iters: Int = 3)
-      : (Array[Array[Double]], DataFrame, DataFrame) = {
-    require(k2 >= 2 && k2 <= 64, "hier quantizer needs 2 <= k2 <= 64")
-    val (c1, sup) = trainCodebook(s, dir, k1)
-    val ivs = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(sup.select(col("vec_id"), col("cluster")), "vec_id")
-      // every seeding round, every Lloyd round, and the final assign
-      // scan this frame — materialize once (q31 discipline)
-      .localCheckpoint()
-    val cents = trainSubCells(ivs, k2, iters)
-    val asg = hierAssign(ivs, cents)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * k2 + col("sub")).as("cell"))
-    (c1, cents, asg)
-  }
-
-  /** THREE-level coarse quantizer — the capacity lift above the
-    * two-level form's k1·k2 ≤ 4096-cell ceiling: the trained two-level
-    * index's cells become the PARENTS of one more [[trainSubCells]]
-    * pass (identical broadcast-table Lloyd, identical per-parent
-    * farthest-point seeding — the level count changes, the trainer
-    * does not), giving k1·k2·k3 ≤ 64³ = 262,144 learned cells ≈ 537M
-    * vectors per refresh partition at [[CellTarget]]. Returns (level-1
-    * literal centroids, level-2 centroid table keyed by super id,
-    * level-3 centroid table keyed by LEVEL-2 CELL id, assignments
-    * (vec_id, cell = cell2·k3 + sub)). Search over the assignment is
-    * the same own-cell equi-join as ever; probe selection descends the
-    * tree ([[hier3Probes]]).
-    */
-  def trainHier3(s: SparkSession, dir: String, k1: Int, k2: Int,
-      k3: Int, iters: Int = 3)
-      : (Array[Array[Double]], DataFrame, DataFrame, DataFrame) = {
-    require(k3 >= 2 && k3 <= 64, "hier quantizer needs 2 <= k3 <= 64")
-    val (c1, cents2, asg2) = trainHier(s, dir, k1, k2, iters)
-    val ivs3 = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(asg2.select(col("vec_id"), col("cell").as("cluster")),
-        "vec_id")
-      .localCheckpoint() // same q31 discipline as trainHier's ivs
-    val cents3 = trainSubCells(ivs3, k3, iters)
-    val asg3 = hierAssign(ivs3, cents3)
-      .select(col("vec_id"),
-        (col("cluster") * k3 + col("sub")).as("cell"))
-    (c1, cents2, cents3, asg3)
-  }
-
-  def trainHierCells(s: SparkSession, dir: String, k1: Int,
-      k2: Int = HierSubCells, iters: Int = 3): DataFrame =
-    trainHier(s, dir, k1, k2, iters)._3
-
-  /** Multi-probe through the TWO-LEVEL index by TREE DESCENT — the
-    * probe-selection shape that makes k1·k2 ~ 4096 cells probeable at
-    * scale: scoring all k1·k2 sub-centroids per query would be the
-    * flat quantizer's cost all over again (and the reason real IVF
-    * trees descend); instead each query scores the k1 level-1
-    * centroids ([[ivfProbes]], unchanged), keeps its nearest supers,
-    * scores ONLY those supers' sub-rows from the broadcast centroid
-    * table, and keeps the [[volumeMatchedWidth]] nearest (super, sub)
-    * cells overall — the width that probes the same corpus FRACTION
-    * as the flat default's nprobe probes, so recall does not silently
-    * drop when the partition is finer (round-8 measured exactly that
-    * drop at raw width 2 on the k2×-finer forced-hier index: 0.35
-    * recall@1 vs flat 2-probe's 0.70; width 2·k2 restored 0.90) and
-    * candidate cost does not silently grow where it is not (above the
-    * clamp hierFactors already sizes cells ≈ the unclamped flat
-    * count, so the width stays ≈ nprobe). Selection cost is bounded
-    * by k1 + O(k2·width) scores per query — note ivfProbes keeps
-    * min(width, k1) supers, so at volume-matched widths ≥ k1 every
-    * super is descended and the bound degenerates to k1 + k1·k2;
-    * still far below scoring the corpus, and the candidate fraction
-    * stays volume-matched regardless. The probe list and
-    * the assignments both stage; the
-    * search is q79's equi-join over them, and the oracle replays it.
-    * HierMultiprobeSpec plants the sub-cell boundary case: a query
-    * whose true nearest quantized into the SIBLING sub-cell — 1-probe
-    * (own cell only) must miss it, tree-descent 2-probe recovers it
-    * at rank 1.
-    */
-  /** Tree-descent probe list for the two-level index: nprobe nearest
-    * SUPERS per query via the literal-centroid [[ivfProbes]] (k1
-    * scores), then only those supers' sub-rows from the broadcast
-    * centroid table (≤ nprobe·k2 scores), keeping the nprobe nearest
-    * (super, sub) cells overall. Output (query_id, cell).
-    */
-  def hierProbes(queries: DataFrame, c1: Array[Array[Double]],
-      cents: DataFrame, k2: Int, nprobe: Int): DataFrame = {
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc_nulls_last, col("cell"))
-    ivfProbes(queries, c1, math.min(nprobe, c1.length))
-      .join(broadcast(cents), Seq("cluster"))
-      .select(col("query_id"),
-        (col("cluster").cast("long") * k2 + col("sub")).as("cell"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(wp))
-      .where(col("rk") <= nprobe)
-      .select(col("query_id"), col("cell"))
-  }
-
-  /** Tree-descent probe list for the THREE-level index: the two-level
-    * descent ([[hierProbes]]) selects a BEAM of mid-level cells —
-    * ceil(width/k3)+1 of them, just enough that their k3 children can
-    * fill the final width with one cell of boundary slack — then only
-    * that beam's level-3 sub-rows are scored from the broadcast table
-    * and the [[volumeMatchedWidth]] nearest (cell2, sub) leaves kept.
-    * Selection cost per query: k1 + O(k2·beam2) + O(k3·beam) scores —
-    * each level prices only the previous level's survivors, which is
-    * what keeps 262k cells probeable (scoring all k1·k2·k3 leaf
-    * centroids per query would be the flat quantizer's cost again).
-    * The beam is a standard best-first approximation: a leaf whose
-    * mid-level parent ranks below the beam is not descended — recall
-    * vs the beam width is measured, not assumed (SCALING.md hier3
-    * rows). Output (query_id, cell), cell = cell2·k3 + sub.
-    */
-  def hier3Probes(queries: DataFrame, c1: Array[Array[Double]],
-      cents2: DataFrame, cents3: DataFrame, k2: Int, k3: Int,
-      width: Int): DataFrame = {
-    val beam2 = math.max(1, (width + k3 - 1) / k3) + 1
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qn"))
-    val mid = hierProbes(queries, c1, cents2, k2, beam2)
-      .withColumnRenamed("cell", "cluster") // the level-3 parent key
-      .join(q, "query_id")
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc_nulls_last, col("cell"))
-    mid.join(broadcast(cents3), Seq("cluster"))
-      .select(col("query_id"),
-        (col("cluster") * k3 + col("sub")).as("cell"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(wp))
-      .where(col("rk") <= width)
-      .select(col("query_id"), col("cell"))
-  }
-
-  /** End-to-end tree-descent search (train → descend → in-cell top-k),
-    * the spec-facing form with every knob explicit — nprobe=1 is
-    * q118's own-cell shape, nprobe=p the q120 descent.
-    */
-  def hierSearch(s: SparkSession, dir: String, k1: Int, k2: Int,
-      nprobe: Int, topK: Int = 5, maxQueryId: Long = 20L): DataFrame = {
-    val (c1, cents, asg) = trainHier(s, dir, k1, k2)
-    val iv = scaledVectors(s, dir).join(asg, "vec_id")
+  /** The corpus (vec_id, cluster, v, nrm) over a staged cell table. */
+  private def cellRows(s: SparkSession, dir: String,
+      cells: DataFrame): DataFrame =
+    scaledVectors(s, dir).join(cells, "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
-      .localCheckpoint() // probe + corpus sides both read it (q31 note)
-    val queries = iv.where(col("vec_id") < maxQueryId)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    val probes = hierProbes(queries, c1, cents, k2, nprobe)
-      .withColumnRenamed("cell", "cluster")
+
+  /** A probe list (query_id, cell) with each query's vector attached
+    * from `queries` (vec_id, v, nrm) — the frame [[searchCells]] takes.
+    */
+  private def probeRows(probes: DataFrame, queries: DataFrame): DataFrame =
+    probes.withColumnRenamed("cell", "cluster")
       .join(queries.withColumnRenamed("vec_id", "query_id"), "query_id")
       .select(col("query_id"), col("cluster"),
         col("v").as("qv"), col("nrm").as("qn"))
-    searchCells(probes, iv, topK)
+
+  /** The search every staged tree index serves: in-cell top-5 by exact
+    * cosine over the family's cell table (its first member), probing
+    * either each query's OWN cell (`ownCell`, q118/q141) or the staged
+    * probe list (its second member, q120/q142/q143/q169). Both tables
+    * are read at ONE resolved generation, so a refresh landing between
+    * the two reads can never serve a mixed (cells, probes) pair. The
+    * plan is the same equi-join at every root and depth; per-shard
+    * candidates of a sharded index union through it because leaf ids
+    * are shard-disjoint, and the top-k window is the gather merge.
+    */
+  private def treeSearch(s: SparkSession, dir: String,
+      index: Staged.Family, ownCell: Boolean): DataFrame = {
+    val snap = index.resolve(s, dir, Dedup.stageRoot(dir))
+    val iv = cellRows(s, dir, readParquet(s, snap(index.names(0))))
+    val probes =
+      if (ownCell) iv.where(col("vec_id") < 20)
+        .select(col("vec_id").as("query_id"), col("cluster"),
+          col("v").as("qv"), col("nrm").as("qn"))
+      else probeRows(readParquet(s, snap(index.names(1))),
+        scaledVectors(s, dir))
+    searchCells(probes, iv, topK = 5)
   }
 
-  /** Stage the two-level index UNCONDITIONALLY (the forced-hier form
-    * q120/q136 certify below the production clamp): `cells_hier`
-    * (vec_id, cell over k1·k2 learned cells, [[hierSizing]]) and the
-    * tree-descent probe list `probes_hier` (query_id, cell) at the
-    * [[volumeMatchedWidth]] — the same probed corpus fraction as 2
-    * flat-default probes (2·k2 cells below the clamp: the 0.35 → 0.90
-    * recall@1 fix; ≈ 2 cells above it, where the partition is not
-    * finer than the unclamped flat).
+  /** The forced two-level index (q118/q120/q136/q153): [[hierSizing]]
+    * over a codebook root, staged at 2 volume-matched probes.
     */
-  def stageHierIndex(s: SparkSession, dir: String, work: String): Unit = {
-    val n = vectorCount(s, dir)
-    val (k1, k2) = hierSizing(n)
-    val (c1, cents, asg) = trainHier(s, dir, k1, k2)
-    val gen = Staged.newGroupId(work) // one stamp across the family
-    asg.stagePublish(work, "cells_hier", gen)
-    val queries = scaledVectors(s, dir)
-      .join(Staged.read(s, work, "cells_hier").select(col("vec_id")),
-        "vec_id")
-      .where(col("vec_id") < 20)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    hierProbes(queries, c1, cents, k2,
-        volumeMatchedWidth(k1.toLong * k2, n, nprobe = 2))
-      .stagePublish(work, "probes_hier", gen)
-  }
+  def stageHierIndex(s: SparkSession, dir: String, work: String): Unit =
+    stageTree(s, dir, work, n => {
+      val (k1, k2) = hierSizing(n)
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2))
+    }, col("cell"), "cells_hier", "probes_hier" -> 2)
 
   lazy val HierIndex: Staged.Family =
     Staged.Family("cells_hier", "probes_hier")()(stageHierIndex)
 
-  def q120HierMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    val work = Dedup.stageRoot(dir)
-    HierIndex.need(s, dir, work)
-    val iv = scaledVectors(s, dir)
-      .join(Staged.read(s, work, "cells_hier"), "vec_id")
-      .select(col("vec_id"), col("cell").as("cluster"), col("v"),
-        col("nrm"))
-    val probes = Staged.read(s, work, "probes_hier")
-      .withColumnRenamed("cell", "cluster")
-      .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
-        "query_id")
-      .select(col("query_id"), col("cluster"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    searchCells(probes, iv, topK = 5)
-  }
+  /** Own-cell ANN over the staged two-level index — q78 with the
+    * single-codebook clamp removed: the cell ranges over k1·k2 learned
+    * leaves and the search is byte-identical to q78's. HierIvfSpec
+    * plants a macro×micro geometry and pins that level 1 separates the
+    * macro clusters and level 2 the micro clusters within each.
+    */
+  def q118AnnIvfHier(s: SparkSession, dir: String): DataFrame =
+    treeSearch(s, dir, HierIndex, ownCell = true)
+
+  /** Tree-descent multi-probe over the staged two-level index.
+    * HierMultiprobeSpec plants the sub-cell boundary case: a query whose
+    * true nearest quantized into the SIBLING sub-cell — own-cell search
+    * misses it, the 2-probe descent recovers it at rank 1.
+    */
+  def q120HierMultiprobe(s: SparkSession, dir: String): DataFrame =
+    treeSearch(s, dir, HierIndex, ownCell = false)
 
   /** (k1, k2, k3) for a FORCED three-level index (q141/q142): the
     * production [[hierFactors3]] sizing above the two-level ceiling;
@@ -3379,238 +3066,72 @@ object Similarity {
 
   val Hier3SubCells = 2
 
-  /** Stage the three-level index UNCONDITIONALLY (the forced form
-    * q141/q142 certify below the production >4096-cell engage point):
-    * `cells_hier3` (vec_id, cell over k1·k2·k3 learned leaves) and the
-    * beam-descent probe list `probes_hier3` at the
-    * [[volumeMatchedWidth]] — the same probed corpus fraction as 2
-    * flat-default probes, the invariant every depth shares.
-    */
-  def stageHier3Index(s: SparkSession, dir: String, work: String): Unit = {
-    val n = vectorCount(s, dir)
-    val (k1, k2, k3) = hier3Sizing(n)
-    val (c1, cents2, cents3, asg) = trainHier3(s, dir, k1, k2, k3)
-    val gen = Staged.newGroupId(work) // one stamp across the family
-    asg.stagePublish(work, "cells_hier3", gen)
-    val queries = scaledVectors(s, dir)
-      .join(Staged.read(s, work, "cells_hier3").select(col("vec_id")),
-        "vec_id")
-      .where(col("vec_id") < 20)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    hier3Probes(queries, c1, cents2, cents3, k2, k3,
-        volumeMatchedWidth(k1.toLong * k2 * k3, n, nprobe = 2))
-      .stagePublish(work, "probes_hier3", gen)
-  }
+  /** The forced three-level index (q141/q142/q152/q166). */
+  def stageHier3Index(s: SparkSession, dir: String, work: String): Unit =
+    stageTree(s, dir, work, n => {
+      val (k1, k2, k3) = hier3Sizing(n)
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2, k3))
+    }, col("cell"), "cells_hier3", "probes_hier3" -> 2)
 
-  /** q141/q142/q152/q166 share one forced three-level training. */
   lazy val Hier3Index: Staged.Family =
     Staged.Family("cells_hier3", "probes_hier3")()(stageHier3Index)
 
-  /** Own-cell ANN through the STAGED THREE-level index — q118 with one
-    * more level underneath: [[trainHier3]] stages (vec_id, cell) where
-    * cell ranges over k1·k2·k3 learned leaves, and the search is
-    * byte-identical to q78/q118's own-cell equi-join. The physical
-    * plan still does not know the quantizer's depth — the staged
-    * assignment table IS the interface at every depth, and the oracle
-    * replays the search over it end-to-end. Hier3Spec plants a
-    * three-scale geometry (macro/mid/micro clusters) and pins that
-    * each level separates its scale.
+  /** Own-cell ANN over the staged THREE-level index — q118 one level
+    * deeper. Hier3Spec plants a three-scale geometry (macro/mid/micro
+    * clusters) and pins that each level separates its scale.
     */
-  def q141AnnIvfHier3(s: SparkSession, dir: String): DataFrame = {
-    val work = Dedup.stageRoot(dir)
-    Hier3Index.need(s, dir, work)
-    val iv = scaledVectors(s, dir)
-      .join(Staged.read(s, work, "cells_hier3"), "vec_id")
-      .select(col("vec_id"), col("cell").as("cluster"), col("v"),
-        col("nrm"))
-    val probes = iv.where(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("cluster"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    searchCells(probes, iv, topK = 5)
-  }
+  def q141AnnIvfHier3(s: SparkSession, dir: String): DataFrame =
+    treeSearch(s, dir, Hier3Index, ownCell = true)
 
-  /** Beam-descent multi-probe through the staged three-level index —
-    * q120 one level deeper: queries descend super → mid-beam → leaves
-    * ([[hier3Probes]]) at the volume-matched width, then the search is
-    * q79's equi-join over the staged (probes, cells) pair. The oracle
-    * replays the probe⋈cells⋈corpus join chain exactly as q120's does.
+  /** Beam-descent multi-probe over the staged three-level index — q120
+    * one level deeper.
     */
-  def q142Hier3Multiprobe(s: SparkSession, dir: String): DataFrame = {
-    val work = Dedup.stageRoot(dir)
-    Hier3Index.need(s, dir, work)
-    val iv = scaledVectors(s, dir)
-      .join(Staged.read(s, work, "cells_hier3"), "vec_id")
-      .select(col("vec_id"), col("cell").as("cluster"), col("v"),
-        col("nrm"))
-    val probes = Staged.read(s, work, "probes_hier3")
-      .withColumnRenamed("cell", "cluster")
-      .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
-        "query_id")
-      .select(col("query_id"), col("cluster"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    searchCells(probes, iv, topK = 5)
-  }
+  def q142Hier3Multiprobe(s: SparkSession, dir: String): DataFrame =
+    treeSearch(s, dir, Hier3Index, ownCell = false)
 
-  /** Shard count for the SHARDED index (q143). Four shards exercise
-    * every cross-shard path on the test corpora; production would set
-    * this to ceil(corpusVectors / perShardCapacity) — e.g. a
-    * 10¹⁰-vector corpus over the three-level 537M/shard ceiling is
-    * ~20 shards, the layout the [[hierFactors3]] scaladoc points to.
+  /** Shard count for the SHARDED indexes (q143/q169). Four shards
+    * exercise every cross-shard path on the test corpora; production
+    * would set this to ceil(corpusVectors / perShardCapacity) — e.g. a
+    * 10¹⁰-vector corpus over the three-level 537M/shard ceiling is ~20
+    * shards.
     */
   val NumShards = 4
 
-  /** Train `shards` INDEPENDENT partition-local coarse quantizers —
-    * the capacity dimension ORTHOGONAL to quantizer depth: depth
-    * multiplies cells per index (64 → 4096 → 262,144), sharding
-    * multiplies indexes. The shard key is `pmod(vec_id, shards)` (any
-    * stable hash works; modulo keeps the oracle replay trivial), and
-    * the per-shard training is ONE [[trainSubCells]] pass with the
-    * shard id as the parent key — the same depth-agnostic broadcast-
-    * table Lloyd the hierarchical levels ride, so all shards train in
-    * the SAME corpus-wide jobs (no per-shard driver loop) yet no
-    * centroid, seed, or Lloyd mean ever mixes shards: seeding windows
-    * partition by parent, updates group by (parent, sub). That makes
-    * refresh OPERATIONALLY independent — retraining one shard cannot
-    * move any other shard's assignments (ShardedAnnSpec pins this
-    * byte-for-byte) — which is the property that lets a 100 TB index
-    * refresh incrementally, one bounded shard at a time, instead of
-    * as a monolithic retrain. Returns (centroid table (cluster=shard,
-    * sub, cv, cnrm), assignments (vec_id, cell = shard·kShard + sub)).
+  /** The sharded flat index: a hash root over [[NumShards]] shards and
+    * one learned level of adaptiveCellCount(n/shards) cells per shard,
+    * probed 2 per shard. Sharding is the capacity dimension orthogonal
+    * to depth: depth multiplies cells per index, sharding multiplies
+    * indexes, and each shard refreshes independently (ShardedAnnSpec
+    * pins that adding vectors to one shard leaves every other shard's
+    * assignments byte-identical). Candidate cost per query is
+    * ≈ 2·shards·CellTarget rows, independent of n.
     */
-  def trainShardedCells(s: SparkSession, dir: String,
-      shards: Int = NumShards, iters: Int = 3)
-      : (DataFrame, DataFrame) = {
-    val n = vectorCount(s, dir)
-    val kS = adaptiveCellCount((n + shards - 1) / shards)
-    val ivs = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .withColumn("cluster", pmod(col("vec_id"), lit(shards)).cast("int"))
-      .localCheckpoint() // seeding + Lloyd + final assign all scan it
-    val cents = trainSubCells(ivs, kS, iters)
-    val asg = hierAssign(ivs, cents)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * kS + col("sub")).as("cell"))
-    (cents, asg)
-  }
-
-  /** Scatter-gather probe list over the sharded index: every query
-    * scores the model-sized (shards·kShard)-row centroid table once
-    * (broadcast — the corpus side is never touched) and keeps the
-    * `nprobe` nearest cells PER SHARD. Probing every shard is the
-    * scatter-gather tax: a query's true neighbor lives in whichever
-    * shard its OWN id hashed to, so no shard may be skipped
-    * (ShardedAnnSpec plants a neighbor in a foreign shard and pins
-    * that own-shard-only probing misses it). Candidate cost per query
-    * is nprobe·shards·(n/(shards·kShard)) ≈ nprobe·shards·CellTarget
-    * rows — linear in the shard count and independent of n, the
-    * standard price of independently-refreshable serving shards.
-    * Output (query_id, cell).
-    */
-  def shardProbes(queries: DataFrame, cents: DataFrame, kShard: Int,
-      nprobe: Int): DataFrame = {
-    val wp = Window.partitionBy(col("query_id"), col("cluster"))
-      .orderBy(col("cos").desc_nulls_last, col("sub"))
-    queries
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-      .crossJoin(broadcast(cents))
-      .select(col("query_id"), col("cluster"), col("sub"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(wp))
-      .where(col("rk") <= nprobe)
-      .select(col("query_id"),
-        (col("cluster").cast("long") * kShard + col("sub")).as("cell"))
-  }
-
-  /** Sharded-index cell assignment of a (vec_id, v, nrm) frame under
-    * an ALREADY-TRAINED model (the model-sized shard-keyed centroid
-    * table) — the pure map stage
-    * [[graft.streaming.EventStreams.shardIngestStream]] shares with
-    * trainShardedCells' own final assignment: shard by the pmod key,
-    * sub-cell by one INPUT-local partial-agg argmax against the
-    * broadcast table. The corpus is never touched; cost is linear in
-    * the input frame — and because assignment only ever consults the
-    * input vector's OWN shard's centroids, a retrain of any other
-    * shard cannot move it (the independence ShardedAnnSpec pins).
-    */
-  def assignShardCells(vecs: DataFrame, cents: DataFrame, shards: Int,
-      kShard: Int): DataFrame =
-    hierAssign(vecs.withColumn("cluster",
-        pmod(col("vec_id"), lit(shards)).cast("int")), cents)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * kShard + col("sub")).as("cell"))
-
-  /** Stage the sharded index: `cells_shard` (vec_id, cell over
-    * shards·kShard learned cells, shard-disjoint id ranges) and the
-    * scatter-gather probe list `probes_shard` (query_id, cell) at
-    * nprobe=2 per shard.
-    */
-  def stageShardedIndex(s: SparkSession, dir: String,
-      work: String): Unit = {
-    val n = vectorCount(s, dir)
-    val kS = adaptiveCellCount((n + NumShards - 1) / NumShards)
-    val (cents, asg) = trainShardedCells(s, dir)
-    val gen = Staged.newGroupId(work) // one stamp across the family
-    asg.stagePublish(work, "cells_shard", gen)
-    val queries = scaledVectors(s, dir).where(col("vec_id") < 20)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    shardProbes(queries, cents, kS, nprobe = 2)
-      .stagePublish(work, "probes_shard", gen)
-  }
+  def stageShardedIndex(s: SparkSession, dir: String, work: String): Unit =
+    stageTree(s, dir, work, n => CellTree.Shape(CellTree.Hash(NumShards),
+        Seq(adaptiveCellCount((n + NumShards - 1) / NumShards))),
+      col("cell"), "cells_shard", "probes_shard" -> 2)
 
   lazy val ShardedIndex: Staged.Family =
     Staged.Family("cells_shard", "probes_shard")()(stageShardedIndex)
 
-  /** Scatter-gather ANN over SHARDED partition-local indexes — the
-    * capacity dimension above a single refresh partition's ceiling
-    * (537M vectors for the three-level quantizer): S independent
-    * per-shard quantizers ([[trainShardedCells]]), queries probe
-    * nprobe cells in EVERY shard ([[shardProbes]]), and the gather is
-    * [[searchCells]] unchanged — per-shard candidates union through
-    * the same cell equi-join because cell ids are shard-disjoint, and
-    * the global top-k window IS the gather merge. The search plan
-    * still does not know the index became sharded: the staged
-    * (cells, probes) pair is the interface, exactly as it is for the
-    * flat, two-level, and three-level quantizers, and the oracle
-    * replays the join chain end-to-end over the staged tables.
+  /** q143 — scatter-gather ANN over the sharded index: every query
+    * probes 2 cells in EVERY shard (a query's true neighbor lives in
+    * whichever shard its own id hashed to, so no shard may be skipped)
+    * and the gather is [[searchCells]] unchanged.
     */
-  def q143ShardedAnn(s: SparkSession, dir: String): DataFrame = {
-    val work = Dedup.stageRoot(dir)
-    // group-consistent default (q79's discipline): probes and shard
-    // cells resolve to ONE staging generation before planning
-    val snap = ShardedIndex.resolve(s, dir, work)
-    val probes = s.read.parquet(snap("probes_shard"))
-      .withColumnRenamed("cell", "cluster")
-      .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
-        "query_id")
-      .select(col("query_id"), col("cluster"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    shardedSearchOn(s, dir, work, probes,
-      cellsPath = Some(snap("cells_shard")))
-  }
+  def q143ShardedAnn(s: SparkSession, dir: String): DataFrame =
+    treeSearch(s, dir, ShardedIndex, ownCell = false)
 
-  /** The sharded gather, given a ready probe frame (query_id, cluster,
-    * qv, qn): staged shard cells + the unchanged [[searchCells]]
-    * top-k window. One shared code path for the batch entry (q143,
-    * staged probes, group-resolved `cellsPath`) and the streaming
-    * serving twin
-    * ([[graft.streaming.EventStreams.shardedSearchStream]], per-batch
-    * probes, symlink default — a per-batch probe list has no staged
-    * sibling to be consistent WITH) — streamed == batch is mechanism,
-    * not hope.
+  /** q143's gather for a query frame (vec_id, v, nrm) and its probe
+    * list (query_id, cell) over the current `cells_shard` — the
+    * streaming serving twin's
+    * ([[graft.streaming.EventStreams.shardedSearchStream]]) per-batch
+    * probes have no staged sibling to be consistent with.
     */
   def shardedSearchOn(s: SparkSession, dir: String, work: String,
-      probes: DataFrame, topK: Int = 5,
-      cellsPath: Option[String] = None): DataFrame = {
-    val iv = scaledVectors(s, dir)
-      .join(cellsPath.fold(Staged.read(s, work, "cells_shard"))(
-        Tables.readParquet(s, _)), "vec_id")
-      .select(col("vec_id"), col("cell").as("cluster"), col("v"),
-        col("nrm"))
-    searchCells(probes, iv, topK)
-  }
+      queries: DataFrame, probes: DataFrame): DataFrame =
+    searchCells(probeRows(probes, queries),
+      cellRows(s, dir, Staged.read(s, work, "cells_shard")), topK = 5)
 
   /** (kSup, kSub) for the PER-SHARD two-level quantizer (q169):
     * production sizing via [[hierFactors]] when one shard's target
@@ -3624,352 +3145,40 @@ object Similarity {
     if (want > 64) hierFactors(want) else (2, 2)
   }
 
-  /** SHARDED × HIERARCHICAL training — the composition the 10¹⁰-vector
-    * capacity claim actually rests on (S shards × a deep quantizer per
-    * shard), forced into one trained model: level 1 is the hash shard
-    * (`pmod(vec_id, shards)` — operational independence, q143), levels
-    * 2 and 3 are the SAME depth-agnostic [[trainSubCells]] broadcast-
-    * table Lloyd the hierarchical depths ride, with the shard id and
-    * then the (shard, super) cell as the parent key. All shards and
-    * all supers train in the same corpus-wide jobs (no driver loop),
-    * yet no seed, centroid, or Lloyd mean ever crosses a parent
-    * boundary — so retraining one shard's tree cannot move any other
-    * shard's assignments, at ANY depth. Returns (level-1 centroid
-    * table keyed by shard, level-2 table keyed by the shard·kSup+sup
-    * cell, assignments (vec_id, cell = cell1·kSub + sub)).
-    */
-  def trainShardedHier(s: SparkSession, dir: String, shards: Int,
-      kSup: Int, kSub: Int, iters: Int = 3)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val ivs = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .withColumn("cluster", pmod(col("vec_id"), lit(shards)).cast("int"))
-      .localCheckpoint() // seeding + Lloyd + assign all scan it
-    val cents1 = trainSubCells(ivs, kSup, iters)
-    val asg1 = hierAssign(ivs, cents1)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * kSup + col("sub")).as("cluster"))
-    val ivs2 = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(asg1, "vec_id")
-      .localCheckpoint() // same discipline, one level down
-    val cents2 = trainSubCells(ivs2, kSub, iters)
-    val asg = hierAssign(ivs2, cents2)
-      .select(col("vec_id"),
-        (col("cluster") * kSub + col("sub")).as("cell"))
-    (cents1, cents2, asg)
-  }
-
-  /** Scatter-gather probe list over the sharded HIERARCHICAL index:
-    * per (query, shard), descend that shard's tree — beam the supers
-    * from the model-sized level-1 table ([[hier3Probes]]' beam rule:
-    * just enough supers that their kSub children can fill the final
-    * width), score only the beam's sub-rows, keep the `width` nearest
-    * leaves PER SHARD. No shard may be skipped (the scatter-gather
-    * tax, q143); within a shard the descent prices kSup + O(kSub·beam)
-    * centroids instead of the shard's full kSup·kSub leaf table —
-    * which is what keeps deep per-shard trees probeable. Output
-    * (query_id, cell).
-    */
-  def shardHierProbes(queries: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, kSup: Int, kSub: Int, width: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qn"))
-    val beam = math.max(1, (width + kSub - 1) / kSub) + 1
-    val w1 = Window.partitionBy(col("query_id"), col("cluster"))
-      .orderBy(col("cos").desc_nulls_last, col("sub"))
-    val sup = q.crossJoin(broadcast(cents1))
-      .select(col("query_id"), col("cluster"), col("sub"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w1))
-      .where(col("rk") <= beam)
-      .select(col("query_id"),
-        (col("cluster").cast("long") * kSup + col("sub")).as("cluster"))
-      .join(q, "query_id")
-    val w2 = Window.partitionBy(col("query_id"), col("shard"))
-      .orderBy(col("cos").desc_nulls_last, col("cell"))
-    sup.join(broadcast(cents2), Seq("cluster"))
-      .select(col("query_id"),
-        expr(s"cluster div $kSup").as("shard"),
-        (col("cluster") * kSub + col("sub")).as("cell"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w2))
-      .where(col("rk") <= width)
-      .select(col("query_id"), col("cell"))
-  }
-
-  /** Full shard→super→sub assignment of fresh (vec_id, v, nrm) rows
-    * under an already-trained sharded-hierarchical model —
-    * [[assignHier3Cells]]' shape with the hash shard as level 1:
-    * shard by the pmod key, super by one broadcast-table argmax
-    * against the shard's level-1 rows, sub by one more against the
-    * (shard, super) cell's level-2 rows. Reproduces
-    * [[trainShardedHier]]'s own assignment exactly (same
-    * [[hierAssign]] at each level, same keys — ShardedHierIngest
-    * StreamSpec pins row-for-row equality); all model tables
-    * broadcast, the input touched twice, never shuffled on a corpus
-    * key — the per-micro-batch shape the streaming ingest twin needs.
-    * Because assignment consults only the input's OWN shard's
-    * centroids at both levels, a retrain of any other shard cannot
-    * move it (q143's independence, now at depth).
-    */
-  def assignShardHierCells(vecs: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, shards: Int, kSup: Int, kSub: Int): DataFrame = {
-    val lvl1 = hierAssign(vecs.withColumn("cluster",
-        pmod(col("vec_id"), lit(shards)).cast("int")), cents1)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * kSup + col("sub")).as("cluster"))
-    hierAssign(vecs.select(col("vec_id"), col("v"), col("nrm"))
-        .join(lvl1, "vec_id"), cents2)
-      .select(col("vec_id"),
-        (col("cluster") * kSub + col("sub")).as("cell"))
-  }
-
-  /** Full shard→sup→mid→leaf assignment of fresh (vec_id, v, nrm)
-    * rows under an already-trained sharded THREE-level model —
-    * [[assignShardHierCells]] one level deeper, and the reason the
-    * depth does not change the ingest story: shard by the pmod key,
-    * then one broadcast model-sized argmax per learned level (the
-    * SAME [[hierAssign]] the trainer assigns with, so streamed ==
-    * batch is mechanism at every depth). The input is touched three
-    * times, never shuffled on a corpus key; a vector consults only
-    * its OWN shard's centroids at all three levels, so concurrent
-    * per-shard refreshes cannot move it.
-    */
-  def assignShardHier3Cells(vecs: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, cents3: DataFrame, shards: Int,
-      k1: Int, k2: Int, k3: Int): DataFrame = {
-    val lvl1 = hierAssign(vecs.withColumn("cluster",
-        pmod(col("vec_id"), lit(shards)).cast("int")), cents1)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * k1 + col("sub")).as("cluster"))
-    val lvl2 = hierAssign(vecs.select(col("vec_id"), col("v"), col("nrm"))
-        .join(lvl1, "vec_id"), cents2)
-      .select(col("vec_id"),
-        (col("cluster") * k2 + col("sub")).as("cluster"))
-    hierAssign(vecs.select(col("vec_id"), col("v"), col("nrm"))
-        .join(lvl2, "vec_id"), cents3)
-      .select(col("vec_id"),
-        (col("cluster") * k3 + col("sub")).as("cell"))
-  }
-
-  /** SHARDED × THREE-LEVEL training — [[trainShardedHier]] one level
-    * deeper, so the 10¹⁰-vector capacity composition (S shards ×
-    * [[trainHier3]]'s 262k-leaf tree per shard) is exercised at FULL
-    * per-shard depth, not argued from the two-level case: the hash
-    * shard is level 0, then THREE [[trainSubCells]] passes — the same
-    * depth-agnostic broadcast-table Lloyd — with the shard, the
-    * (shard, sup) cell, and the (shard, sup, mid) cell as successive
-    * parent keys. All shards and all parents train in the same
-    * corpus-wide jobs; no seed, centroid, or Lloyd mean ever crosses
-    * a parent boundary, so one shard's retrain cannot move any other
-    * shard's assignments at ANY of the three depths
-    * (ShardedHierSpec's independence pin, one level deeper). Leaf id
-    * = ((shard·k1 + s1)·k2 + s2)·k3 + s3 — shard-disjoint ranges, so
-    * the scatter-gather union still needs no dedup. Returns the three
-    * centroid tables (keyed by shard, by level-1 cell, by level-2
-    * cell) and the assignments (vec_id, cell).
-    */
-  def trainShardedHier3(s: SparkSession, dir: String, shards: Int,
-      k1: Int, k2: Int, k3: Int, iters: Int = 3)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val ivs = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .withColumn("cluster", pmod(col("vec_id"), lit(shards)).cast("int"))
-      .localCheckpoint() // seeding + Lloyd + assign all scan it
-    val cents1 = trainSubCells(ivs, k1, iters)
-    val asg1 = hierAssign(ivs, cents1)
-      .select(col("vec_id"),
-        (col("cluster").cast("long") * k1 + col("sub")).as("cluster"))
-    val ivs2 = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(asg1, "vec_id")
-      .localCheckpoint()
-    val cents2 = trainSubCells(ivs2, k2, iters)
-    val asg2 = hierAssign(ivs2, cents2)
-      .select(col("vec_id"),
-        (col("cluster") * k2 + col("sub")).as("cluster"))
-    val ivs3 = scaledVectors(s, dir)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(asg2, "vec_id")
-      .localCheckpoint()
-    val cents3 = trainSubCells(ivs3, k3, iters)
-    val asg = hierAssign(ivs3, cents3)
-      .select(col("vec_id"),
-        (col("cluster") * k3 + col("sub")).as("cell"))
-    (cents1, cents2, cents3, asg)
-  }
-
-  /** Scatter-gather probe list over the sharded THREE-level index —
-    * [[shardHierProbes]]' descent with one more beam stage: per
-    * (query, shard) beam the supers, then the beam's level-2 cells,
-    * then keep the `width` nearest LEAVES per shard. No shard may be
-    * skipped; within a shard the descent prices k1 + O(k2·beam1) +
-    * O(k3·beam2) centroids instead of the shard's k1·k2·k3 leaf
-    * table — the per-query selection cost that keeps a 262k-leaf
-    * per-shard tree probeable. Beam rule at each level:
-    * just enough parents that their children can fill the next
-    * level's quota, +1 for the boundary case ([[hier3Probes]]' rule).
-    * Output (query_id, cell).
-    */
-  def shardHier3Probes(queries: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, cents3: DataFrame, k1: Int, k2: Int, k3: Int,
-      width: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qn"))
-    val beam2 = math.max(1, (width + k3 - 1) / k3) + 1
-    val beam1 = math.max(1, (beam2 + k2 - 1) / k2) + 1
-    val w1 = Window.partitionBy(col("query_id"), col("cluster"))
-      .orderBy(col("cos").desc_nulls_last, col("sub"))
-    val sup = q.crossJoin(broadcast(cents1))
-      .select(col("query_id"), col("cluster"), col("sub"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w1))
-      .where(col("rk") <= beam1)
-      .select(col("query_id"),
-        (col("cluster").cast("long") * k1 + col("sub")).as("cluster"))
-      .join(q, "query_id")
-    val w2 = Window.partitionBy(col("query_id"), col("shard"))
-      .orderBy(col("cos").desc_nulls_last, col("cell"))
-    val mid = sup.join(broadcast(cents2), Seq("cluster"))
-      .select(col("query_id"),
-        expr(s"cluster div $k1").as("shard"),
-        (col("cluster") * k2 + col("sub")).as("cell"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w2))
-      .where(col("rk") <= beam2)
-      .select(col("query_id"), col("cell").as("cluster"))
-      .join(q, "query_id")
-    val w3 = Window.partitionBy(col("query_id"), col("shard"))
-      .orderBy(col("cos").desc_nulls_last, col("cell"))
-    mid.join(broadcast(cents3), Seq("cluster"))
-      .select(col("query_id"),
-        expr(s"cluster div ${k1 * k2}").as("shard"),
-        (col("cluster") * k3 + col("sub")).as("cell"),
-        when(col("cnrm") > 0,
-          idot(col("qv"), col("cv")).cast("double")
-            / (col("qn") * col("cnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(w3))
-      .where(col("rk") <= width)
-      .select(col("query_id"), col("cell"))
-  }
-
-  /** Stage the sharded-hierarchical index: `cells_shard_hier` (vec_id,
-    * cell over shard-disjoint learned leaves) and the per-shard
-    * tree-descent probe list `probes_shard_hier` at the per-shard
-    * [[volumeMatchedWidth]]. DEPTH-ADAPTIVE per shard, mirroring
-    * [[stageIvfIndex]]' routing: two learned levels while one shard's
-    * target cell count fits the 4096-cell two-level ceiling, THREE
-    * ([[trainShardedHier3]]) above it — so the production route
-    * composes shards × hier3 exactly where the 10¹⁰-vector sizing
-    * needs it, and the staged (cells, probes) interface (and q169's
-    * search plan over it) does not know which depth trained.
+  /** The sharded-hierarchical index: a hash root with two learned
+    * levels per shard ([[shardHierSizing]]) while one shard's target
+    * cell count fits the two-level ceiling, three ([[hierFactors3]])
+    * above it, probed at the per-shard [[volumeMatchedWidth]].
     */
   def stageShardedHierIndex(s: SparkSession, dir: String,
-      work: String): Unit = {
-    val n = vectorCount(s, dir)
-    val nPerShard = (n + NumShards - 1) / NumShards
-    val want = (nPerShard + CellTarget - 1) / CellTarget
-    val queries = scaledVectors(s, dir).where(col("vec_id") < 20)
-      .select(col("vec_id"), col("v"), col("nrm"))
-    val gen = Staged.newGroupId(work) // one stamp across the family
-    if (want > Hier2MaxCells) {
-      val (k1, k2, k3) = hierFactors3(want)
-      val (c1, c2, c3, asg) =
-        trainShardedHier3(s, dir, NumShards, k1, k2, k3)
-      Staged.write(asg, work, "cells_shard_hier", group = Some(gen))
-      Staged.write(
-        shardHier3Probes(queries, c1, c2, c3, k1, k2, k3,
-          volumeMatchedWidth(k1.toLong * k2 * k3, nPerShard, nprobe = 2)),
-        work, "probes_shard_hier", group = Some(gen))
-    } else {
-      val (kSup, kSub) = shardHierSizing(nPerShard)
-      val (cents1, cents2, asg) =
-        trainShardedHier(s, dir, NumShards, kSup, kSub)
-      Staged.write(asg, work, "cells_shard_hier", group = Some(gen))
-      Staged.write(
-        shardHierProbes(queries, cents1, cents2, kSup, kSub,
-          volumeMatchedWidth(kSup.toLong * kSub, nPerShard, nprobe = 2)),
-        work, "probes_shard_hier", group = Some(gen))
-    }
-  }
+      work: String): Unit =
+    stageTree(s, dir, work, n => {
+      val nPerShard = (n + NumShards - 1) / NumShards
+      val want = (nPerShard + CellTarget - 1) / CellTarget
+      CellTree.Shape(CellTree.Hash(NumShards),
+        if (want > Hier2MaxCells) {
+          val (k1, k2, k3) = hierFactors3(want)
+          Seq(k1, k2, k3)
+        } else {
+          val (kSup, kSub) = shardHierSizing(nPerShard)
+          Seq(kSup, kSub)
+        })
+    }, col("cell"), "cells_shard_hier", "probes_shard_hier" -> 2)
 
   lazy val ShardedHierIndex: Staged.Family =
     Staged.Family("cells_shard_hier", "probes_shard_hier")()(
       stageShardedHierIndex)
 
   /** q169 — scatter-gather ANN over SHARDED HIERARCHICAL indexes: the
-    * capacity composition the 100 TB story multiplies out (q143's S
-    * independent shards × q120's per-shard tree descent), FORCED into
-    * one oracle row the way q152/q166 force the three-level quantizer.
-    * q143 certified sharding over flat per-shard quantizers and q141/
-    * q142 certified depth unsharded; this row pins that the two
-    * compose: each shard trains its own super→sub tree (no centroid
-    * crosses a shard), queries descend EVERY shard's tree at the
-    * volume-matched width, and the gather is [[searchCells]] unchanged
-    * — per-shard candidates union through the same cell equi-join
-    * because cell ids are shard-disjoint, and the global top-k window
-    * IS the gather merge. The search plan still does not know the
-    * layout OR the depth: the staged (cells, probes) pair is the
-    * interface, and the DuckDB oracle replays the probes ⋈ cells ⋈
-    * corpus chain end-to-end over the staged tables exactly as q143's.
-    *
-    * Scale shape: candidate volume ∝ width·shards·CellTarget
-    * (independent of n, q143's bound); probe selection per query is
-    * shards·(kSup + O(kSub·beam)) centroid scores against model-sized
-    * broadcast tables (never the corpus); each shard's tree refreshes
-    * independently — one bounded shard at a time, the property that
-    * makes a 10¹⁰-vector index operable.
+    * capacity composition (q143's S independent shards × q120's
+    * per-shard tree descent), forced into one oracle row the way
+    * q152/q166 force the three-level quantizer. Candidate volume
+    * ∝ width·shards·CellTarget, independent of n; probe selection per
+    * query is shards·(kSup + O(kSub·beam)) centroid scores against
+    * model-sized broadcast tables, never the corpus.
     */
-  def q169ShardedHierAnn(s: SparkSession, dir: String): DataFrame = {
-    val work = Dedup.stageRoot(dir)
-    // group-consistent default (q79's discipline)
-    val snap = ShardedHierIndex.resolve(s, dir, work)
-    val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(snap("cells_shard_hier")),
-        "vec_id")
-      .select(col("vec_id"), col("cell").as("cluster"), col("v"),
-        col("nrm"))
-    val probes = s.read.parquet(snap("probes_shard_hier"))
-      .withColumnRenamed("cell", "cluster")
-      .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
-        "query_id")
-      .select(col("query_id"), col("cluster"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    searchCells(probes, iv, topK = 5)
-  }
-
-  /** Trained-IVF ANN through the TWO-LEVEL staged index — q78 with the
-    * single-codebook clamp removed: [[trainHierCells]] stages (vec_id,
-    * cell) where cell ranges over k1·k2 ~ up to 4096 learned cells,
-    * and the search is byte-identical to q78's — queries (vec_id < 20)
-    * equi-join their own cell, top-5 by exact cosine. The physical
-    * plan does not know the quantizer became hierarchical: that is the
-    * design's claim, and the oracle (q78's replay against the staged
-    * hier table) certifies the search end-to-end. HierIvfSpec plants a
-    * macro×micro geometry and pins that level 1 separates the macro
-    * clusters and level 2 the micro clusters within each.
-    */
-  def q118AnnIvfHier(s: SparkSession, dir: String): DataFrame = {
-    val work = Dedup.stageRoot(dir)
-    HierIndex.need(s, dir, work)
-    val iv = scaledVectors(s, dir)
-      .join(Staged.read(s, work, "cells_hier"), "vec_id")
-      .select(col("vec_id"), col("cell").as("cluster"), col("v"),
-        col("nrm"))
-    val probes = iv.where(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("cluster"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    searchCells(probes, iv, topK = 5)
-  }
+  def q169ShardedHierAnn(s: SparkSession, dir: String): DataFrame =
+    treeSearch(s, dir, ShardedHierIndex, ownCell = false)
 
   /** Incremental PQ ingest — q81's nightly-batch shape applied to the
     * compressed index, completing train → encode → INGEST → search for
@@ -4939,9 +4148,9 @@ object Similarity {
     val work = Dedup.stageRoot(dir)
     val snap = IvfIndex.resolve(s, dir, work)
     val iv = scaledVectors(s, dir)
-      .join(s.read.parquet(snap("cells")), "vec_id")
+      .join(readParquet(s, snap("cells")), "vec_id")
       .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
-    val probes = s.read.parquet(snap("probes"))
+    val probes = readParquet(s, snap("probes"))
       .join(scaledVectors(s, dir).withColumnRenamed("vec_id", "query_id"),
         "query_id")
       .select(col("query_id"), col("cluster"),
@@ -5108,17 +4317,17 @@ object Similarity {
     // snapshot is exactly the tombstone semantics q144 certifies.
     val pq = PqIndex.resolve(s, dir, work)
     val hier = HierIndex.resolve(s, dir, work)
-    val cells = s.read.parquet(hier("cells_hier"))
+    val cells = readParquet(s, hier("cells_hier"))
       .join(broadcast(deletes), Seq("vec_id"), "left_anti")
       .join(iv.select(col("vec_id"), col("label")), "vec_id")
     val lut = adcLutFor(queries.select(col("vec_id"), col("v")),
-      s.read.parquet(pq("pq_codebook")))
-    val probes = s.read.parquet(hier("probes_hier"))
+      readParquet(s, pq("pq_codebook")))
+    val probes = readParquet(s, hier("probes_hier"))
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         col("label"))), "query_id")
     val cand = probes.join(cells, Seq("cell", "label"))
       .where(col("vec_id") =!= col("query_id"))
-      .join(s.read.parquet(pq("pq_codes")), Seq("vec_id"))
+      .join(readParquet(s, pq("pq_codes")), Seq("vec_id"))
     val res = rerankExact(s, dir,
       adcRank(cand, lut, topK = RerankShortlist), topK = 5)
     // every survivor's label equals its query's label by construction;

@@ -2123,8 +2123,8 @@ object Text {
   def q190UnigramMstep(s: SparkSession, dir: String): DataFrame = {
     val work = Dedup.stageRoot(dir)
     val snap = UnigramEstep.resolve(s, dir, work)
-    val m0 = s.read.parquet(snap("unigram_model0"))
-    val c = s.read.parquet(snap("unigram_segs"))
+    val m0 = readParquet(s, snap("unigram_model0"))
+    val c = readParquet(s, snap("unigram_segs"))
       .groupBy(col("token")).agg(sum(col("wc")).as("c"))
     val counted = m0.join(c, Seq("token"), "left")
       .select(col("token"),

@@ -956,124 +956,25 @@ object EventStreams {
     graft.ops.Similarity.clusterSampleElect(
       s.read.parquet(s"$stagedDir/sample_stream"))
 
-  /** Streaming ingest into the TWO-LEVEL index — [[ivfIngestStream]]'s
-    * twin for the hierarchical quantizer (the stageIvfIndex production
-    * default above the flat clamp): micro-batches super-assign
-    * through the same broadcast literal argmax and sub-assign against
-    * the broadcast model-sized level-2 centroid table
-    * ([[graft.ops.Similarity.assignHierCells]] — one BATCH-local
-    * partial-agg argmax; the corpus is never touched, no state
-    * store), appending (vec_id, cell) to the staged hier cell table
-    * with the same anti-join-by-content effectively-once discipline.
-    * HierIngestStreamSpec asserts streamed == the trained model's own
-    * batch assignment row-for-row, plus drained-re-run and
-    * fresh-checkpoint-redelivery idempotence.
-    */
-  def hierIngestStream(vectors: DataFrame, c1: Array[Array[Double]],
-      cents: DataFrame, k2: Int, stagedDir: String,
-      checkpoint: String): StreamingQuery =
-    appendOnce(vectors, checkpoint, s"$stagedDir/cells_hier_stream",
-        "vec_id") { (batch, _) =>
-      graft.ops.Similarity.assignHierCells(
-        assignable(batch), c1, cents, k2)
-    }
-
-  /** Streaming ingest into the THREE-level index — [[hierIngestStream]]
-    * one level deeper, completing the ingest matrix at the depth the
-    * production router auto-selects above 4096 cells: each micro-batch
-    * descends super → mid → leaf through
-    * [[graft.ops.Similarity.assignHier3Cells]] (the literal level-1
-    * argmax plus two broadcast model-sized table argmaxes — the same
-    * function [[graft.ops.Similarity.trainHier3]] assigns with, so
-    * streamed == batch is mechanism), appending (vec_id, cell) with
-    * the same anti-join-by-content effectively-once discipline as
-    * every sibling ingest. No state store; the corpus is never
-    * touched. Hier3IngestStreamSpec asserts streamed == the trained
-    * model's own batch assignment row-for-row plus both idempotence
-    * modes.
-    */
-  def hier3IngestStream(vectors: DataFrame, c1: Array[Array[Double]],
-      cents2: DataFrame, cents3: DataFrame, k2: Int, k3: Int,
-      stagedDir: String, checkpoint: String): StreamingQuery =
-    appendOnce(vectors, checkpoint, s"$stagedDir/cells_hier3_stream",
-        "vec_id") { (batch, _) =>
-      graft.ops.Similarity.assignHier3Cells(
-        assignable(batch), c1, cents2, cents3, k2, k3)
-    }
-
-  /** Streaming ingest into the SHARDED index — [[hierIngestStream]]'s
-    * twin for the scatter-gather shard layout (q143): micro-batches
-    * shard by the pmod key and sub-assign against the broadcast
-    * model-sized shard-keyed centroid table
-    * ([[graft.ops.Similarity.assignShardCells]] — one BATCH-local
-    * partial-agg argmax; the corpus is never touched, no state
-    * store), appending (vec_id, cell) to the staged shard cell table
-    * with the same anti-join-by-content effectively-once discipline.
-    * Because an incoming vector consults only its OWN shard's
-    * centroids, concurrent per-shard refreshes and this ingest never
-    * interfere — the operational point of sharding.
-    * ShardIngestStreamSpec asserts streamed == the trained model's
-    * own batch assignment row-for-row.
-    */
-  def shardIngestStream(vectors: DataFrame, cents: DataFrame,
-      shards: Int, kShard: Int, stagedDir: String,
-      checkpoint: String): StreamingQuery =
-    appendOnce(vectors, checkpoint, s"$stagedDir/cells_shard_stream",
-        "vec_id") { (batch, _) =>
-      graft.ops.Similarity.assignShardCells(
-        assignable(batch), cents, shards, kShard)
-    }
-
-  /** Streaming ingest into the SHARDED HIERARCHICAL index —
-    * [[shardIngestStream]] with q169's per-shard two-level trees, the
-    * ingest twin of the capacity composition: each micro-batch shards
-    * by the pmod key and descends its own shard's tree through
-    * [[graft.ops.Similarity.assignShardHierCells]] (two broadcast
-    * model-sized table argmaxes — the same [[graft.ops.Similarity
-    * .hierAssign]] at each level the trainer assigns with, so
-    * streamed == batch is mechanism), appending (vec_id, cell) with
-    * the same anti-join-by-content effectively-once discipline as
-    * every sibling ingest. No state store; the corpus is never
-    * touched; a vector consults only its OWN shard's centroids at
-    * BOTH levels, so concurrent per-shard refreshes and this ingest
-    * never interfere. ShardedHierIngestStreamSpec asserts streamed ==
-    * the trained model's own batch assignment row-for-row plus both
-    * idempotence modes.
-    */
-  def shardedHierIngestStream(vectors: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, shards: Int, kSup: Int, kSub: Int,
-      stagedDir: String, checkpoint: String): StreamingQuery =
-    appendOnce(vectors, checkpoint, s"$stagedDir/cells_shard_hier_stream",
-        "vec_id") { (batch, _) =>
-      graft.ops.Similarity.assignShardHierCells(
-        assignable(batch), cents1, cents2, shards, kSup, kSub)
-    }
-
-  /** Streaming ingest into the sharded THREE-level index —
-    * [[shardedHierIngestStream]] at the full depth the 10¹⁰-vector
-    * composition trains ([[graft.ops.Similarity.trainShardedHier3]]):
-    * each micro-batch shards by the pmod key and descends its own
-    * shard's three-level tree through
-    * [[graft.ops.Similarity.assignShardHier3Cells]] — three broadcast
-    * model-sized argmaxes, the same [[graft.ops.Similarity
-    * .hierAssign]] the trainer assigns with, so streamed == batch is
-    * mechanism at depth — appending (vec_id, cell) with the
-    * anti-join-by-content effectively-once discipline every sibling
-    * ingest uses. No state store; the corpus is never touched; a
-    * vector consults only its OWN shard's centroids at all three
-    * levels, so per-shard refreshes and this ingest never interfere.
-    * ShardedHierIngestStreamSpec's depth-3 case asserts streamed ==
+  /** Streaming ingest into a trained [[graft.ops.CellTree]] index — the
+    * two-level, three-level, sharded and sharded-hierarchical twins of
+    * [[ivfIngestStream]] in one: each micro-batch is assigned by the
+    * tree's own map stage ([[graft.ops.CellTree.assign]] — the root
+    * expression plus one broadcast model-sized argmax per learned level,
+    * the same the trainer assigns with, so streamed == batch is
+    * mechanism at every root and depth; the corpus is never touched, no
+    * state store) and (vec_id, cell) appends to `log` with the
+    * anti-join-by-content effectively-once discipline. A vector consults
+    * only its own parent's centroids at every level, so under a hash
+    * root per-shard refreshes and this ingest never interfere.
+    * Hier/Hier3/Shard/ShardedHier IngestStreamSpec assert streamed ==
     * the trained model's own batch assignment row-for-row plus
-    * fresh-checkpoint redelivery idempotence.
+    * drained-re-run and fresh-checkpoint-redelivery idempotence.
     */
-  def shardedHier3IngestStream(vectors: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, cents3: DataFrame, shards: Int,
-      k1: Int, k2: Int, k3: Int,
-      stagedDir: String, checkpoint: String): StreamingQuery =
-    appendOnce(vectors, checkpoint,
-        s"$stagedDir/cells_shard_hier3_stream", "vec_id") { (batch, _) =>
-      graft.ops.Similarity.assignShardHier3Cells(
-        assignable(batch), cents1, cents2, cents3, shards, k1, k2, k3)
+  def treeIngestStream(vectors: DataFrame, tree: graft.ops.CellTree,
+      log: String, checkpoint: String): StreamingQuery =
+    appendOnce(vectors, checkpoint, log, "vec_id") { (batch, _) =>
+      tree.assign(assignable(batch))
     }
 
   /** Streaming DELETE-feed ingest — the tombstone half of the index
@@ -1249,13 +1150,13 @@ object EventStreams {
     * row-for-row on the real embeddings.
     */
   def hierPqSearchStream(queries: DataFrame, dir: String, work: String,
-      c1: Array[Array[Double]], cents: DataFrame, k2: Int, width: Int,
+      tree: graft.ops.CellTree, width: Int,
       checkpoint: String): StreamingQuery =
     appendOnce(queries, checkpoint, s"$work/search_results_stream",
         "query_id") { (batch, _) =>
       val q = assignable(batch).localCheckpoint() // probes + search read it
       graft.ops.Similarity.hierPqSearchOn(batch.sparkSession, dir, work, q,
-        graft.ops.Similarity.hierProbes(q, c1, cents, k2, width))
+        tree.probes(q, width))
     }
 
   /** Streaming QUALITY-GATE scoring — q160's serving half as a stream
@@ -1417,13 +1318,13 @@ object EventStreams {
 
   /** Streaming SHARDED serving — [[hierPqSearchStream]]'s twin for
     * the scatter-gather layout (q143's query half): micro-batches of
-    * query vectors probe nprobe cells in EVERY shard from the
-    * broadcast model-sized centroid table
-    * ([[graft.ops.Similarity.shardProbes]] — no shuffle, the corpus
-    * is never touched by probe selection) and gather through the
-    * SAME staged-cells equi-join + top-k window the batch entry runs
-    * ([[graft.ops.Similarity.shardedSearchOn]] is one shared code
-    * path). Because serving consults only the staged cells and the
+    * query vectors probe `width` cells in EVERY shard by the trained
+    * tree's descent ([[graft.ops.CellTree.probes]] — broadcast
+    * model-sized tables, the corpus is never touched by probe
+    * selection) and gather through the SAME staged-cells equi-join +
+    * top-k window the batch entry runs
+    * ([[graft.ops.Similarity.shardedSearchOn]]). Because serving
+    * consults only the staged cells and the
     * broadcast centroids, it composes with the layout's operational
     * point: any single shard can retrain concurrently without moving
     * the other shards' assignments, and in-flight queries see a
@@ -1433,19 +1334,13 @@ object EventStreams {
     * batch q143 row-for-row on the real embeddings.
     */
   def shardedSearchStream(queries: DataFrame, dir: String, work: String,
-      cents: DataFrame, kShard: Int, nprobe: Int,
+      tree: graft.ops.CellTree, width: Int,
       checkpoint: String): StreamingQuery =
     appendOnce(queries, checkpoint, s"$work/shard_results_stream",
         "query_id") { (batch, _) =>
       val q = assignable(batch).localCheckpoint() // probes + gather read it
-      val probes = graft.ops.Similarity
-        .shardProbes(q, cents, kShard, nprobe)
-        .withColumnRenamed("cell", "cluster")
-        .join(q.withColumnRenamed("vec_id", "query_id"), "query_id")
-        .select(col("query_id"), col("cluster"),
-          col("v").as("qv"), col("nrm").as("qn"))
-      graft.ops.Similarity.shardedSearchOn(batch.sparkSession, dir, work,
-        probes)
+      graft.ops.Similarity.shardedSearchOn(batch.sparkSession, dir, work, q,
+        tree.probes(q, width))
     }
 
   case class UserRollup(user_id: Long, n_events: Long, total_value: Double,

@@ -16,7 +16,14 @@ import scala.jdk.CollectionConverters._
   *    one micro-batch skeleton;
   *  - `Staged.isFresh`, `Staged.versionOf` and `Staged.groupOf` are
   *    called only inside `Staged.scala`: whether a staged asset is
-  *    stale, and its lineage stamp, are decided by its `Staged.Family`.
+  *    stale, and its lineage stamp, are decided by its `Staged.Family`;
+  *  - a resolved snapshot is read through `Tables.readParquet`, never
+  *    `read.parquet(snap(…))`, which runs a schema-inference job on an
+  *    immutable `v=N` directory;
+  *  - the coarse-quantizer primitives (`trainSubCells`, `hierAssign`,
+  *    the shard key `pmod(col("vec_id"), lit(shards))`) live only in
+  *    `CellTree.scala`, so every index shape trains, assigns and probes
+  *    through the one cell tree.
   */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -64,6 +71,27 @@ class SourceLintSpec extends AnyFunSuite {
         .mkString(", "))
     assert(hits.count(_._3 == "foreachBatch") === 1,
       "foreachBatch must appear exactly once, inside drain")
+  }
+
+  test("resolved snapshots are read through the schema memo") {
+    val bypass = """read\.parquet\(\s*snap\(""".r
+    val hits = for {
+      (file, src) <- sources
+      m <- bypass.findAllMatchIn(src)
+    } yield s"$file:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, "read.parquet(snap(…)) bypasses " +
+      s"Tables.readParquet at: ${hits.mkString(", ")}")
+  }
+
+  test("cell-tree primitives appear only in CellTree") {
+    val primitive =
+      """\btrainSubCells\b|\bhierAssign\b|pmod\(\s*col\("vec_id"\)\s*,\s*lit\(shards\)\)""".r
+    val hits = for {
+      (file, src) <- sources if file != "graft/ops/CellTree.scala"
+      m <- primitive.findAllMatchIn(src)
+    } yield s"${m.matched} at $file:${lineOf(src, m.start)}"
+    assert(hits.isEmpty, "a coarse-quantizer primitive outside " +
+      s"CellTree: ${hits.mkString(", ")}")
   }
 
   test("staged freshness and stamps are read only inside Staged") {

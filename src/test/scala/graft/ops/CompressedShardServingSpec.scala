@@ -37,7 +37,7 @@ class CompressedShardServingSpec extends SparkSpec {
   }
 
   test("the gather is real: some served neighbor lives in a foreign shard") {
-    // shard(v) = v mod NumShards (assignShardCells' pmod key); a
+    // shard(v) = v mod NumShards (the hash root's pmod key); a
     // same-shard-only result would mean the scatter never left the
     // query's own partition — exactly the defect ShardedAnnSpec pins
     // for the exact route, re-pinned here over the compressed chain

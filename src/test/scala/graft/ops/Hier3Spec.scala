@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (24 vectors). Level 1 (k1=2) must separate the macros, level 2
   * (k2=2) the mids WITHIN each macro, level 3 (k3=2) the micros
   * WITHIN each mid — three scales a 4096-cell two-level index cannot
-  * keep adding at 100 TB; the third [[Similarity.trainSubCells]] pass
+  * keep adding at 100 TB; the third [[CellTree]] level pass
   * is the capacity lift. Also pins the q141 staged-search path and
   * the q142 beam-descent probe, plus the [[Similarity.hierFactors3]]
   * sizing contract above the two-level ceiling.
@@ -55,7 +55,8 @@ class Hier3Spec extends SparkSpec {
   }
 
   private lazy val cellOf: Map[Long, Long] =
-    Similarity.trainHier3(spark, dir, k1 = 2, k2 = 2, k3 = 2)._4
+    CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(2), Seq(2, 2)))._2
       .as[(Long, Long)].collect().toMap
 
   test("each level separates its scale: micro leaves, mid cells, macro supers") {

@@ -45,7 +45,8 @@ class HierIvfSpec extends SparkSpec {
   }
 
   private lazy val cellOf: Map[Long, Long] =
-    Similarity.trainHierCells(spark, dir, k1 = 4, k2 = 2)
+    CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(4), Seq(2)))._2
       .as[(Long, Long)].collect().toMap
 
   test("level 2 separates micro clusters; level 1 separates macros") {

@@ -46,7 +46,8 @@ class HierMultiprobeSpec extends SparkSpec {
   }
 
   private lazy val cellOf: Map[Long, Long] =
-    Similarity.trainHierCells(spark, dir, k1 = 4, k2 = 2)
+    CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(4), Seq(2)))._2
       .as[(Long, Long)].collect().toMap
 
   test("boundary pair straddles sibling sub-cells of one super") {
@@ -55,8 +56,23 @@ class HierMultiprobeSpec extends SparkSpec {
       s"must share the super: ${cellOf(5L)}, ${cellOf(35L)}")
   }
 
+  /** Train → descend → in-cell top-5 over the planted corpus. */
+  private def hierSearch(nprobe: Int) = {
+    val (tree, asg) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(4), Seq(2)))
+    val iv = Similarity.scaledVectors(spark, dir).join(asg, "vec_id")
+      .select($"vec_id", $"cell".as("cluster"), $"v", $"nrm")
+      .localCheckpoint() // probe + corpus sides both read it
+    val queries = iv.where($"vec_id" < 20).select($"vec_id", $"v", $"nrm")
+    val probes = tree.probes(queries, nprobe)
+      .withColumnRenamed("cell", "cluster")
+      .join(queries.withColumnRenamed("vec_id", "query_id"), "query_id")
+      .select($"query_id", $"cluster", $"v".as("qv"), $"nrm".as("qn"))
+    Similarity.searchCells(probes, iv, topK = 5)
+  }
+
   private def top(nprobe: Int): Seq[Long] =
-    Similarity.hierSearch(spark, dir, k1 = 4, k2 = 2, nprobe = nprobe)
+    hierSearch(nprobe)
       .where($"query_id" === 5L).orderBy($"rank")
       .select($"neighbor_id").as[Long].collect().toSeq
 
@@ -69,7 +85,7 @@ class HierMultiprobeSpec extends SparkSpec {
   }
 
   test("descent plan stays equi-joins — no cartesian blowup") {
-    val p = Similarity.hierSearch(spark, dir, k1 = 4, k2 = 2, nprobe = 2)
+    val p = hierSearch(nprobe = 2)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p.take(800))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(800))

@@ -49,7 +49,8 @@ class ShardedAnnSpec extends SparkSpec {
   }
 
   private lazy val dir = plant(extraShard0 = 0)
-  private lazy val trained = Similarity.trainShardedCells(spark, dir, Shards)
+  private lazy val trained = CellTree.train(spark, dir,
+    CellTree.Shape(CellTree.Hash(Shards), Seq(kS)))
   private val kS = 4 // adaptiveCellCount(ceil(64/4)=16) = 4
 
   test("cell id ranges are shard-disjoint: cell div kS == vec_id mod shards") {
@@ -60,13 +61,13 @@ class ShardedAnnSpec extends SparkSpec {
   }
 
   test("scatter-gather recovers cross-shard neighbors; own-shard probing misses them") {
-    val (cents, asg) = trained
+    val (tree, asg) = trained
     val iv = Similarity.scaledVectors(spark, dir).join(asg, "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"), col("nrm"))
       .localCheckpoint()
     val queries = iv.where(col("vec_id") === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val probeAll = Similarity.shardProbes(queries, cents, kS, nprobe = 2)
+    val probeAll = tree.probes(queries, width = 2)
       .withColumnRenamed("cell", "cluster")
       .join(queries.withColumnRenamed("vec_id", "query_id"), "query_id")
       .select(col("query_id"), col("cluster"),
@@ -91,7 +92,8 @@ class ShardedAnnSpec extends SparkSpec {
   test("refreshing one shard leaves every other shard's assignments byte-identical") {
     val dirB = plant(extraShard0 = 8)
     val asgA = trained._2
-    val asgB = Similarity.trainShardedCells(spark, dirB, Shards)._2
+    val asgB = CellTree.train(spark, dirB,
+      CellTree.Shape(CellTree.Hash(Shards), Seq(kS)))._2
     val foreign = (df: org.apache.spark.sql.DataFrame) =>
       df.where(pmod(col("vec_id"), lit(Shards)) =!= 0)
         .as[(Long, Long)].collect().toMap
@@ -103,5 +105,24 @@ class ShardedAnnSpec extends SparkSpec {
       .as[(Long, Int)].collect().toMap
     assert(extras.size === 8)
     assert(extras.values.forall(_ == 0))
+  }
+
+  test("an all-zero embedding stages without a cell") {
+    // the hash root covers nrm > 0 rows only, like the codebook root: a
+    // zero vector has no direction, and scoring it against a centroid
+    // would divide by its zero norm
+    val d = java.nio.file.Files.createTempDirectory("graft-shard0").toString
+    val base = for (c <- 0 to 3; j <- 0 to 15)
+      yield ((c * 16 + j).toLong, vec(c, j), 0)
+    (base :+ ((64L, Array.fill(64)(0.0f), 0)))
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val work = java.nio.file.Files.createTempDirectory("graft-shard0-work")
+      .toString
+    Similarity.ShardedIndex.need(spark, d, work)
+    val cells = Staged.read(spark, work, "cells_shard")
+      .select(col("vec_id")).as[Long].collect().toSet
+    assert(cells === (0L until 64L).toSet)
+    assert(Staged.read(spark, work, "probes_shard").count() > 0)
   }
 }

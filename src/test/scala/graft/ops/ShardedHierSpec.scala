@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   *     at either level.
   *
   * Round 13 extends every pin ONE LEVEL DEEPER over
-  * [[Similarity.trainShardedHier3]] (shard × three learned levels —
-  * the full depth the 10¹⁰ = shards × hier3 capacity claim composes):
+  * a [[CellTree]] with a hash root and three learned levels (the full
+  * depth the 10¹⁰ = shards × hier3 capacity claim composes):
   * shard-disjoint leaf ranges at depth 3, genuine branching at every
   * level (no fictional depth), the three-stage beam descent
-  * ([[Similarity.shardHier3Probes]]) probing every shard, and refresh
+  * ([[CellTree.probes]]) probing every shard, and refresh
   * independence of the full three-level path.
   */
 class ShardedHierSpec extends SparkSpec {
@@ -54,10 +54,11 @@ class ShardedHierSpec extends SparkSpec {
 
   private lazy val dir = plant(extraShard0 = 0)
   private lazy val trained =
-    Similarity.trainShardedHier(spark, dir, Shards, kSup, kSub)
+    CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(Shards), Seq(kSup, kSub)))
 
   test("leaf id ranges are shard-disjoint: cell div (kSup*kSub) == vec_id mod shards") {
-    val bad = trained._3
+    val bad = trained._2
       .where(expr(s"cell div ${kSup * kSub}").cast("int")
         =!= pmod(col("vec_id"), lit(Shards)))
       .count()
@@ -65,15 +66,14 @@ class ShardedHierSpec extends SparkSpec {
   }
 
   test("the descent probes every shard and the gather recovers cross-shard neighbors") {
-    val (cents1, cents2, asg) = trained
+    val (tree, asg) = trained
     val iv = Similarity.scaledVectors(spark, dir).join(asg, "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
       .localCheckpoint()
     val queries = iv.where(col("vec_id") === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val probes = Similarity.shardHierProbes(queries, cents1, cents2,
-      kSup, kSub, width = 2)
+    val probes = tree.probes(queries, width = 2)
     // scatter: all 4 shards probed, exactly `width` leaves each
     val byShard = probes
       .groupBy(expr(s"cell div ${kSup * kSub}").as("shard"))
@@ -95,26 +95,27 @@ class ShardedHierSpec extends SparkSpec {
   }
 
   test("refresh independence at depth: shard-0 growth leaves foreign shards' trees untouched") {
-    val before = trained._3
+    val before = trained._2
       .where(pmod(col("vec_id"), lit(Shards)) =!= 0)
       .as[(Long, Long)].collect().toMap
     val after =
-      Similarity.trainShardedHier(spark, plant(extraShard0 = 8),
-          Shards, kSup, kSub)._3
+      CellTree.train(spark, plant(extraShard0 = 8),
+          CellTree.Shape(CellTree.Hash(Shards), Seq(kSup, kSub)))._2
         .where(pmod(col("vec_id"), lit(Shards)) =!= 0)
         .as[(Long, Long)].collect().toMap
     assert(after === before,
       "a shard-0 refresh moved another shard's two-level assignment")
   }
 
-  // ---- one level deeper: sharded × THREE-level (trainShardedHier3) ----
+  // ---- one level deeper: sharded × THREE-level ----
 
   private val (h1, h2, h3) = (2, 2, 2)
   private lazy val trained3 =
-    Similarity.trainShardedHier3(spark, dir, Shards, h1, h2, h3)
+    CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(Shards), Seq(h1, h2, h3)))
 
   test("3-level per shard: leaf ranges are shard-disjoint at full depth") {
-    val bad = trained3._4
+    val bad = trained3._2
       .where(expr(s"cell div ${h1 * h2 * h3}").cast("int")
         =!= pmod(col("vec_id"), lit(Shards)))
       .count()
@@ -123,7 +124,7 @@ class ShardedHierSpec extends SparkSpec {
 
   test("3-level per shard: the tree genuinely branches at every level") {
     // decompose each leaf id into its (shard, sup, mid, leaf) path
-    val paths = trained3._4
+    val paths = trained3._2
       .select(
         expr(s"cell div ${h1 * h2 * h3}").as("shard"),
         expr(s"(cell div ${h2 * h3}) % $h1").as("sup"),
@@ -151,15 +152,14 @@ class ShardedHierSpec extends SparkSpec {
   }
 
   test("3-level descent probes every shard and the gather recovers cross-shard neighbors") {
-    val (c1, c2, c3, asg) = trained3
+    val (tree, asg) = trained3
     val iv = Similarity.scaledVectors(spark, dir).join(asg, "vec_id")
       .select(col("vec_id"), col("cell").as("cluster"), col("v"),
         col("nrm"))
       .localCheckpoint()
     val queries = iv.where(col("vec_id") === 0)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val probes = Similarity.shardHier3Probes(queries, c1, c2, c3,
-      h1, h2, h3, width = 2)
+    val probes = tree.probes(queries, width = 2)
     val byShard = probes
       .groupBy(expr(s"cell div ${h1 * h2 * h3}").as("shard"))
       .count().as[(Long, Long)].collect().toMap
@@ -178,12 +178,12 @@ class ShardedHierSpec extends SparkSpec {
   }
 
   test("refresh independence at FULL depth: shard-0 growth leaves foreign 3-level trees untouched") {
-    val before = trained3._4
+    val before = trained3._2
       .where(pmod(col("vec_id"), lit(Shards)) =!= 0)
       .as[(Long, Long)].collect().toMap
     val after =
-      Similarity.trainShardedHier3(spark, plant(extraShard0 = 8),
-          Shards, h1, h2, h3)._4
+      CellTree.train(spark, plant(extraShard0 = 8),
+          CellTree.Shape(CellTree.Hash(Shards), Seq(h1, h2, h3)))._2
         .where(pmod(col("vec_id"), lit(Shards)) =!= 0)
         .as[(Long, Long)].collect().toMap
     assert(after === before,

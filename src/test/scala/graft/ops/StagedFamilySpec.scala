@@ -80,4 +80,24 @@ class StagedFamilySpec extends SparkSpec {
     derived.need(spark, dir, work)
     assert(builds === 3)
   }
+
+  test("q120 reads one generation: a half-swapped hier index fails by name") {
+    val prevTmp = sys.props("java.io.tmpdir")
+    val tmp = Files.createTempDirectory("staged-q120").toString
+    try {
+      sys.props("java.io.tmpdir") = tmp // a redirected stage root
+      val work = Dedup.stageRoot(dir)
+      Similarity.HierIndex.need(spark, dir, work)
+      // a refresh crashes mid-swap: cells_hier republished with other
+      // content under a NEW generation, probes_hier still the old one
+      Staged.write(Staged.read(spark, work, "cells_hier")
+          .withColumn("cell", $"cell" + 1),
+        work, "cells_hier", group = Some(Staged.newGroupId(work)))
+      val e = intercept[IllegalStateException](
+        Similarity.q120HierMultiprobe(spark, dir).collect())
+      assert(e.getMessage.contains("group resolve timed out"))
+    } finally {
+      sys.props("java.io.tmpdir") = prevTmp
+    }
+  }
 }

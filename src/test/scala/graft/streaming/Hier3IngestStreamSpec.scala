@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.Similarity
+import graft.ops.{CellTree, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * (the depth the production router auto-selects above 4096 cells).
   * Train once, stage the 90 % split as the pre-existing index, stream
   * the new split in 3 micro-batches through
-  * [[EventStreams.hier3IngestStream]], assert row-for-row equality,
+  * [[EventStreams.treeIngestStream]], assert row-for-row equality,
   * then both idempotence modes (drained re-run; fresh-checkpoint
   * redelivery — the anti-join-by-content carries it, not the offset
   * log).
@@ -33,8 +33,8 @@ class Hier3IngestStreamSpec extends SparkSpec {
       .select(col("vec_id"), col("v"), col("nrm"))
       .localCheckpoint()
     val (k1, k2, k3) = Similarity.hier3Sizing(iv.count())
-    val (c1, cents2, cents3, asg) =
-      Similarity.trainHier3(spark, dir, k1, k2, k3)
+    val (tree, asg) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2, k3)))
     val full = asg.localCheckpoint() // the model's own full assignment
     full.join(iv.where(!isNew).select(col("vec_id")), "vec_id")
       .write.mode("overwrite").parquet(s"$staged/cells_hier3_stream")
@@ -44,9 +44,9 @@ class Hier3IngestStreamSpec extends SparkSpec {
     assert(newRows.size >= 3, s"need >=3 new vectors, got ${newRows.size}")
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
-      EventStreams.hier3IngestStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), c1, cents2, cents3, k2, k3,
-        staged, ckpt)
+      EventStreams.treeIngestStream(
+        src.toDF().toDF("vec_id", "v", "nrm"), tree,
+        s"$staged/cells_hier3_stream", ckpt)
         .awaitTermination() // AvailableNow: runs until drained
     newRows.grouped((newRows.size + 2) / 3).foreach { chunk =>
       src.addData(chunk: _*)
@@ -69,9 +69,9 @@ class Hier3IngestStreamSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("hier3-stream-ckpt2").toString
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(newRows: _*)
-    EventStreams.hier3IngestStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), c1, cents2, cents3, k2, k3,
-      staged, ckpt2)
+    EventStreams.treeIngestStream(
+      src2.toDF().toDF("vec_id", "v", "nrm"), tree,
+      s"$staged/cells_hier3_stream", ckpt2)
       .awaitTermination()
     assert(spark.read.parquet(s"$staged/cells_hier3_stream").count()
       === batch.size.toLong)

@@ -1,16 +1,16 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.Similarity
+import graft.ops.{CellTree, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming hier ingest == the trained model's own batch assignment,
   * on the real embeddings table: train the two-level quantizer once
-  * ([[Similarity.trainHier]] at [[Similarity.hierSizing]]), stage the
+  * ([[CellTree.train]] at [[Similarity.hierSizing]]), stage the
   * 90 % split's assignments as the pre-existing index, stream the new
   * split (vec_id % 10 = 9) in 3 micro-batches through
-  * [[EventStreams.hierIngestStream]], and assert the resulting staged
+  * [[EventStreams.treeIngestStream]], and assert the resulting staged
   * table equals the model's full batch assignment row-for-row. Both
   * paths run the SAME two-level argmax (literal super + broadcast-table
   * sub), so any divergence is streaming plumbing — batch boundaries,
@@ -36,7 +36,8 @@ class HierIngestStreamSpec extends SparkSpec {
       .select(col("vec_id"), col("v"), col("nrm"))
       .localCheckpoint()
     val (k1, k2) = Similarity.hierSizing(iv.count())
-    val (c1, cents, asg) = Similarity.trainHier(spark, dir, k1, k2)
+    val (tree, asg) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2)))
     val full = asg.localCheckpoint() // the model's own full assignment
     // pre-existing index: the corpus split's assignments, staged
     full.join(iv.where(!isNew).select(col("vec_id")), "vec_id")
@@ -47,8 +48,9 @@ class HierIngestStreamSpec extends SparkSpec {
     assert(newRows.size >= 3, s"need >=3 new vectors, got ${newRows.size}")
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
-      EventStreams.hierIngestStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), c1, cents, k2, staged, ckpt)
+      EventStreams.treeIngestStream(
+        src.toDF().toDF("vec_id", "v", "nrm"), tree,
+        s"$staged/cells_hier_stream", ckpt)
         .awaitTermination() // AvailableNow: runs until drained
     newRows.grouped((newRows.size + 2) / 3).foreach { chunk =>
       src.addData(chunk: _*)
@@ -71,8 +73,9 @@ class HierIngestStreamSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("hier-stream-ckpt2").toString
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(newRows: _*)
-    EventStreams.hierIngestStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), c1, cents, k2, staged, ckpt2)
+    EventStreams.treeIngestStream(
+      src2.toDF().toDF("vec_id", "v", "nrm"), tree,
+      s"$staged/cells_hier_stream", ckpt2)
       .awaitTermination()
     assert(spark.read.parquet(s"$staged/cells_hier_stream").count()
       === batch.size.toLong)

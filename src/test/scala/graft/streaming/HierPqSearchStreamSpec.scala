@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{CellTree, Dedup, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -44,7 +44,8 @@ class HierPqSearchStreamSpec extends SparkSpec {
     // raw table count, matching stageHierIndex's own sizing input
     val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
     val (k1, k2) = Similarity.hierSizing(n)
-    val (c1, cents, _) = Similarity.trainHier(spark, dir, k1, k2)
+    val (tree, _) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Codebook(k1), Seq(k2)))
     val width =
       Similarity.volumeMatchedWidth(k1.toLong * k2, n, nprobe = 2)
 
@@ -54,7 +55,7 @@ class HierPqSearchStreamSpec extends SparkSpec {
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
       EventStreams.hierPqSearchStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), dir, work, c1, cents, k2,
+        src.toDF().toDF("vec_id", "v", "nrm"), dir, work, tree,
         width, ckpt).awaitTermination()
     qRows.grouped((qRows.size + 2) / 3).foreach { chunk =>
       src.addData(chunk: _*)
@@ -78,7 +79,7 @@ class HierPqSearchStreamSpec extends SparkSpec {
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(qRows: _*)
     EventStreams.hierPqSearchStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), dir, work, c1, cents, k2,
+      src2.toDF().toDF("vec_id", "v", "nrm"), dir, work, tree,
       width, ckpt2).awaitTermination()
     assert(spark.read.parquet(s"$work/search_results_stream").count()
       === batch.size.toLong)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.{Dedup, Similarity, Staged}
+import graft.ops.{CellTree, Dedup, Similarity, Staged}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -34,10 +34,11 @@ class ServingRefreshRaceSpec extends SparkSpec {
     logPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(logPath, true)
 
-    val (cents, _) = Similarity.trainShardedCells(spark, dir)
     val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
     val kS = Similarity.adaptiveCellCount(
       (n + Similarity.NumShards - 1) / Similarity.NumShards)
+    val (tree, _) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(Similarity.NumShards), Seq(kS)))
 
     val q0 = Similarity.scaledVectors(spark, dir)
       .where(col("vec_id") === 0)
@@ -46,8 +47,8 @@ class ServingRefreshRaceSpec extends SparkSpec {
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
       EventStreams.shardedSearchStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), dir, work, cents, kS,
-        nprobe = 2, ckpt).awaitTermination()
+        src.toDF().toDF("vec_id", "v", "nrm"), dir, work, tree,
+        width = 2, ckpt).awaitTermination()
     def served(qid: Long): Seq[(Int, Long)] =
       spark.read.parquet(s"$work/shard_results_stream")
         .where(col("query_id") === qid)

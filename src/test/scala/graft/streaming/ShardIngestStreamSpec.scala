@@ -1,19 +1,19 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.Similarity
+import graft.ops.{CellTree, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming shard ingest == the trained model's own batch assignment,
   * on the real embeddings table: train the sharded index once
-  * ([[Similarity.trainShardedCells]]), stage the 90 % split's
+  * ([[CellTree.train]] with a hash root), stage the 90 % split's
   * assignments as the pre-existing index, stream the new split
   * (vec_id % 10 = 9) in 3 micro-batches through
-  * [[EventStreams.shardIngestStream]], and assert the resulting
+  * [[EventStreams.treeIngestStream]], and assert the resulting
   * staged table equals the model's full batch assignment row-for-row.
   * Both paths run the SAME pmod-shard + broadcast-table argmax
-  * ([[Similarity.assignShardCells]]), so any divergence is streaming
+  * ([[CellTree.assign]]), so any divergence is streaming
   * plumbing. Also asserts the drained-re-run and
   * fresh-checkpoint-redelivery idempotence modes.
   */
@@ -36,7 +36,8 @@ class ShardIngestStreamSpec extends SparkSpec {
     val shards = Similarity.NumShards
     val n = Similarity.scaledVectors(spark, dir).count()
     val kS = Similarity.adaptiveCellCount((n + shards - 1) / shards)
-    val (cents, asg) = Similarity.trainShardedCells(spark, dir, shards)
+    val (tree, asg) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(shards), Seq(kS)))
     val full = asg.localCheckpoint() // the model's own full assignment
     full.join(iv.where(!isNew).select(col("vec_id")), "vec_id")
       .write.mode("overwrite").parquet(s"$staged/cells_shard_stream")
@@ -46,9 +47,9 @@ class ShardIngestStreamSpec extends SparkSpec {
     assert(newRows.size >= 3, s"need >=3 new vectors, got ${newRows.size}")
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
-      EventStreams.shardIngestStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), cents, shards, kS,
-        staged, ckpt)
+      EventStreams.treeIngestStream(
+        src.toDF().toDF("vec_id", "v", "nrm"), tree,
+        s"$staged/cells_shard_stream", ckpt)
         .awaitTermination() // AvailableNow: runs until drained
     newRows.grouped((newRows.size + 2) / 3).foreach { chunk =>
       src.addData(chunk: _*)
@@ -71,9 +72,9 @@ class ShardIngestStreamSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("shard-stream-ckpt2").toString
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(newRows: _*)
-    EventStreams.shardIngestStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), cents, shards, kS,
-      staged, ckpt2)
+    EventStreams.treeIngestStream(
+      src2.toDF().toDF("vec_id", "v", "nrm"), tree,
+      s"$staged/cells_shard_stream", ckpt2)
       .awaitTermination()
     assert(spark.read.parquet(s"$staged/cells_shard_stream").count()
       === batch.size.toLong)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.Similarity
+import graft.ops.{CellTree, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * of q169's capacity composition: per-shard two-level trees at the
   * forced [[Similarity.shardHierSizing]] geometry. Train once, stage
   * the 90 % split as the pre-existing index, stream the new split in
-  * 3 micro-batches through [[EventStreams.shardedHierIngestStream]],
+  * 3 micro-batches through [[EventStreams.treeIngestStream]],
   * assert row-for-row equality, then both idempotence modes (drained
   * re-run; fresh-checkpoint redelivery — the anti-join-by-content
   * carries it, not the offset log).
@@ -34,8 +34,8 @@ class ShardedHierIngestStreamSpec extends SparkSpec {
     val shards = Similarity.NumShards
     val (kSup, kSub) = Similarity.shardHierSizing(
       (iv.count() + shards - 1) / shards)
-    val (cents1, cents2, asg) =
-      Similarity.trainShardedHier(spark, dir, shards, kSup, kSub)
+    val (tree, asg) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(shards), Seq(kSup, kSub)))
     val full = asg.localCheckpoint() // the model's own full assignment
     full.join(iv.where(!isNew).select(col("vec_id")), "vec_id")
       .write.mode("overwrite").parquet(s"$staged/cells_shard_hier_stream")
@@ -45,9 +45,9 @@ class ShardedHierIngestStreamSpec extends SparkSpec {
     assert(newRows.size >= 3, s"need >=3 new vectors, got ${newRows.size}")
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
-      EventStreams.shardedHierIngestStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), cents1, cents2,
-        shards, kSup, kSub, staged, ckpt)
+      EventStreams.treeIngestStream(
+        src.toDF().toDF("vec_id", "v", "nrm"), tree,
+        s"$staged/cells_shard_hier_stream", ckpt)
         .awaitTermination() // AvailableNow: runs until drained
     newRows.grouped((newRows.size + 2) / 3).foreach { chunk =>
       src.addData(chunk: _*)
@@ -70,9 +70,9 @@ class ShardedHierIngestStreamSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("shardh-stream-ckpt2").toString
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(newRows: _*)
-    EventStreams.shardedHierIngestStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), cents1, cents2,
-      shards, kSup, kSub, staged, ckpt2)
+    EventStreams.treeIngestStream(
+      src2.toDF().toDF("vec_id", "v", "nrm"), tree,
+      s"$staged/cells_shard_hier_stream", ckpt2)
       .awaitTermination()
     assert(spark.read.parquet(s"$staged/cells_shard_hier_stream").count()
       === batch.size.toLong)
@@ -93,8 +93,8 @@ class ShardedHierIngestStreamSpec extends SparkSpec {
       .localCheckpoint()
     val shards = Similarity.NumShards
     val (k1, k2, k3) = (2, 2, 2) // forced full depth on the small table
-    val (c1, c2, c3, asg) =
-      Similarity.trainShardedHier3(spark, dir, shards, k1, k2, k3)
+    val (tree, asg) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(shards), Seq(k1, k2, k3)))
     val full = asg.localCheckpoint()
     full.join(iv.where(!isNew).select(col("vec_id")), "vec_id")
       .write.mode("overwrite").parquet(s"$staged/cells_shard_hier3_stream")
@@ -105,9 +105,9 @@ class ShardedHierIngestStreamSpec extends SparkSpec {
     val src = MemoryStream[(Long, Seq[Long], Double)]
     newRows.grouped((newRows.size + 1) / 2).foreach { chunk =>
       src.addData(chunk: _*)
-      EventStreams.shardedHier3IngestStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), c1, c2, c3,
-        shards, k1, k2, k3, staged, ckpt)
+      EventStreams.treeIngestStream(
+        src.toDF().toDF("vec_id", "v", "nrm"), tree,
+        s"$staged/cells_shard_hier3_stream", ckpt)
         .awaitTermination()
     }
 
@@ -122,9 +122,9 @@ class ShardedHierIngestStreamSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("shardh3-stream-ckpt2").toString
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(newRows: _*)
-    EventStreams.shardedHier3IngestStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), c1, c2, c3,
-      shards, k1, k2, k3, staged, ckpt2)
+    EventStreams.treeIngestStream(
+      src2.toDF().toDF("vec_id", "v", "nrm"), tree,
+      s"$staged/cells_shard_hier3_stream", ckpt2)
       .awaitTermination()
     assert(spark.read.parquet(s"$staged/cells_shard_hier3_stream").count()
       === batch.size.toLong)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{CellTree, Dedup, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * run the batch scatter-gather entry once (it stages cells_shard /
   * probes_shard), then stream the SAME 20 query vectors in 3
   * micro-batches through [[EventStreams.shardedSearchStream]] with
-  * the same (deterministically retrained) centroid table and assert
+  * the same (deterministically retrained) tree and assert
   * the accumulated result log equals the batch result row-for-row.
-  * Both paths compute probes via Similarity.shardProbes and gather
-  * via Similarity.shardedSearchOn over the same staged cells, so any
+  * Both paths compute probes by the same tree descent and gather
+  * through the same cell equi-join over the same staged cells, so any
   * divergence is streaming plumbing. Also pins the effectively-once
   * guard: drained re-run and fresh-checkpoint redelivery both append
   * nothing.
@@ -36,10 +36,11 @@ class ShardedSearchStreamSpec extends SparkSpec {
       .delete(fs, true)
 
     // the same model the staging trained (training is deterministic)
-    val (cents, _) = Similarity.trainShardedCells(spark, dir)
     val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
     val kS = Similarity.adaptiveCellCount(
       (n + Similarity.NumShards - 1) / Similarity.NumShards)
+    val (tree, _) = CellTree.train(spark, dir,
+      CellTree.Shape(CellTree.Hash(Similarity.NumShards), Seq(kS)))
 
     val qRows = Similarity.scaledVectors(spark, dir)
       .where(col("nrm") > 0 && col("vec_id") < 20)
@@ -49,8 +50,8 @@ class ShardedSearchStreamSpec extends SparkSpec {
     val src = MemoryStream[(Long, Seq[Long], Double)]
     def drain(): Unit =
       EventStreams.shardedSearchStream(
-        src.toDF().toDF("vec_id", "v", "nrm"), dir, work, cents, kS,
-        nprobe = 2, ckpt).awaitTermination()
+        src.toDF().toDF("vec_id", "v", "nrm"), dir, work, tree,
+        width = 2, ckpt).awaitTermination()
     qRows.grouped((qRows.size + 2) / 3).foreach { chunk =>
       src.addData(chunk: _*)
       drain()
@@ -72,8 +73,8 @@ class ShardedSearchStreamSpec extends SparkSpec {
     val src2 = MemoryStream[(Long, Seq[Long], Double)]
     src2.addData(qRows: _*)
     EventStreams.shardedSearchStream(
-      src2.toDF().toDF("vec_id", "v", "nrm"), dir, work, cents, kS,
-      nprobe = 2, ckpt2).awaitTermination()
+      src2.toDF().toDF("vec_id", "v", "nrm"), dir, work, tree,
+      width = 2, ckpt2).awaitTermination()
     assert(spark.read.parquet(s"$work/shard_results_stream").count()
       === batch.size.toLong)
   }
